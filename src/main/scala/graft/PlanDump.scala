@@ -1,15 +1,21 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Builder tool: dump `explain("formatted")` of the headline queries to
-  * PLANS.md — the physical-plan evidence behind the scale claims
-  * (broadcasts where a side is bounded, shuffle-hash postings joins,
-  * partition pruning, pushed filters, whole-stage codegen spans).
-  * Regenerate after plan-shape changes:
-  * `sbt "runMain graft.PlanDump /root/testdata/sf0.01"`.
+/** Plan dump tool: `explain("formatted")` physical plans.
+  *
+  *  - `PlanDump [sfDir]` writes the headline queries to PLANS.md — the
+  *    physical-plan evidence behind the scale claims (broadcasts where
+  *    a side is bounded, shuffle-hash postings joins, partition
+  *    pruning, pushed filters, whole-stage codegen spans). Regenerate
+  *    after plan-shape changes:
+  *    `sbt "runMain graft.PlanDump <sf0.01 dir>"`.
+  *  - `PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]` writes one
+  *    `<outDir>/<q>_<suffix>.txt` per named query (default: every
+  *    query) and never touches PLANS.md — the before/after plan
+  *    evidence of an optimization (plans/r15/<q>_before.txt).
   */
 object PlanDump {
 
@@ -307,17 +313,24 @@ object PlanDump {
       "construction); the batch twin's manifest law is asserted " +
       "equal in the spec."))
 
+  private def explain(spark: SparkSession, sfDir: String,
+                      name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+
   def main(args: Array[String]): Unit = {
+    require(args.length <= 1 || args.length >= 3,
+      "usage: PlanDump [sfDir] | PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-plan-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length >= 3) snapshots(spark, sfDir, Paths.get(args(1)),
+      args(2), args.lift(3).map(_.split(",").map(_.trim).toSeq))
+    else plansMd(spark, sfDir)
+    spark.stop()
+  }
+
+  private def plansMd(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append("Generated by `graft.PlanDump` at sf0.01 (plans are\n")
@@ -325,13 +338,23 @@ object PlanDump {
     sb.append("runtime). Each section: why this plan survives a 1000-\n")
     sb.append("executor scale-up, then `explain(\"formatted\")`.\n")
     headline.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n$why\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n$why\n\n```\n${explain(spark, sfDir, name)}```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md: ${headline.size} plans")
-    spark.stop()
+  }
+
+  private def snapshots(spark: SparkSession, sfDir: String, outDir: Path,
+                        suffix: String, only: Option[Seq[String]]): Unit = {
+    Files.createDirectories(outDir)
+    only.getOrElse(SparkEntry.queries.keys.toSeq.sorted).foreach { name =>
+      try {
+        Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
+          explain(spark, sfDir, name))
+        println(s"[plandump] $name ok")
+      } catch { case scala.util.control.NonFatal(e) =>
+        println(s"[plandump] $name FAILED: ${e.getMessage}")
+      }
+    }
   }
 }

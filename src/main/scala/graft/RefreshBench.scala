@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusDiff, Dedup, Shard}
@@ -39,15 +39,7 @@ object RefreshBench {
     val workDir = args(1)
     val deltaPct = if (args.length > 2) args(2).toDouble else 0.01
     val numShards = if (args.length > 3) args(3).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-refresh-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val curr = spark.read.parquet(s"$docsDir/documents.parquet")

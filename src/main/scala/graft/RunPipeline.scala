@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
-
 import graft.runner.PipelineRunner
 import graft.runner.plugins.DefaultRegistry
 
@@ -59,21 +57,7 @@ object RunPipeline {
       case (k, v) if k.startsWith("var.") => k.stripPrefix("var.") -> v
     }.toMap
 
-    lazy val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-pipeline")
-      // partitions track the data (BASELINE.md rule): default to the
-      // core count for test-scale runs, SPARK_GRAFT_SHUFFLE for scaled
-      // corpora (the ScaleBench family configs name the measured-in
-      // values, e.g. 256 at sf10)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = GraftSession.builder("graft-pipeline").getOrCreate()
 
     val runner = new PipelineRunner(
       DefaultRegistry(), env, () => spark,

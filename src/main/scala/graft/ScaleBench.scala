@@ -286,7 +286,7 @@ object ScaleBench {
     println(json)
   }
 
-  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  private def cpus: String = GraftSession.cpus.toString
 
   /** Rebuild a scaled corpus if its directory is missing any table —
     * /tmp does not survive restarts; ScaleData takes ~40 s (sf1). */
@@ -353,18 +353,7 @@ object ScaleBench {
     * (the linearity probes) and write one JSON object of counts. */
   private def countMode(args: Array[String]): Unit = {
     val Array(_, sfDir, qcsv) = args.take(3)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same knob as the wall children (Bench reads it too): the AQE
-      // setting must apply symmetrically or count probes and wall runs
-      // measure different plans
-      .config("spark.sql.adaptive.enabled", BenchEnv.aqeEnabled.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scale-count").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counts = qcsv.split(",").toSeq.map { q =>
       q -> SparkEntry.queries(q)(spark, sfDir).count()

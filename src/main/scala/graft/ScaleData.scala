@@ -78,14 +78,7 @@ object ScaleData {
         args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq("documents", "lineitem", "events", "embeddings")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scale-data").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ONE stride for the whole run: cross-table FKs (l_orderkey ↔

@@ -65,7 +65,7 @@ object Bpe {
     * lists use the [[encodeCounts]] rank-pointer encoder. */
   val maxChainMerges = 32
 
-  private val mergesSchema = StructType(Seq(
+  private[operators] val mergesSchema = StructType(Seq(
     StructField("merge_rank", IntegerType, nullable = false),
     StructField("lhs", StringType, nullable = false),
     StructField("rhs", StringType, nullable = false),
@@ -74,7 +74,7 @@ object Bpe {
 
   /** (word → freq) histogram with the delimiter-encoded character
     * segmentation — the vocabulary-sized learning substrate. */
-  private def initialSegments(docs: DataFrame, text: Column): DataFrame =
+  private[operators] def initialSegments(docs: DataFrame, text: Column): DataFrame =
     docs
       .select(explode(TextStats.tokens(text)).as("w"))
       .filter(col("w") =!= "")
@@ -87,7 +87,7 @@ object Bpe {
 
   /** Weighted adjacent-pair counts of the current segmentation: one
     * explode + one hash aggregate (map-side partials). */
-  private def pairCounts(seg: DataFrame): DataFrame = {
+  private[operators] def pairCounts(seg: DataFrame): DataFrame = {
     val arr = split(trim(col("seg")), "  ")
     seg
       .withColumn("__arr", arr)
@@ -102,7 +102,7 @@ object Bpe {
 
   /** Chain the pass's accepted merges (rank order; symbol-disjoint, so
     * order is immaterial) onto the segmentation. */
-  private def applyMerges(seg: DataFrame,
+  private[operators] def applyMerges(seg: DataFrame,
                           batch: Seq[(String, String)]): DataFrame = {
     var d = seg
     batch.foreach { case (a, b) =>
@@ -208,36 +208,6 @@ object Bpe {
     (spark.createDataFrame(
       spark.sparkContext.parallelize(merges.result(), 1), mergesSchema),
       passes)
-  }
-
-  /** The original one-merge-per-Spark-job learner, retained as the
-    * equivalence reference for BpeSpec (the batched form above must
-    * match it bit-for-bit). Do not use at scale. */
-  private[graft] def learnMergesSequential(docs: DataFrame, text: Column,
-                                           rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    val spark = docs.sparkSession
-    var seg = initialSegments(docs, text)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val merges = Seq.newBuilder[Row]
-    (1 to rounds).foreach { r =>
-      val top = pairCounts(seg)
-        .orderBy(col("n").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val (a, b, n) = (top.head.getString(0), top.head.getString(1),
-          top.head.getLong(2))
-        merges += Row(r, a, b, a + b, n)
-        val next = applyMerges(seg, Seq((a, b)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        seg.unpersist()
-        seg = next
-      }
-    }
-    seg.unpersist()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(merges.result(), 1), mergesSchema)
   }
 
   /** Apply an ordered merge list (the tokenizer's "encode" side):

@@ -69,55 +69,10 @@ object StreamingQueries extends QueryGroup {
     * partition count up like any shuffle. */
   private val subSessions =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  // experiment knob (r14): SPARK_GRAFT_STREAM_SESSION=per gives every
-  // drain-group launch thread its own sub-session (isolated SQLConf +
-  // SessionState) instead of one shared one — probes whether the
-  // group drain's concurrency is limited by shared-session contention
   private def streamSession(spark: SparkSession): SparkSession =
-    if (sys.env.get("SPARK_GRAFT_STREAM_SESSION").contains("per"))
-      perThreadSession(spark)
-    else sharedSession(spark)
-  private val perThreadSessions = new ThreadLocal[SparkSession]()
-  private def perThreadSession(spark: SparkSession): SparkSession = {
-    val cur = perThreadSessions.get()
-    if (cur != null) cur
-    else {
-      val ss = configured(spark.newSession())
-      perThreadSessions.set(ss)
-      ss
-    }
-  }
-  private def configured(ss: SparkSession): SparkSession = {
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
-    sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").foreach { v =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        if (v == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else v)
-    }
-    ss
-  }
-  private def sharedSession(spark: SparkSession): SparkSession =
     subSessions.computeIfAbsent(spark, s => {
       val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
-      // SPARK_GRAFT_STREAM_STATESTORE (experiment knob, r12 ask #3):
-      // "rocksdb" swaps the per-partition state store for the RocksDB
-      // provider; anything else is passed through as a provider class
-      // name. Measured on the 18-drain battery at sf0.1, alternating
-      // runs (see PLANS.md r13 entry): HDFS 34.7/44.6 s vs RocksDB
-      // 43.8/39.4 s — indistinguishable inside the window band at
-      // KB-scale state, so the default stays HDFS; the knob remains
-      // for genuinely large state (the 100 TB shape, where the HDFS
-      // provider's full-snapshot uploads lose to RocksDB changelogs).
-      sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").foreach { v =>
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          if (v == "rocksdb")
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-          else v)
-      }
+      ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss
     })
 
@@ -627,39 +582,25 @@ object StreamingQueries extends QueryGroup {
         java.util.concurrent.ConcurrentHashMap.newKeySet[StreamingQuery]()
       try {
         import scala.jdk.CollectionConverters._
-        val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-        val t0 = System.nanoTime()
-        def el = f"${(System.nanoTime() - t0) / 1e9}%.2f"
         // phase 1: every member's prep (static batch work + plan
         // building), with the box to itself
         val prepFuts = pool.invokeAll(ms.map(m =>
-          new java.util.concurrent.Callable[(String, () => StreamingQuery)] {
-            def call(): (String, () => StreamingQuery) = {
-              val l0 = System.nanoTime()
-              val th = m.launch(spark, dir, base)
-              if (dbg) System.err.println(f"[drain] ${m.name} prepped " +
-                f"in ${(System.nanoTime() - l0) / 1e9}%.2f s (t=$el)")
-              (m.name, th)
-            }
+          new java.util.concurrent.Callable[() => StreamingQuery] {
+            def call(): () => StreamingQuery = m.launch(spark, dir, base)
           }).asJava)
         // surface the FIRST prep failure (get() rethrows)
         val thunks = prepFuts.asScala.map(_.get()).toSeq
         // phase 2: start all drains together, then await them all
-        val startFuts = pool.invokeAll(thunks.map { case (n, th) =>
-          new java.util.concurrent.Callable[(String, StreamingQuery)] {
-            def call(): (String, StreamingQuery) = {
+        val startFuts = pool.invokeAll(thunks.map { th =>
+          new java.util.concurrent.Callable[StreamingQuery] {
+            def call(): StreamingQuery = {
               val q = th()
               started.add(q)
-              if (dbg) System.err.println(s"[drain] $n started (t=$el)")
-              (n, q)
+              q
             }
           }
         }.asJava)
-        val queries = startFuts.asScala.map(_.get()).toSeq
-        queries.foreach { case (n, q) =>
-          q.awaitTermination()
-          if (dbg) System.err.println(s"[drain] $n terminated (t=$el)")
-        }
+        startFuts.asScala.map(_.get()).foreach(_.awaitTermination())
       } catch {
         case e: Throwable =>
           started.forEach(q => try q.stop() catch { case _: Exception => () })

@@ -88,7 +88,7 @@ class BpeSpec extends SparkSpecBase {
       "hugs hug pug bun").toDF("text")
     val batched = Bpe.learnMerges(docs, col("text"), rounds = 6)
       .collect().map(_.toSeq).toSeq
-    val oneAtATime = Bpe.learnMergesSequential(docs, col("text"), rounds = 6)
+    val oneAtATime = BpeSequential.learnMerges(docs, col("text"), rounds = 6)
       .collect().map(_.toSeq).toSeq
     assert(batched == oneAtATime, s"batched $batched\nseq $oneAtATime")
   }
@@ -106,7 +106,7 @@ class BpeSpec extends SparkSpecBase {
     val (merged, passes) =
       Bpe.learnMergesCounted(docs, col("text"), rounds = 8)
     val batched = merged.collect().map(_.toSeq).toSeq
-    val oneAtATime = Bpe.learnMergesSequential(docs, col("text"), rounds = 8)
+    val oneAtATime = BpeSequential.learnMerges(docs, col("text"), rounds = 8)
       .collect().map(_.toSeq).toSeq
     assert(batched == oneAtATime, s"batched $batched\nseq $oneAtATime")
     assert(batched.length == 8)
