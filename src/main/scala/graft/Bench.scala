@@ -24,9 +24,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_SEQ_ONLY=1 (scale-proof windows only — the driver
-    // never sets it): skips the two concurrent passes; read here
-    // because the periodic-GC choice below depends on the mode.
+    // SPARK_GRAFT_SEQ_ONLY=1 (the solo-timing recipe above): skips the
+    // two concurrent passes; read here because the periodic-GC choice
+    // below depends on the mode.
     val seqOnly = sys.env.get("SPARK_GRAFT_SEQ_ONLY").exists(_ == "1")
     // Periodic-GC cadence (see the cleaner comment below). The FULL
     // battery schedules its own explicit GC+settle at every pass
@@ -36,10 +36,11 @@ object Bench {
     // keeps it from firing MID-pass, where ContextCleaner's bulk
     // deletes land on whichever query is in flight (the measured
     // r12/r15 driver-window signature: +8–12 s absorbed by one
-    // arbitrary mid-battery query). Scale batteries (SEQ_ONLY) keep the
-    // 120 s cadence: their single pass runs minutes-to-hours and the
-    // accumulated dead shuffle files are gigabytes (the measured sf10
-    // ENOSPC mode) — there the periodic sweep IS the protection.
+    // arbitrary mid-battery query). Single-pass batteries (SEQ_ONLY)
+    // keep the 120 s cadence: their single pass runs minutes-to-hours
+    // and the accumulated dead shuffle files are gigabytes (the
+    // measured sf10 ENOSPC mode) — there the periodic sweep IS the
+    // protection.
     val spark = GraftSession.builder("graft-bench")
       // FAIR + one pool per query: multi-stage queries (e.g. iterative
       // IVF training) would otherwise starve behind big single-stage
@@ -78,35 +79,26 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
 
-    // SPARK_GRAFT_SKIP_WARMUP=1 (sf100 scale children only — the
-    // driver never sets it): measure COLD, no warmup layer. The r11
-    // sf100 wall casualties were the warmup's shared-cache persists
-    // STACKED on the measured query's own churn (the completing
-    // count-probe path differed only by the warmup) — at the casualty
-    // decade the honest wall is the cold one that can actually finish.
-    val skipWarm = sys.env.get("SPARK_GRAFT_SKIP_WARMUP").exists(_ == "1")
     // Warmup outcomes are RECORDED, never silently swallowed (judge r12
     // ask #1: the driver's r12 window put +20 s on the two
     // alphabetically-first sequential queries and the swallowed
     // `catch { case _ => () }` left no trace of whether the re-warm
     // that should have absorbed it actually ran). A failed warmup
     // still must not kill the battery — but the artifact now says so.
-    //   (ok, seconds, error-or-empty); ok=true+0 s when skipped.
-    def timedWarmup(): (Boolean, Double, String) =
-      if (skipWarm) (true, 0.0, "skipped")
-      else {
-        val t0 = System.nanoTime()
-        try { CoreWarmup.run(spark, sfDir, only)
-          (true, (System.nanoTime() - t0) / 1e9, "") }
-        catch { case scala.util.control.NonFatal(e) =>
-          // Fatal errors (OutOfMemoryError, …) are NOT swallowed: a
-          // battery measured on a poisoned JVM would be emitted as a
-          // normal-looking window. Let them kill the run.
-          System.err.println(s"[bench] warmup FAILED: ${e.getMessage}")
-          (false, (System.nanoTime() - t0) / 1e9,
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-        }
+    //   (ok, seconds, error-or-empty).
+    def timedWarmup(): (Boolean, Double, String) = {
+      val t0 = System.nanoTime()
+      try { CoreWarmup.run(spark, sfDir, only)
+        (true, (System.nanoTime() - t0) / 1e9, "") }
+      catch { case scala.util.control.NonFatal(e) =>
+        // Fatal errors (OutOfMemoryError, …) are NOT swallowed: a
+        // battery measured on a poisoned JVM would be emitted as a
+        // normal-looking window. Let them kill the run.
+        System.err.println(s"[bench] warmup FAILED: ${e.getMessage}")
+        (false, (System.nanoTime() - t0) / 1e9,
+          Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
       }
+    }
     // warmup: flagship query end-to-end (JIT, codegen, parquet footers)
     val warmInit = timedWarmup()
 
@@ -137,8 +129,8 @@ object Bench {
     }
     // best-of-2 passes: the box is shared, and a single pass can absorb
     // co-tenant noise; min-wall is the engine's actual capability.
-    // (seqOnly — scale-proof single-pass mode — is read at the top of
-    // main, where the periodic-GC cadence choice needs it.)
+    // (seqOnly — the solo-timing single-pass mode — is read at the top
+    // of main, where the periodic-GC cadence choice needs it.)
     def pass(): (Double, Map[String, Double]) = {
       val wall0 = System.nanoTime()
       val results = pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
@@ -259,8 +251,8 @@ object Bench {
           val st = con.createStatement()
           graft.Tables.names.foreach { t =>
             val p = new java.io.File(s"$sfDir/$t.parquet")
-            // Spark-written tables (the ScaleData corpora) are
-            // DIRECTORIES of part files — DuckDB needs the glob form
+            // Spark-written tables are DIRECTORIES of part files —
+            // DuckDB needs the glob form
             val src =
               if (p.isDirectory) s"${p.getAbsolutePath}/*.parquet"
               else p.getAbsolutePath
@@ -349,26 +341,15 @@ object Bench {
     // clean window from one where the warmup died or the quiesce
     // absorbed seconds of deferred cleanup.
     // Spark exception messages routinely carry newlines/control chars;
-    // a raw one here would corrupt the single-line JSON artifact
-    // exactly on the warmup-failure path this exists to record.
-    def esc(s: String): String =
-      s.flatMap {
-        case '\\' => "\\\\"
-        case '"'  => "\\\""
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < 0x20 => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
+    // [[MinJson.str]] escapes them so the single-line JSON artifact
+    // survives exactly the warmup-failure path this exists to record.
     val warmupOk = warmInit._1 && warmReseq._1
     val warmJson =
       s""","warmup_ok":$warmupOk,"warmup_initial_ok":${warmInit._1},"warmup_initial_sec":${warmInit._2},"warmup_reseq_ok":${warmReseq._1},"warmup_reseq_sec":${warmReseq._2},"quiesce_sec":$quiesceSec,"quiesce_mid_sec":$quiesceMid,"quiesce_postseq_sec":$quiescePostSeq""" +
-      (if (warmInit._3.nonEmpty && warmInit._3 != "skipped")
-        s""","warmup_initial_err":"${esc(warmInit._3)}"""" else "") +
-      (if (warmReseq._3.nonEmpty && warmReseq._3 != "skipped")
-        s""","warmup_reseq_err":"${esc(warmReseq._3)}"""" else "") +
-      (if (skipWarm) s""","window_state":"cold"""" else "")
+      (if (warmInit._3.nonEmpty)
+        s""","warmup_initial_err":${MinJson.str(warmInit._3)}""" else "") +
+      (if (warmReseq._3.nonEmpty)
+        s""","warmup_reseq_err":${MinJson.str(warmReseq._3)}""" else "")
     val streamGenJson =
       if (streamGenSec > 0) s""","stream_generation_sec":$streamGenSec"""
       else ""
@@ -427,8 +408,7 @@ object Bench {
       s""","duck_sequential_total_sec":${ms(total)},"duck_errors":$errs,"spark_seq_vs_duck":${ms(rs)}$rw"""
     }.getOrElse("")
     val concTail = if (seqOnly) "" else s""""sum_query_sec":${ms(sum)},"""
-    val warmTail = s""","warmup_ok":$warmupOk,"quiesce_sec":${ms(quiesceSec)}""" +
-      (if (skipWarm) s""","window_state":"cold"""" else "")
+    val warmTail = s""","warmup_ok":$warmupOk,"quiesce_sec":${ms(quiesceSec)}"""
     val streamGenTail =
       if (streamGenSec > 0)
         s""","stream_generation_sec":${ms(streamGenSec)}"""

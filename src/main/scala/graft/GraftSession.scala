@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *
   * AQE and `autoBroadcastJoinThreshold` stay at Spark's defaults. */
 object GraftSession {
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
   def builder(appName: String): SparkSession.Builder = {

@@ -2,9 +2,9 @@ package graft
 
 /** Minimal JSON string escaping (RFC 8259: quote, backslash, all
   * control chars) shared by every hand-rolled JSON emitter in the
-  * library — Verify's oracle dump and the publish manifest. One
-  * implementation so an escaping fix can never apply to one emitter
-  * and silently miss another. */
+  * library — Verify's oracle dump, the publish manifest and Bench's
+  * artifact. One implementation so an escaping fix can never apply to
+  * one emitter and silently miss another. */
 object MinJson {
   def str(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -15,87 +15,4 @@ object MinJson {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** Minimal recursive-descent JSON reader for HARNESS artifacts
-    * (Bench's bench_full.json and kin — trusted, machine-written
-    * input; this is not a general-purpose parser). Objects →
-    * Map[String, Any], arrays → Seq[Any], numbers → Double, strings →
-    * String, true/false/null → Boolean/null. */
-  def parse(s: String): Any = {
-    var i = 0
-    def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws()
-      require(i < s.length && s(i) == c, s"expected '$c' at $i")
-      i += 1
-    }
-    def value(): Any = {
-      ws()
-      s(i) match {
-        case '{' =>
-          i += 1; ws()
-          val m = scala.collection.mutable.LinkedHashMap[String, Any]()
-          if (s(i) == '}') { i += 1 }
-          else {
-            var more = true
-            while (more) {
-              ws()
-              val k = string()
-              expect(':')
-              m(k) = value()
-              ws()
-              if (s(i) == ',') { i += 1 } else { expect('}'); more = false }
-            }
-          }
-          m.toMap
-        case '[' =>
-          i += 1; ws()
-          val b = scala.collection.mutable.ArrayBuffer[Any]()
-          if (s(i) == ']') { i += 1 }
-          else {
-            var more = true
-            while (more) {
-              b += value()
-              ws()
-              if (s(i) == ',') { i += 1 } else { expect(']'); more = false }
-            }
-          }
-          b.toSeq
-        case '"' => string()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ =>
-          val st = i
-          while (i < s.length && "+-0123456789.eE".contains(s(i))) i += 1
-          s.substring(st, i).toDouble
-      }
-    }
-    def string(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    val v = value()
-    ws()
-    v
-  }
 }

@@ -87,8 +87,8 @@ object StreamingQueries extends QueryGroup {
     * staged-download-dir shape: a file "arrives", the drain picks it
     * up). The table may be a single parquet file (driver testdata) or
     * a directory of part files (any real lake layout, incl.
-    * ScaleData's scaled corpora) — every data file is staged either
-    * way. Staged ONCE per generation and shared by every member
+    * Spark-written tables) — every data file is staged either way.
+    * Staged ONCE per generation and shared by every member
     * watching that table: a file-stream source dir is read-only input,
     * and each member's checkpoint tracks its own offsets into it. */
   private def stageTable(dir: String, table: String,
@@ -493,9 +493,9 @@ object StreamingQueries extends QueryGroup {
       new java.util.concurrent.atomic.AtomicLong
 
     /** The member subset this JVM's battery runs: a filtered battery
-      * (SPARK_GRAFT_ONLY — Bench/Verify iteration aid, ScaleBench
-      * per-family children) must not drain 17 siblings nobody will
-      * read. The requested member is always included. */
+      * (SPARK_GRAFT_ONLY — the Bench/Verify iteration aid) must not
+      * drain 17 siblings nobody will read. The requested member is
+      * always included. */
     private def scoped(requested: Option[String]): Seq[Member] = {
       val only = sys.env.get("SPARK_GRAFT_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

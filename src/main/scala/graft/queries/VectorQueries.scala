@@ -202,48 +202,6 @@ object VectorQueries extends QueryGroup {
       .select("a", "b")
   }
 
-  /** SPARK_GRAFT_GRAPH_SPILL (scale-proof windows only — the driver
-    * never sets it): disk-bounded graph-operator scratch
-    * ([[KCore.peel]] / [[Triangles.perNode]] `spillDir`) for graphs
-    * whose persist+shuffle working set exceeds the box (the measured
-    * sf100 mode: needs ≥96 GB heap AND >100 GB scratch simultaneously
-    * on the persist path). "AUTO" resolves to a fresh directory under
-    * java.io.tmpdir — which ScaleBench points at the child's own
-    * scratch root, so the generations are swept with the child; a JVM
-    * shutdown hook also removes it, so a NON-ScaleBench caller setting
-    * the env var cannot leak a generation-sized directory (in-query
-    * deletion is impossible while the final generation backs the
-    * returned DataFrame). Identical output either way (KCoreSpec /
-    * TrianglesSpec pin it). */
-  // One JVM-wide hook guarding a shared list: a battery that runs the
-  // graph queries in both the concurrent and sequential passes would
-  // otherwise register a fresh shutdown hook per invocation.
-  private val spillDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val spillHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory &&
-            !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      spillDirs.forEach(d => rm(d.toFile))
-    }))
-  }
-
-  private def graphSpillDir(op: String): Option[String] =
-    sys.env.get("SPARK_GRAFT_GRAPH_SPILL").map {
-      case "AUTO" =>
-        val d = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-          s"${op}_spill_")
-        spillHook
-        spillDirs.add(d)
-        d.toString
-      case v => v
-    }
-
   /* A join-free Σ C(n_order, 2) aggregate could hand the operators an
    * `edgeCountHint` (never materialize the pair stream to size it —
    * the true-100 TB contract, spec-pinned on both operators); at the
@@ -252,10 +210,7 @@ object VectorQueries extends QueryGroup {
    * count off the already-needed cache), so these queries take the
    * probe flow and leave the hint to genuinely huge callers. */
   def triangleCount(spark: SparkSession, dir: String): DataFrame =
-    Triangles.perNode(coPurchaseEdges(spark, dir), preDeduped = false,
-      spillDir = graphSpillDir("tri"),
-      chunks = sys.env.get("SPARK_GRAFT_TRI_CHUNKS")
-        .flatMap(_.toIntOption).getOrElse(8))
+    Triangles.perNode(coPurchaseEdges(spark, dir), preDeduped = false)
 
   /** k-core of the co-purchase graph ([[graft.operators.KCore]]):
     * six peels at k=65 — sized so the cascade actually iterates at
@@ -264,7 +219,7 @@ object VectorQueries extends QueryGroup {
     * throughout → bit-exact cross-engine. */
   def kCore(spark: SparkSession, dir: String): DataFrame =
     KCore.peel(coPurchaseEdges(spark, dir), k = 65, rounds = 6,
-      preDeduped = false, spillDir = graphSpillDir("kcore"))
+      preDeduped = false)
 
   /** Per-label centroid outlier audit under the oracle
     * ([[graft.operators.Outliers]]): top-5 farthest vectors per label
@@ -621,9 +576,9 @@ object VectorQueries extends QueryGroup {
     // row WEDGE stream instead of ed (EXISTS/IN closure rewrites
     // flatten to the same flipped RIGHT_SEMI). The syntactic order
     // below is the correct one — ed is the right-hand (build) side of
-    // both wedge joins — so the sf10 compare runs with the reorder
-    // pass off (PREFLIGHT_DISABLED_OPTIMIZERS=join_order); at the
-    // bench SFs the default plan fits and runs as-is. (dkey packs
+    // both wedge joins — so the r14/r15 sf10 compares ran with DuckDB's
+    // join_order pass disabled; at the bench SFs the default plan fits
+    // and runs as-is. (dkey packs
     // (deg, node) into one BIGINT — deg·2^32 + node — so the
     // wedge-pair predicate is a single int compare; the pack is only
     // order-faithful while node < 2^32 and deg < 2^31, so the final

@@ -21,9 +21,12 @@ object Ledger {
   def materialized(output: Path): Boolean =
     Files.exists(output) && (!Files.isDirectory(output) || nonEmptyDir(output))
 
+  /** A Spark write killed mid-job leaves only its `_temporary/`
+    * staging dir in the output directory; that is not output, so such
+    * a directory re-runs (every plugin writes with mode("overwrite")). */
   private def nonEmptyDir(dir: Path): Boolean = {
     val s = Files.list(dir)
-    try s.findFirst().isPresent finally s.close()
+    try s.anyMatch(_.getFileName.toString != "_temporary") finally s.close()
   }
 
   /** The PRECISE single-file/single-dataset outputs a step declares —

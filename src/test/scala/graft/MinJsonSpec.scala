@@ -2,37 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MinJson.parse — the harness-side reader for Bench/ScaleBench
-  * artifacts: round-trips the emitter's escaping and digests a real
-  * bench_full.json shape. */
+/** MinJson.str — the one JSON string escaper every hand-rolled emitter
+  * (Verify's oracle dump, the publish manifest, Bench's artifact)
+  * shares. */
 class MinJsonSpec extends AnyFunSuite {
 
-  test("parses objects, arrays, numbers, strings, bools, null") {
-    val v = MinJson.parse(
-      """{"a":1.5,"b":[1,2,3],"c":{"d":"x","e":true},"f":null,"g":-2e3}""")
-      .asInstanceOf[Map[String, Any]]
-    assert(v("a") == 1.5)
-    assert(v("b") == Seq(1.0, 2.0, 3.0))
-    assert(v("c").asInstanceOf[Map[String, Any]]("d") == "x")
-    assert(v("c").asInstanceOf[Map[String, Any]]("e") == true)
-    assert(v("f") == null)
-    assert(v("g") == -2000.0)
-  }
-
-  test("round-trips MinJson.str escaping") {
-    val nasty = "tab\there \"quoted\" back\\slash\nnewline ctl"
-    val parsed = MinJson.parse(s"""{${MinJson.str("k")}:${MinJson.str(nasty)}}""")
-      .asInstanceOf[Map[String, Any]]
-    assert(parsed("k") == nasty)
-  }
-
-  test("digests a Bench artifact shape") {
-    val j = """{"metric":"total","value":24.4,"unit":"sec","mode":"m",
-      "queries_sequential":{"q1":1.25,"q2":0.5},
-      "duck_sequential_total_sec":80.6,"sf":"/x"}"""
-    val m = MinJson.parse(j).asInstanceOf[Map[String, Any]]
-    val qs = m("queries_sequential").asInstanceOf[Map[String, Any]]
-    assert(qs("q1") == 1.25 && qs("q2") == 0.5)
-    assert(m("value") == 24.4)
+  test("escapes quote, backslash, newline, tab and control chars") {
+    val nasty = "tab\there \"quoted\" back\\slash\nnewline \u0001ctl"
+    assert(MinJson.str(nasty) ==
+      "\"tab\\there \\\"quoted\\\" back\\\\slash\\nnewline \\u0001ctl\"")
   }
 }

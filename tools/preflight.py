@@ -39,78 +39,6 @@ def sort_key(row):
     return tuple((v is None, str(type(v)), repr(v)) for v in row)
 
 
-
-def build_triangle_banded(con, bands: int) -> str:
-    """Band-chunked execution of the triangle_count oracle (r14 judge
-    ask #1): semantically IDENTICAL SQL to SparkEntry.oracleSql's
-    triangle_count entry, but the wedge join runs as `bands` sequential
-    per-apex-band queries with additive per-node counts — mirroring the
-    engine's own chunked dst-band census (Triangles.scala). One band's
-    in-flight wedge stream is ~1/bands of the whole, so the oracle's
-    temp spill is bounded the same way the engine's is (the unbanded
-    oracle's measured sf10 working set is 170+ GB vs this box's ~76 GB
-    free — four configs, r14 BASELINE.md). The edge pipeline
-    (e0/deg/ed) materializes ONCE as temp tables and is reused by every
-    band. Returns the SQL that selects the final (tiny) result."""
-    con.execute("DROP TABLE IF EXISTS __tri_e0")
-    con.execute(
-        "CREATE TEMP TABLE __tri_e0 AS "
-        "SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b "
-        "FROM lineitem a JOIN lineitem b "
-        "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey")
-    con.execute("DROP TABLE IF EXISTS __tri_deg")
-    con.execute(
-        "CREATE TEMP TABLE __tri_deg AS "
-        "SELECT node, COUNT(*) AS deg FROM ("
-        "SELECT a AS node FROM __tri_e0 "
-        "UNION ALL SELECT b AS node FROM __tri_e0) GROUP BY 1")
-    # same dkey-pack bound guard as the declared oracle: ids beyond
-    # 2^32 must fail loud, not corrupt the wedge join
-    con.execute(
-        "SELECT CASE WHEN max(node) < 4294967296 THEN TRUE "
-        "ELSE error('node id exceeds the dkey pack bound 2^32') END "
-        "FROM __tri_deg")
-    con.execute("DROP TABLE IF EXISTS __tri_ed")
-    con.execute(
-        "CREATE TEMP TABLE __tri_ed AS SELECT "
-        "CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) "
-        "  THEN e0.a ELSE e0.b END AS src, "
-        "CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) "
-        "  THEN e0.b ELSE e0.a END AS dst, "
-        "CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) "
-        "  THEN db.deg * 4294967296 + e0.b "
-        "  ELSE da.deg * 4294967296 + e0.a END AS dkey "
-        "FROM __tri_e0 e0 JOIN __tri_deg da ON da.node = e0.a "
-        "JOIN __tri_deg db ON db.node = e0.b")
-    con.execute("DROP TABLE IF EXISTS __tri_t")
-    con.execute(
-        "CREATE TEMP TABLE __tri_t (node BIGINT, n_tri BIGINT)")
-    for b in range(bands):
-        # band on the wedge APEX (e1.src = e2.src): bands partition the
-        # wedge stream exactly, and per-node triangle counts from
-        # different apex bands are additive (each triangle is counted
-        # once, at its unique dkey-min apex, in exactly one band)
-        con.execute(
-            "INSERT INTO __tri_t "
-            "SELECT node, CAST(COUNT(*) AS BIGINT) FROM ("
-            "SELECT unnest([e1.src, e1.dst, e2.dst]) AS node "
-            "FROM __tri_ed e1 JOIN __tri_ed e2 "
-            "ON e1.src = e2.src AND e1.dkey < e2.dkey "
-            "JOIN __tri_ed e3 ON e3.src = e1.dst AND e3.dst = e2.dst "
-            f"WHERE e1.src % {bands} = {b} "
-            f"AND e2.src % {bands} = {b}) u GROUP BY 1")
-        print(f"  [tri-banded] band {b + 1}/{bands} done", flush=True)
-    return ("SELECT d.node, CAST(d.deg AS BIGINT) AS deg, "
-            "CAST(COALESCE(t.n_tri, 0) AS BIGINT) AS n_tri, "
-            "CASE WHEN d.deg >= 2 "
-            "THEN CAST(2 * COALESCE(t.n_tri, 0) AS DOUBLE) / "
-            "CAST(d.deg * (d.deg - 1) AS DOUBLE) "
-            "ELSE CAST(0 AS DOUBLE) END AS clustering_coeff "
-            "FROM __tri_deg d LEFT JOIN (SELECT node, "
-            "CAST(SUM(n_tri) AS BIGINT) AS n_tri FROM __tri_t "
-            "GROUP BY 1) t ON d.node = t.node")
-
-
 def main(sf_dir: str, out_dir: str, only: str | None = None) -> int:
     con = duckdb.connect()
     # PER-PROCESS spill directory. DuckDB's in-memory default is the
@@ -124,43 +52,16 @@ def main(sf_dir: str, out_dir: str, only: str | None = None) -> int:
     import atexit
     import shutil
     atexit.register(lambda: shutil.rmtree(tmp, ignore_errors=True))
-    # bound the spill so one heavy oracle fails ITSELF cleanly instead
-    # of filling the disk and killing sibling workers (observed: one
-    # sf10 oracle spilled 33 GB)
-    if os.environ.get("PREFLIGHT_TEMPLIMIT"):
-        try:
-            con.execute("SET max_temp_directory_size="
-                        f"'{os.environ['PREFLIGHT_TEMPLIMIT']}'")
-        except Exception:  # noqa: BLE001 — setting absent in old builds
-            pass
-    # parallel chunked runs (tools/sf10_preflight.py) cap each worker
-    # so N processes share the box instead of each claiming all cores
-    # and 80% of RAM
     # order never matters (every compare sorts rows/cols first), and
     # preserving insertion order forces DuckDB to MATERIALIZE big
     # streaming pipelines — the sf10 wedge/CC oracles spill tens of GB
     # with it on and stream with it off
     con.execute("SET preserve_insertion_order=false")
-    if os.environ.get("PREFLIGHT_THREADS"):
-        con.execute(f"SET threads={int(os.environ['PREFLIGHT_THREADS'])}")
-    # escape hatch for stats-blind plans: above a materialized CTE
-    # DuckDB 1.0's cardinality estimates collapse to 0 and the join-
-    # order pass then picks hash-join build sides arbitrarily — for
-    # the sf10 triangle oracle it builds on the 4-billion-row wedge
-    # stream instead of the edge list (observed: 35 GB of spill in
-    # minutes, then death). The oracle's SYNTACTIC join order is the
-    # correct one (build sides are the right-hand relations as
-    # written), so per-query solo runs can disable the reorder pass.
-    if os.environ.get("PREFLIGHT_DISABLED_OPTIMIZERS"):
-        con.execute("SET disabled_optimizers="
-                    f"'{os.environ['PREFLIGHT_DISABLED_OPTIMIZERS']}'")
-    if os.environ.get("PREFLIGHT_MEMLIMIT"):
-        con.execute(f"SET memory_limit='{os.environ['PREFLIGHT_MEMLIMIT']}'")
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.is_dir():
-            # Spark-written table (ScaleData corpora): a DIRECTORY of
-            # part files; DuckDB needs the glob form
+            # Spark-written table: a DIRECTORY of part files; DuckDB
+            # needs the glob form
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}/*.parquet'")
         elif p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
@@ -168,8 +69,8 @@ def main(sf_dir: str, out_dir: str, only: str | None = None) -> int:
     only = only or os.environ.get("SPARK_GRAFT_ONLY")
     ran = ({q.strip() for q in only.split(",") if q.strip()}
            if only else None)
-    # optional CORRECTNESS_r{N}.json-shaped artifact (builder-side scale
-    # gates commit these): per query rows/schema/hash verdicts
+    # optional CORRECTNESS_r{N}.json-shaped artifact: per query
+    # rows/schema/hash verdicts
     json_out = os.environ.get("PREFLIGHT_JSON")
     report: dict[str, dict] = {}
 
@@ -198,12 +99,6 @@ def main(sf_dir: str, out_dir: str, only: str | None = None) -> int:
             n_fail += 1
             continue
         try:
-            # PREFLIGHT_TRI_BANDS=K: run the triangle oracle band-chunked
-            # (bounded temp spill) — result identical by construction
-            if (name == "triangle_count"
-                    and os.environ.get("PREFLIGHT_TRI_BANDS")):
-                sql = build_triangle_banded(
-                    con, int(os.environ["PREFLIGHT_TRI_BANDS"]))
             mine = con.sql(f"SELECT * FROM '{res_dir}/*.parquet'")
             ref = con.sql(sql)
             # ORACLE TYPE DISCIPLINE (r10 judge finding): DuckDB types an
@@ -444,8 +339,8 @@ def bench_delta_gate(cur_path: str, prev_path: str,
     # one's, because the duck total is the window's machine-state
     # fingerprint (same battery, same engine, single-process: it moves
     # only with box load). Pairings across window classes are REFUSED:
-    #   - cold (window_state=="cold" / SKIP_WARMUP) vs warmed, either
-    #     direction;
+    #   - cold (window_state=="cold", a window measured without
+    #     warmup) vs warmed, either direction;
     #   - a failed warmup on either side (warmup_ok false — the class
     #     is unknown);
     #   - nearest duck total still >1.35x apart (the measured same-code
