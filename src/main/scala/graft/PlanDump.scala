@@ -16,6 +16,15 @@ import org.apache.spark.sql.SparkSession
   *    `<outDir>/<q>_<suffix>.txt` per named query (default: every
   *    query) and never touches PLANS.md — the before/after plan
   *    evidence of an optimization (plans/r15/<q>_before.txt).
+  *
+  * Some queries compute their result on the driver while the DataFrame
+  * is built: `triangle_count` and `k_core` collect a graph under the
+  * 2M-edge `localThreshold` of `Triangles.perNode` / `KCore.peel`,
+  * which holds at sf0.1 and below. Their executed plan is a bare
+  * `LocalTableScan`, so a before/after pair of them shows nothing of
+  * the operators; the per-query mode marks such a file with the first
+  * line `driver-local result: no operator plan`. Such queries need an
+  * input above the threshold to give plan evidence.
   */
 object PlanDump {
 
@@ -313,10 +322,34 @@ object PlanDump {
       "construction); the batch twin's manifest law is asserted " +
       "equal in the spec."))
 
-  private def explain(spark: SparkSession, sfDir: String,
-                      name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
+  /** Query `name`'s execution and its formatted plan. */
+  private def explain(spark: SparkSession, sfDir: String, name: String)
+      : (org.apache.spark.sql.execution.QueryExecution, String) = {
+    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    (qe, qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+  }
+
+  private[graft] val DriverLocal = "driver-local result: no operator plan"
+
+  /** One per-query snapshot: the formatted plan, headed by
+    * [[DriverLocal]] when the executed plan, under its
+    * `AdaptiveSparkPlan` and codegen wrappers, is a bare
+    * `LocalTableScan`. */
+  private[graft] def snapshot(spark: SparkSession, sfDir: String,
+                              name: String): String = {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
+      case w: WholeStageCodegenExec => strip(w.child)
+      case other => other
+    }
+    val (qe, plan) = explain(spark, sfDir, name)
+    if (strip(qe.executedPlan).isInstanceOf[LocalTableScanExec])
+      s"$DriverLocal\n$plan"
+    else plan
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length <= 1 || args.length >= 3,
@@ -338,7 +371,7 @@ object PlanDump {
     sb.append("runtime). Each section: why this plan survives a 1000-\n")
     sb.append("executor scale-up, then `explain(\"formatted\")`.\n")
     headline.foreach { case (name, why) =>
-      sb.append(s"\n## $name\n\n$why\n\n```\n${explain(spark, sfDir, name)}```\n")
+      sb.append(s"\n## $name\n\n$why\n\n```\n${explain(spark, sfDir, name)._2}```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md: ${headline.size} plans")
@@ -350,7 +383,7 @@ object PlanDump {
     only.getOrElse(SparkEntry.queries.keys.toSeq.sorted).foreach { name =>
       try {
         Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
-          explain(spark, sfDir, name))
+          snapshot(spark, sfDir, name))
         println(s"[plandump] $name ok")
       } catch { case scala.util.control.NonFatal(e) =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")

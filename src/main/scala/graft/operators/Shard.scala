@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,6 +125,18 @@ object Shard {
                    path: String, epoch: Int = 0): Unit =
     shardedForWrite(df, id, numShards, epoch)
       .write.mode("overwrite").partitionBy("shard").parquet(path)
+
+  /** The shards a [[writeSharded]] write committed under `path`: its
+    * `shard=<k>` directories. The partitioned writer creates one only
+    * for a shard that received rows, so this equals the distinct
+    * `shard` values of the written rows without reading them. */
+  def committedShards(spark: SparkSession, path: String): Long = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir)
+      .count(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
+      .toLong
+  }
 
   /** Per-shard trainer manifest over an [[assign]]-ed corpus: doc,
     * token and char totals per shard — the sidecar every training job

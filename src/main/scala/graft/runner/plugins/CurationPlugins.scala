@@ -10,6 +10,11 @@ import graft.runner._
 /** The round-6 curation/analytics operators as runner plugins (SURVEY
   * §7 step 6) — same library the oracle battery verifies, addressable
   * from YAML pipelines.
+  *
+  * A counter that counts (or filter-counts, or sums) a frame the step
+  * writes rides that write through [[graft.runner.Counted]]; a row
+  * count of a parquet input or output comes from its footers. Distinct
+  * counts and counts of other datasets keep their own job.
   */
 
 /** `text_lm_score` — bigram-LM corpus-fit scoring ([[NgramLm.score]]).
@@ -35,11 +40,10 @@ object TextLmScorePlugin extends StepPlugin {
         (docs.filter(col(idCol) % m === 0),
           docs.filter(col(idCol) % m =!= 0))
     }
-    NgramLm.score(scored, lm, idCol, col(textCol))
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_scored" -> res.count(),
-      "n_oov_docs" -> res.filter(col("n_oov") > 0).count()))
+    val c = Counted.write(NgramLm.score(scored, lm, idCol, col(textCol)),
+      out, "n_scored" -> Counted.rows,
+      "n_oov_docs" -> sum(when(col("n_oov") > 0, 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -66,10 +70,9 @@ object TextDsirPlugin extends StepPlugin {
       case _ => sys.error(
         "text_dsir: one of 'target_input' / 'target_where' is required")
     }
-    Dsir.weights(docs, target, idCol, col(textCol), b)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_docs" -> res.count()))
+    val c = Counted.write(Dsir.weights(docs, target, idCol, col(textCol), b),
+      out, "n_docs" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -92,11 +95,9 @@ object TextCurriculumPlugin extends StepPlugin {
     val diff = ctx.argOpt("difficulty_expr").map(e => expr(e.toString))
       .getOrElse(size(TextStats.tokens(col(textCol))).cast("long"))
     val docs = ctx.spark.read.parquet(in)
-    Curriculum.order(docs, col(idCol), diff, buckets)
-      .withColumnRenamed("id", idCol)
-      .write.mode("overwrite").parquet(out)
-    StepResult(Map("output_path" -> out,
-      "n_docs" -> ctx.spark.read.parquet(out).count()))
+    val c = Counted.write(Curriculum.order(docs, col(idCol), diff, buckets)
+      .withColumnRenamed("id", idCol), out, "n_docs" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -124,14 +125,14 @@ object EmbeddingSemdedupPlugin extends StepPlugin {
     val verdicts = SemanticDedup.dedupe(
       raw.select(col(idCol).as("id"),
         Similarity.asDouble(col(vecCol)).as("vec")), k, iters, minCos)
-    verdicts.write.mode("overwrite").parquet(out)
-    val v = ctx.spark.read.parquet(out)
+    val c = Counted.write(verdicts, out, "n_in" -> Counted.rows,
+      "n_kept" -> sum(when(col("keep"), 1)))
     ctx.argOpt("keep_path").foreach { kp =>
+      val v = ctx.spark.read.parquet(out)
       raw.join(v.filter(col("keep")).select(col("id").as(idCol)), Seq(idCol))
         .write.mode("overwrite").parquet(kp.toString)
     }
-    StepResult(Map("output_path" -> out, "n_in" -> v.count(),
-      "n_kept" -> v.filter(col("keep")).count()))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -151,14 +152,13 @@ object EmbeddingOutliersPlugin extends StepPlugin {
     val grpCol = ctx.argOpt("group_col").map(_.toString).getOrElse("label")
     val vecCol = ctx.argOpt("vec_col").map(_.toString).getOrElse("embedding")
     val k = ctx.argOpt("top_k").map(_.toString.toInt).getOrElse(5)
-    Outliers.byGroup(
+    val c = Counted.write(Outliers.byGroup(
         ctx.spark.read.parquet(in).select(col(idCol).as("id"),
           col(grpCol).as("grp"),
-          Similarity.asDouble(col(vecCol)).as("vec")), k)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_vectors" -> res.count(),
-      "n_outliers" -> res.filter(col("is_outlier")).count()))
+          Similarity.asDouble(col(vecCol)).as("vec")), k),
+      out, "n_vectors" -> Counted.rows,
+      "n_outliers" -> sum(when(col("is_outlier"), 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -224,10 +224,9 @@ object GraphPagerankPlugin extends StepPlugin {
       case None => edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id"))).distinct()
     }
-    PageRank.run(nodes, edges, iters, damping)
-      .write.mode("overwrite").parquet(out)
-    StepResult(Map("output_path" -> out,
-      "n_nodes" -> ctx.spark.read.parquet(out).count()))
+    val c = Counted.write(PageRank.run(nodes, edges, iters, damping), out,
+      "n_nodes" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -256,10 +255,9 @@ object TextBudgetCapPlugin extends StepPlugin {
       if (ctx.argBool("keep_only", default = false))
         audited.filter(col("kept"))
       else audited
-    result.write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_out" -> res.count(),
-      "n_kept" -> res.filter(col("kept")).count()))
+    val c = Counted.write(result, out, "n_out" -> Counted.rows,
+      "n_kept" -> sum(when(col("kept"), 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -292,10 +290,9 @@ object TextQualityFloorPlugin extends StepPlugin {
       if (ctx.argBool("keep_only", default = false))
         audited.filter(col("kept"))
       else audited
-    result.write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_out" -> res.count(),
-      "n_kept" -> res.filter(col("kept")).count()))
+    val c = Counted.write(result, out, "n_out" -> Counted.rows,
+      "n_kept" -> sum(when(col("kept"), 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -319,10 +316,9 @@ object GraphTrianglesPlugin extends StepPlugin {
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
       greatest(col("__x"), col("__y")).as("b")).distinct()
-    Triangles.perNode(canon).write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_nodes" -> res.count(),
-      "n_closed" -> res.filter(col("n_tri") > 0).count()))
+    val c = Counted.write(Triangles.perNode(canon), out,
+      "n_nodes" -> Counted.rows, "n_closed" -> sum(when(col("n_tri") > 0, 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -340,10 +336,10 @@ object TextBpeLearnPlugin extends StepPlugin {
     val out = ctx.argStr("output_path")
     val rounds = ctx.argOpt("rounds").map(_.toString.toInt).getOrElse(16)
     val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    Bpe.learnMerges(ctx.spark.read.parquet(in), col(textCol), rounds)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_merges" -> res.count()))
+    val c = Counted.write(
+      Bpe.learnMerges(ctx.spark.read.parquet(in), col(textCol), rounds),
+      out, "n_merges" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -369,12 +365,11 @@ object GraphKcorePlugin extends StepPlugin {
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
       greatest(col("__x"), col("__y")).as("b")).distinct()
-    KCore.peel(canon, k, rounds,
-        ctx.argOpt("checkpoint_dir").map(_.toString))
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_nodes" -> res.count(),
-      "n_converged" -> res.filter(col("in_core")).count()))
+    val c = Counted.write(KCore.peel(canon, k, rounds,
+        ctx.argOpt("checkpoint_dir").map(_.toString)),
+      out, "n_nodes" -> Counted.rows,
+      "n_converged" -> sum(when(col("in_core"), 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -420,10 +415,9 @@ object EmbeddingAnnPlugin extends StepPlugin {
       val queries = ctx.spark.read.parquet(qp.toString)
         .select(col(qid).as("qid"),
           Similarity.asDouble(col(qvec)).as("qvec"))
-      Ivf.searchTopK(queries, index, centroids, k, nprobe)
-        .write.mode("overwrite").parquet(tp)
-      Map("topk_path" -> tp,
-        "n_answers" -> ctx.spark.read.parquet(tp).count())
+      val c = Counted.write(Ivf.searchTopK(queries, index, centroids, k,
+        nprobe), tp, "n_answers" -> Counted.rows)
+      Map("topk_path" -> tp) ++ c
     }.getOrElse(Map.empty[String, Any])
     StepResult(Map("index_path" -> indexPath,
       "n_indexed" -> index.count(),
@@ -443,6 +437,12 @@ object EmbeddingAnnPlugin extends StepPlugin {
   * duplicates nondeterministic), `epoch` (default 0 — re-keys the
   * permutation per training epoch), `assign_only` (true = write the
   * flat assignment table instead of the sharded directory layout).
+  *
+  * Counters: `n_rows` is the written row count from the output's
+  * parquet footers ([[graft.runner.Counted.parquetRows]]). `n_shards`
+  * is the number of committed `shard=<k>` directories
+  * ([[Shard.committedShards]]); with `assign_only` it is a distinct
+  * count over a re-read of the table.
   */
 object CorpusShardPlugin extends StepPlugin {
   val name = "corpus_shard"
@@ -457,14 +457,18 @@ object CorpusShardPlugin extends StepPlugin {
         .getOrElse("doc_id")))
     val epoch = ctx.argOpt("epoch").map(_.toString.toInt).getOrElse(0)
     val source = ctx.spark.read.parquet(in)
-    if (ctx.argBool("assign_only", default = false))
-      Shard.assign(source, id, numShards, epoch)
-        .write.mode("overwrite").parquet(out)
-    else
-      Shard.writeSharded(source, id, numShards, out, epoch)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_rows" -> res.count(),
-      "n_shards" -> res.select("shard").distinct().count()))
+    val nShards =
+      if (ctx.argBool("assign_only", default = false)) {
+        Shard.assign(source, id, numShards, epoch)
+          .write.mode("overwrite").parquet(out)
+        ctx.spark.read.parquet(out).select("shard").distinct().count()
+      } else {
+        Shard.writeSharded(source, id, numShards, out, epoch)
+        Shard.committedShards(ctx.spark, out)
+      }
+    StepResult(Map("output_path" -> out,
+      "n_rows" -> Counted.parquetRows(ctx.spark, out),
+      "n_shards" -> nShards))
   }
 }
 
@@ -478,6 +482,9 @@ object CorpusShardPlugin extends StepPlugin {
   * `shard`), `output_path`; optional `tokens_expr` / `chars_expr`
   * (SQL expressions over the cut's columns, default 0 when the cut
   * carries no such column — doc counts alone still pin balance).
+  *
+  * Counters: `n_shards` (manifest rows) and `n_docs` (their sum) ride
+  * the manifest write.
   */
 object ShardManifestPlugin extends StepPlugin {
   val name = "shard_manifest"
@@ -489,13 +496,10 @@ object ShardManifestPlugin extends StepPlugin {
       .getOrElse("0"))
     val chars = expr(ctx.argOpt("chars_expr").map(_.toString)
       .getOrElse("0"))
-    graft.operators.Shard.manifest(cut, toks, chars)
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    val m = ctx.spark.read.parquet(out)
-    val agg = m.agg(coalesce(sum("n_docs"), lit(0L)).as("d"),
-      count(lit(1)).as("s")).head()
-    StepResult(Map("output_path" -> out, "n_docs" -> agg.getLong(0),
-      "n_shards" -> agg.getLong(1)))
+    val c = Counted.write(
+      graft.operators.Shard.manifest(cut, toks, chars).coalesce(1), out,
+      "n_docs" -> sum("n_docs"), "n_shards" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -514,17 +518,15 @@ object CorpusDiffPlugin extends StepPlugin {
     val out = ctx.argStr("output_path")
     val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
     val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    graft.operators.CorpusDiff.diff(
+    val diff = graft.operators.CorpusDiff.diff(
         ctx.spark.read.parquet(ctx.argStr("old_input")),
         ctx.spark.read.parquet(ctx.argStr("new_input")),
         col(idCol), col(textCol))
       .withColumnRenamed("id", idCol)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    def n(s: String) = res.filter(col("status") === s).count()
-    StepResult(Map("output_path" -> out, "n_total" -> res.count(),
-      "n_added" -> n("added"), "n_removed" -> n("removed"),
-      "n_changed" -> n("changed"), "n_unchanged" -> n("unchanged")))
+    def n(s: String) = s"n_$s" -> sum(when(col("status") === s, 1))
+    val c = Counted.write(diff, out, "n_total" -> Counted.rows, n("added"),
+      n("removed"), n("changed"), n("unchanged"))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -544,12 +546,11 @@ object BloomBuildPlugin extends StepPlugin {
     val valueCol = ctx.argOpt("value_col").map(_.toString).getOrElse("text")
     val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(4)
     val m = ctx.argOpt("m").map(_.toString.toInt).getOrElse(4096)
-    graft.operators.Bloom.build(
-        ctx.spark.read.parquet(ctx.argStr("input")), col(valueCol), k, m)
-      .write.mode("overwrite").parquet(out)
-    StepResult(Map("output_path" -> out,
-      "n_bits" -> ctx.spark.read.parquet(out).count(),
-      "k" -> k.toLong, "m" -> m.toLong))
+    val c = Counted.write(graft.operators.Bloom.build(
+        ctx.spark.read.parquet(ctx.argStr("input")), col(valueCol), k, m),
+      out, "n_bits" -> Counted.rows)
+    StepResult(Map("output_path" -> out, "k" -> k.toLong,
+      "m" -> m.toLong) ++ c)
   }
 }
 
@@ -577,15 +578,13 @@ object BloomProbePlugin extends StepPlugin {
     val verdict = graft.operators.Bloom.probe(
       corpus, col(idCol), col(valueCol), filter, k, m)
     val flagged = verdict.filter(col("maybe_member"))
-    if (ctx.argBool("drop_members", default = false))
-      corpus.join(flagged.select(col("id").as(idCol)),
+    val written =
+      if (ctx.argBool("drop_members", default = false))
+        corpus.join(flagged.select(col("id").as(idCol)),
           Seq(idCol), "left_anti")
-        .write.mode("overwrite").parquet(out)
-    else
-      verdict.withColumnRenamed("id", idCol)
-        .write.mode("overwrite").parquet(out)
-    StepResult(Map("output_path" -> out,
-      "n_rows" -> ctx.spark.read.parquet(out).count(),
+      else verdict.withColumnRenamed("id", idCol)
+    val c = Counted.write(written, out, "n_rows" -> Counted.rows)
+    StepResult(Map("output_path" -> out, "n_rows" -> c("n_rows"),
       "n_flagged" -> flagged.count()))
   }
 }

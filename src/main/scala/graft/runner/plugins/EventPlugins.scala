@@ -11,6 +11,8 @@ import graft.runner._
 /** Event-log analytics as runner steps — the downstream query layer
   * over the event-shaped staging tables the reference's pipelines land
   * (see [[graft.operators.Funnel]] for the operator contracts).
+  * Counters over a written frame ride its write
+  * ([[graft.runner.Counted]]); distinct counts keep their own job.
   */
 
 /** Default `ts` expressions for event steps, chosen from the PHYSICAL
@@ -58,13 +60,11 @@ object EventFunnelPlugin extends StepPlugin {
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
     val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
       .getOrElse(EventTs.microsExpr(input))
-    Funnel.steps(input,
-        col(userCol), col(kindCol), expr(tsExpr), stages)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_entered" -> res.count(),
-      "n_converted" ->
-        res.filter(col("steps") === stages.size).count()))
+    val c = Counted.write(Funnel.steps(input,
+        col(userCol), col(kindCol), expr(tsExpr), stages),
+      out, "n_entered" -> Counted.rows,
+      "n_converted" -> sum(when(col("steps") === stages.size, 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -83,12 +83,11 @@ object EventRetentionPlugin extends StepPlugin {
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
     val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
       .getOrElse(EventTs.timestampExpr(input))
-    Retention.cohorts(input,
-        col(userCol), expr(tsExpr))
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_cells" -> res.count(),
-      "n_cohorts" -> res.select("cohort_day").distinct().count()))
+    val c = Counted.write(Retention.cohorts(input,
+        col(userCol), expr(tsExpr)), out, "n_cells" -> Counted.rows)
+    StepResult(Map("output_path" -> out, "n_cells" -> c("n_cells"),
+      "n_cohorts" -> ctx.spark.read.parquet(out)
+        .select("cohort_day").distinct().count()))
   }
 }
 
@@ -110,12 +109,11 @@ object EventScd2Plugin extends StepPlugin {
     val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
       .getOrElse(EventTs.microsExpr(input))
     val tb = ctx.argOpt("tiebreak_col").map(_.toString).getOrElse("event_id")
-    Scd2.build(input,
-        col(userCol), col(attrCol), expr(tsExpr), col(tb))
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_intervals" -> res.count(),
-      "n_current" -> res.filter(col("is_current") === 1).count()))
+    val c = Counted.write(Scd2.build(input,
+        col(userCol), col(attrCol), expr(tsExpr), col(tb)),
+      out, "n_intervals" -> Counted.rows,
+      "n_current" -> sum(when(col("is_current") === 1, 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -160,8 +158,8 @@ object SketchCountMinPlugin extends StepPlugin {
         ctx.spark.read.parquet(p.toString)
       case None => partials
     }
-    CountMin.merge(mergeSrc).write.mode("overwrite").parquet(out)
-    val persisted = ctx.spark.read.parquet(out)
+    val c = Counted.write(CountMin.merge(mergeSrc), out,
+      "n_counters" -> Counted.rows)
     val extra = ctx.argOpt("queries_input").map { qp =>
       val ep = ctx.argStr("estimates_path")
       val qraw = ctx.spark.read.parquet(qp.toString)
@@ -173,13 +171,12 @@ object SketchCountMinPlugin extends StepPlugin {
         case _ => sys.error("sketch_count_min: queries_input needs one " +
           "of 'query_token_col' / 'query_text_col'")
       }
-      CountMin.estimate(persisted, qtoks.distinct(), col("token"), d, w)
-        .write.mode("overwrite").parquet(ep)
-      Map("estimates_path" -> ep,
-        "n_estimated" -> ctx.spark.read.parquet(ep).count())
+      val persisted = ctx.spark.read.parquet(out)
+      Map("estimates_path" -> ep) ++ Counted.write(
+        CountMin.estimate(persisted, qtoks.distinct(), col("token"), d, w),
+        ep, "n_estimated" -> Counted.rows)
     }.getOrElse(Map.empty[String, Any])
-    StepResult(Map("output_path" -> out,
-      "n_counters" -> persisted.count()) ++ extra)
+    StepResult(Map("output_path" -> out) ++ c ++ extra)
   }
 }
 
@@ -225,9 +222,9 @@ object SketchQuantilesPlugin extends StepPlugin {
         ctx.spark.read.parquet(p.toString)
       case None => partials
     }
-    Histogram.quantilesFromPartials(mergeSrc, width, origin, qs)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_quantiles" -> res.count()))
+    val c = Counted.write(
+      Histogram.quantilesFromPartials(mergeSrc, width, origin, qs), out,
+      "n_quantiles" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }

@@ -10,6 +10,11 @@ import graft.runner._
 /** The LLM-data-pipeline extensions as ordinary runner plugins (SURVEY
   * §7 step 6: "all as ordinary plugins") — the same operator library
   * the query harness verifies, addressable from YAML pipelines.
+  *
+  * A counter that counts (or filter-counts, or sums) a frame the step
+  * writes rides that write through [[graft.runner.Counted]]; a row
+  * count of a parquet input or output comes from its footers. Distinct
+  * counts and counts of other datasets keep their own job.
   */
 
 /** `text_dedup` — corpus dedup step: exact dedup by md5(text), plus
@@ -20,6 +25,10 @@ import graft.runner._
   * Args: `input` (documents parquet), `output_path`, optional `id_col`
   * (default doc_id), `text_col` (default text), `min_jaccard` (off =
   * exact only), `ngram` (default 3).
+  *
+  * Counters: `n_in` is the input's row count from its parquet footers
+  * ([[Counted.parquetRows]]), `n_kept` is observed on the write;
+  * `n_dropped` is their difference.
   */
 object TextDedupPlugin extends StepPlugin {
   val name = "text_dedup"
@@ -33,14 +42,13 @@ object TextDedupPlugin extends StepPlugin {
     val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
 
     val docs = ctx.spark.read.parquet(in)
-    val nIn = docs.count()
     // exact pass first: cheapest, always on (one hash-aggregate window)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col(textCol)))
     val exactKept = docs
       .withColumn("__keep", col(idCol) === min(col(idCol)).over(w))
       .filter(col("__keep")).drop("__keep")
-    minJ match {
+    val kept = minJ match {
       case Some(j) =>
         // near-dup clusters over the exact survivors; keep cluster
         // minima. exactKept feeds TWO consumers (the shingle build and
@@ -54,13 +62,14 @@ object TextDedupPlugin extends StepPlugin {
           val losers = Components.connected(pairs, "doc_a", "doc_b")
             .filter(col("id") =!= col("component"))
             .select(col("id").as(idCol))
-          exactKept.join(losers, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(out)
+          Counted.write(exactKept.join(losers, Seq(idCol), "left_anti"),
+            out, "n_kept" -> Counted.rows)
         } finally exactKept.unpersist()
       case None =>
-        exactKept.write.mode("overwrite").parquet(out)
+        Counted.write(exactKept, out, "n_kept" -> Counted.rows)
     }
-    val nKept = ctx.spark.read.parquet(out).count()
+    val nIn = Counted.parquetRows(ctx.spark, in)
+    val nKept = kept("n_kept")
     StepResult(Map("output_path" -> out,
       "n_in" -> nIn, "n_kept" -> nKept,
       "n_dropped" -> (nIn - nKept)))
@@ -177,13 +186,10 @@ object TextQualityPlugin extends StepPlugin {
         .when(col("stopword_ratio") < 0.01, "no_stopwords")
         .when(col("lang_pred") =!= "en", "not_english")
         .otherwise("keep").as("verdict"))
-    verdicts.write.mode("overwrite").parquet(out)
-    val byVerdict = ctx.spark.read.parquet(out)
-      .groupBy("verdict").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    StepResult(Map("output_path" -> out,
-      "n_keep" -> byVerdict.getOrElse("keep", 0L),
-      "n_total" -> byVerdict.values.sum))
+    val c = Counted.write(verdicts, out,
+      "n_keep" -> sum(when(col("verdict") === "keep", 1)),
+      "n_total" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -204,11 +210,10 @@ object TextFingerprintPlugin extends StepPlugin {
     val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
     val w = ctx.argOpt("window").map(_.toString.toInt).getOrElse(4)
 
-    Fingerprint.winnowFingerprints(ctx.spark.read.parquet(in),
-        idCol, col(textCol), n = n, w = w)
-      .write.mode("overwrite").parquet(out)
-    val nFps = ctx.spark.read.parquet(out).count()
-    StepResult(Map("output_path" -> out, "n_fingerprints" -> nFps))
+    val c = Counted.write(Fingerprint.winnowFingerprints(
+        ctx.spark.read.parquet(in), idCol, col(textCol), n = n, w = w),
+      out, "n_fingerprints" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -243,22 +248,20 @@ object TextSpanAuditPlugin extends StepPlugin {
     val overlapPath = s"$outDir/source_overlap.parquet"
     SpanDedup.dupSpans(docs, idCol, col(textCol), n)
       .write.mode("overwrite").parquet(spansPath)
-    SpanDedup.dupCoverage(docs, idCol, col(textCol), n)
-      .write.mode("overwrite").parquet(coveragePath)
-    SpanDedup.sourceOverlap(docs, idCol, srcCol, col(textCol), n,
-        maxSourcesPerShingle = cap)
-      .write.mode("overwrite").parquet(overlapPath)
-    val coverage = ctx.spark.read.parquet(coveragePath)
     // flag on the merged-interval coverage, not raw position counts:
     // overlapping spans would overstate how much text is copied
-    val flagged = coverage.filter(col("coverage_ratio") >= flagRatio).count()
+    val coverage = Counted.write(
+      SpanDedup.dupCoverage(docs, idCol, col(textCol), n), coveragePath,
+      "n_docs" -> Counted.rows,
+      "n_flagged" -> sum(when(col("coverage_ratio") >= flagRatio, 1)))
+    val overlap = Counted.write(
+      SpanDedup.sourceOverlap(docs, idCol, srcCol, col(textCol), n,
+        maxSourcesPerShingle = cap),
+      overlapPath, "n_source_pairs" -> Counted.rows)
     StepResult(Map(
       "dup_spans_path" -> spansPath,
       "dup_coverage_path" -> coveragePath,
-      "source_overlap_path" -> overlapPath,
-      "n_docs" -> coverage.count(),
-      "n_flagged" -> flagged,
-      "n_source_pairs" -> ctx.spark.read.parquet(overlapPath).count()))
+      "source_overlap_path" -> overlapPath) ++ coverage ++ overlap)
   }
 }
 
@@ -269,6 +272,9 @@ object TextSpanAuditPlugin extends StepPlugin {
   * Args: `input`, `output_path`, `budget` (rows), `weights` (YAML map
   * stratum → weight), optional `id_col` (doc_id), `stratum_col`
   * (source), `default_weight` (0 = drop unlisted strata).
+  *
+  * Counters: `n_in` is the input's row count from its parquet footers
+  * ([[Counted.parquetRows]]), `n_out` is observed on the write.
   */
 object TextResamplePlugin extends StepPlugin {
   val name = "text_resample"
@@ -288,11 +294,10 @@ object TextResamplePlugin extends StepPlugin {
       .getOrElse(0.0)
 
     val docs = ctx.spark.read.parquet(in)
-    Resample.toMixture(docs, col(idCol), col(stCol), weights, budget, defW)
-      .write.mode("overwrite").parquet(out)
-    val outDf = ctx.spark.read.parquet(out)
+    val c = Counted.write(Resample.toMixture(docs, col(idCol), col(stCol),
+      weights, budget, defW), out, "n_out" -> Counted.rows)
     StepResult(Map("output_path" -> out,
-      "n_in" -> docs.count(), "n_out" -> outDf.count()))
+      "n_in" -> Counted.parquetRows(ctx.spark, in), "n_out" -> c("n_out")))
   }
 }
 
@@ -302,6 +307,10 @@ object TextResamplePlugin extends StepPlugin {
   *
   * Args: `input`, `output_path`, optional `id_col` (doc_id),
   * `text_col` (text).
+  *
+  * Counters: all are observed on the write, so the regex battery runs
+  * once. `n_docs` counts the written rows; `n_emails`, `n_ips` and
+  * `n_phones` sum the per-doc counts the written rows carry.
   */
 object TextScrubPlugin extends StepPlugin {
   val name = "text_scrub"
@@ -314,18 +323,12 @@ object TextScrubPlugin extends StepPlugin {
 
     val docs = ctx.spark.read.parquet(in)
     val scrubbed = Scrub.scrub(docs, col(idCol), col(textCol))
-    docs.drop(textCol)
+    val c = Counted.write(docs.drop(textCol)
       .join(scrubbed.withColumnRenamed("doc_id", idCol)
-        .withColumnRenamed("clean", textCol), Seq(idCol))
-      .write.mode("overwrite").parquet(out)
-    val totals = scrubbed.agg(coalesce(sum("n_emails"), lit(0L)),
-      coalesce(sum("n_ips"), lit(0L)),
-      coalesce(sum("n_phones"), lit(0L))).head()
-    StepResult(Map("output_path" -> out,
-      "n_docs" -> ctx.spark.read.parquet(out).count(),
-      "n_emails" -> totals.getLong(0),
-      "n_ips" -> totals.getLong(1),
-      "n_phones" -> totals.getLong(2)))
+        .withColumnRenamed("clean", textCol), Seq(idCol)),
+      out, "n_docs" -> Counted.rows, "n_emails" -> sum("n_emails"),
+      "n_ips" -> sum("n_ips"), "n_phones" -> sum("n_phones"))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -356,12 +359,13 @@ object TextTermIndexPlugin extends StepPlugin {
     val indexPath = s"$outDir/inverted_index.parquet"
     TermIndex.tfidfTopK(docs, idCol, col(textCol), k)
       .write.mode("overwrite").parquet(topkPath)
-    TermIndex.invertedIndex(docs, idCol, col(textCol), n, maxPost)
-      .write.mode("overwrite").parquet(indexPath)
+    val c = Counted.write(
+      TermIndex.invertedIndex(docs, idCol, col(textCol), n, maxPost),
+      indexPath, "n_terms" -> Counted.rows)
     StepResult(Map(
       "term_topk_path" -> topkPath,
       "inverted_index_path" -> indexPath,
-      "n_terms" -> ctx.spark.read.parquet(indexPath).count(),
+      "n_terms" -> c("n_terms"),
       "n_docs" -> docs.count()))
   }
 }
@@ -374,6 +378,10 @@ object TextTermIndexPlugin extends StepPlugin {
   * Args: `input`, `benchmark_input`, `output_path` (surviving rows),
   * optional `flags_path` (the per-doc verdicts), `id_col` (doc_id),
   * `text_col` (text), `ngram` (default 8).
+  *
+  * Counters: `n_in` is the input's row count from its parquet footers
+  * (`flag` gives every input row one flag row), `n_kept` is observed
+  * on the write; `n_contaminated` is their difference.
   */
 object TextDecontaminatePlugin extends StepPlugin {
   val name = "text_decontaminate"
@@ -393,10 +401,12 @@ object TextDecontaminatePlugin extends StepPlugin {
     try {
       ctx.argOpt("flags_path").foreach(p =>
         flags.write.mode("overwrite").parquet(p.toString))
-      docs.join(flags.filter(col("keep")).select(col(idCol)), Seq(idCol))
-        .write.mode("overwrite").parquet(out)
-      val nIn = flags.count()
-      val nKept = ctx.spark.read.parquet(out).count()
+      val kept = Counted.write(
+        docs.join(flags.filter(col("keep")).select(col(idCol)),
+          Seq(idCol)),
+        out, "n_kept" -> Counted.rows)
+      val nIn = Counted.parquetRows(ctx.spark, in)
+      val nKept = kept("n_kept")
       StepResult(Map("output_path" -> out, "n_in" -> nIn,
         "n_kept" -> nKept, "n_contaminated" -> (nIn - nKept)))
     } finally flags.unpersist()
@@ -422,21 +432,20 @@ object TextContaminationScorePlugin extends StepPlugin {
     val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(8)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val bench = ctx.spark.read.parquet(ctx.argStr("benchmark_input"))
-    SpanDedup.contaminationScore(docs, bench, idCol, col(textCol), n)
-      .write.mode("overwrite").parquet(out)
-    val scores = ctx.spark.read.parquet(out)
+    val c = Counted.write(
+      SpanDedup.contaminationScore(docs, bench, idCol, col(textCol), n),
+      out, "n_scored" -> Counted.rows,
+      "n_flagged" -> sum(when(col("contamination") > 0, 1)))
     val extra = ctx.argOpt("max_contamination").map { t =>
       val thr = t.toString.toDouble
       val cleanPath = ctx.argStr("clean_path")
-      docs.join(scores.filter(col("contamination") <= thr)
-          .select(col(idCol)), Seq(idCol))
-        .write.mode("overwrite").parquet(cleanPath)
-      Map[String, Any]("clean_path" -> cleanPath,
-        "n_clean" -> ctx.spark.read.parquet(cleanPath).count())
+      val scores = ctx.spark.read.parquet(out)
+      Map[String, Any]("clean_path" -> cleanPath) ++ Counted.write(
+        docs.join(scores.filter(col("contamination") <= thr)
+          .select(col(idCol)), Seq(idCol)),
+        cleanPath, "n_clean" -> Counted.rows)
     }.getOrElse(Map.empty[String, Any])
-    StepResult(Map("output_path" -> out, "n_scored" -> scores.count(),
-      "n_flagged" -> scores.filter(col("contamination") > 0).count())
-      ++ extra)
+    StepResult(Map("output_path" -> out) ++ c ++ extra)
   }
 }
 
@@ -450,6 +459,10 @@ object TextContaminationScorePlugin extends StepPlugin {
   * `doc_id * 1024 + copy_idx`), `source_col` (source), `text_col`
   * (text; token count = whitespace tokens), `seq_len` (default 2048),
   * `buckets` (default 64).
+  *
+  * Counters: `n_docs` is observed on the write. `n_packs` is a
+  * distinct count, which an observation cannot compute, so it re-reads
+  * the output.
   */
 object TextPackPlugin extends StepPlugin {
   val name = "text_pack"
@@ -465,12 +478,13 @@ object TextPackPlugin extends StepPlugin {
     val seqLen = ctx.argOpt("seq_len").map(_.toString.toInt).getOrElse(2048)
     val buckets = ctx.argOpt("buckets").map(_.toString.toInt).getOrElse(64)
     val docs = ctx.spark.read.parquet(in)
-    SequencePack.pack(docs, id, col(srcCol),
-        size(TextStats.tokens(col(textCol))), seqLen, buckets)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_docs" -> res.count(),
-      "n_packs" -> res.select("source", "pack_id").distinct().count()))
+    val c = Counted.write(SequencePack.pack(docs, id, col(srcCol),
+        size(TextStats.tokens(col(textCol))), seqLen, buckets),
+      out, "n_docs" -> Counted.rows)
+    // a distinct count cannot be observed: it keeps its re-read
+    StepResult(Map("output_path" -> out, "n_docs" -> c("n_docs"),
+      "n_packs" -> ctx.spark.read.parquet(out)
+        .select("source", "pack_id").distinct().count()))
   }
 }
 
@@ -501,10 +515,10 @@ object TextCosinePairsPlugin extends StepPlugin {
     val occurrences = Fingerprint
       .explodedShingles(docs, idCol, col(textCol), n = n)
       .select(col(idCol).as("id"), col("sh").as("term"))
-    TermIndex.cosinePairs(occurrences, minCosine = minCos, maxDf = maxDf)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_pairs" -> res.count()))
+    val c = Counted.write(
+      TermIndex.cosinePairs(occurrences, minCosine = minCos, maxDf = maxDf),
+      out, "n_pairs" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -582,12 +596,12 @@ object TextClusterWeightsPlugin extends StepPlugin {
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val pairs = Dedup.ngramJaccardPairs(docs, idCol, col(textCol),
       n = n, minJaccard = minJ)
-    Components.memberWeights(docs, idCol, pairs, "doc_a", "doc_b")
-      .withColumnRenamed("id", idCol)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_docs" -> res.count(),
-      "n_clustered" -> res.filter(col("cluster_size") > 1).count()))
+    val c = Counted.write(
+      Components.memberWeights(docs, idCol, pairs, "doc_a", "doc_b")
+        .withColumnRenamed("id", idCol),
+      out, "n_docs" -> Counted.rows,
+      "n_clustered" -> sum(when(col("cluster_size") > 1, 1)))
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -611,10 +625,10 @@ object TextTopicPairsPlugin extends StepPlugin {
     val minSupport = ctx.argOpt("min_support").map(_.toString.toLong)
       .getOrElse(5L)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
-    TermIndex.topicCooccurrence(docs, idCol, col(textCol), k, minSupport)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_pairs" -> res.count()))
+    val c = Counted.write(
+      TermIndex.topicCooccurrence(docs, idCol, col(textCol), k, minSupport),
+      out, "n_pairs" -> Counted.rows)
+    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -636,10 +650,10 @@ object TextGroupSamplePlugin extends StepPlugin {
     val grpCol = ctx.argOpt("group_col").map(_.toString).getOrElse("source")
     val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(20)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
-    Sample.fixedPerGroup(docs, col(idCol), col(grpCol), k)
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    StepResult(Map("output_path" -> out, "n_sampled" -> res.count(),
-      "n_groups" -> res.select(grpCol).distinct().count()))
+    val c = Counted.write(Sample.fixedPerGroup(docs, col(idCol), col(grpCol), k),
+      out, "n_sampled" -> Counted.rows)
+    StepResult(Map("output_path" -> out, "n_sampled" -> c("n_sampled"),
+      "n_groups" -> ctx.spark.read.parquet(out)
+        .select(grpCol).distinct().count()))
   }
 }
