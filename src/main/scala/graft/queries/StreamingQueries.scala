@@ -2,11 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{QueryGroup, Tables}
 import graft.functions.Exact
-import graft.streaming.StreamOps
+import graft.streaming.{NioLocalFileSystem, StreamOps}
 
 /** The streaming surface (SURVEY §2.9) under the driver's DuckDB oracle.
   *
@@ -66,13 +67,33 @@ object StreamingQueries extends QueryGroup {
     * drains would otherwise pay nine times; concurrent streams on one
     * session are a supported first-class shape (each query has its own
     * checkpoint + run id). At real scale the caller sizes the
-    * partition count up like any shuffle. */
+    * partition count up like any shuffle.
+    *
+    * The other three settings keep the drain from starting processes.
+    * Without libhadoop, Hadoop forks one shell process per checkpoint
+    * rename and one per file or directory created with a permission:
+    *  - the default `FileContextBasedCheckpointFileManager` renames
+    *    through `FileContext`, whose link check forks `readlink` on
+    *    every rename; `FileSystemBasedCheckpointFileManager` renames
+    *    through `FileSystem` and forks none;
+    *  - `RawLocalFileSystem.setPermission` forks `chmod`;
+    *    [[graft.streaming.NioLocalFileSystem]] sets the same bits
+    *    through `java.nio`. Hadoop caches one `file:` filesystem per
+    *    scheme, authority and user, and the outer session has already
+    *    cached the stock one, so the sub-session bypasses the cache.
+    *
+    * Measured on one cold 18-member drain (4 cpus, no libhadoop): 3,488
+    * `readlink` and 1,335 `chmod` launches before, none and 18 after. */
   private val subSessions =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def streamSession(spark: SparkSession): SparkSession =
+  private[queries] def streamSession(spark: SparkSession): SparkSession =
     subSessions.computeIfAbsent(spark, s => {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
+      ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      ss.conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      ss.conf.set("fs.file.impl.disable.cache", "true")
       ss
     })
 
@@ -471,6 +492,11 @@ object StreamingQueries extends QueryGroup {
   private val byName: Map[String, Member] =
     members.map(m => m.name -> m).toMap
 
+  /** Per outer session, the queries a filtered battery runs (see
+    * [[scopeDrains]]); a session without an entry drains every member. */
+  private val scopes =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Set[String]]()
+
   /** The generation registry. All group state is guarded by one lock:
     * drains are serialized anyway (a drain IS the expensive section),
     * and concurrent first-callers of one generation simply block until
@@ -492,20 +518,17 @@ object StreamingQueries extends QueryGroup {
     private[queries] val drainNanos =
       new java.util.concurrent.atomic.AtomicLong
 
-    /** The member subset this JVM's battery runs: a filtered battery
-      * (SPARK_GRAFT_ONLY — the Bench/Verify iteration aid) must not
-      * drain 17 siblings nobody will read. The requested member is
-      * always included. */
-    private def scoped(requested: Option[String]): Seq[Member] = {
-      val only = sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      only match {
+    /** The member subset a session's battery runs: a filtered battery
+      * (see [[scopeDrains]]) must not drain 17 siblings nobody will
+      * read. The requested member is always included. */
+    private def scoped(spark: SparkSession,
+                       requested: Option[String]): Seq[Member] =
+      Option(scopes.get(spark)) match {
         case None => members
         case Some(names) =>
           members.filter(m => names.contains(m.name) ||
             requested.contains(m.name))
       }
-    }
 
     /** CALLER CONTRACT (generation retention): the returned DataFrame
       * is LAZY and reads this generation's committed sink files. Those
@@ -541,7 +564,7 @@ object StreamingQueries extends QueryGroup {
       lock.synchronized {
         val key = (spark, dir)
         val st = newGeneration(spark, dir, states.get(key), None)
-        st.consumed ++= scoped(None).map(_.name)
+        st.consumed ++= scoped(spark, None).map(_.name)
       }
 
     /** Stage shared sources once, start every scoped member's drain,
@@ -560,7 +583,7 @@ object StreamingQueries extends QueryGroup {
         sys.props("java.io.tmpdir"), s"graft_streams_g${gen}_$safe")
       rmTree(base.toFile)
       java.nio.file.Files.createDirectories(base)
-      val ms = scoped(requested)
+      val ms = scoped(spark, requested)
       // resolve batch schemas BEFORE the parallel launches: Tables.load
       // caches per (session, path) — dir-correct by construction — and
       // warming it here keeps 18 launch threads off its cache lock
@@ -613,6 +636,12 @@ object StreamingQueries extends QueryGroup {
       st
     }
   }
+
+  /** Restrict `spark`'s later generations to the stream members named
+    * in `queries` (other names are ignored): the hook for a filtered
+    * battery, such as Bench's and Verify's `SPARK_GRAFT_ONLY` list. */
+  def scopeDrains(spark: SparkSession, queries: Set[String]): Unit =
+    scopes.put(spark, queries)
 
   /** Pre-drain one full generation and mark it consumed — the Bench
     * warmup hook (see [[DrainGroup.warmupAll]]). */

@@ -153,6 +153,18 @@ object WebDownloadPlugin extends StepPlugin {
   private def etagSidecar(target: Path): Path =
     target.resolveSibling("." + target.getFileName.toString + ".etag")
 
+  /** Write `target` through a hidden sibling (`.name.part`) that is
+    * moved into place only once `write` returns: an interrupted
+    * download leaves no target, so the next run fetches it again. */
+  private def stageThenMove(target: Path)(write: Path => Unit): Unit = {
+    val part =
+      target.resolveSibling("." + target.getFileName.toString + ".part")
+    try {
+      write(part)
+      Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(part)
+  }
+
   private def fetch(url: String, target: Path, timeoutMs: Int,
                     conditional: Boolean): FetchOutcome = {
     val uri = URI.create(url)
@@ -162,7 +174,8 @@ object WebDownloadPlugin extends StepPlugin {
         !Files.getLastModifiedTime(src)
           .toInstant.isAfter(Files.getLastModifiedTime(target).toInstant))
         return NotModified
-      Files.copy(src, target, StandardCopyOption.REPLACE_EXISTING)
+      stageThenMove(target)(
+        Files.copy(src, _, StandardCopyOption.REPLACE_EXISTING))
       Fetched
     } else try {
       val conn = uri.toURL.openConnection()
@@ -184,8 +197,14 @@ object WebDownloadPlugin extends StepPlugin {
       if (conn.getResponseCode == 304) { conn.disconnect(); NotModified }
       else {
         val in = conn.getInputStream
-        try Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
-        finally in.close()
+        try stageThenMove(target) { part =>
+          val n = Files.copy(in, part, StandardCopyOption.REPLACE_EXISTING)
+          // the JDK client ends a fixed-length body at a dropped
+          // connection without an error: compare the length it promised
+          val promised = conn.getContentLengthLong
+          if (promised >= 0 && n != promised) throw new java.io.IOException(
+            s"$url: connection closed after $n of $promised bytes")
+        } finally in.close()
         Option(conn.getHeaderField("ETag")) match {
           case Some(tag) => Files.writeString(etagFile, tag)
           case None => Files.deleteIfExists(etagFile) // stale validator

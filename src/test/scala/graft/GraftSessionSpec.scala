@@ -30,13 +30,11 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(offenders == Seq("src/main/scala/graft/GraftSession.scala"))
   }
 
-  test("query definitions read no env var but the SPARK_GRAFT_ONLY scope") {
+  test("query definitions read no env var") {
     // an env knob inside a query definition makes its plan depend on
-    // the caller's shell; the battery filter is the one named exception
-    val reads = linesWith("sys.env", "src/main/scala/graft/queries")
-    assert(reads == Seq(
-      ("src/main/scala/graft/queries/StreamingQueries.scala",
-        "val only = sys.env.get(\"SPARK_GRAFT_ONLY\")")))
+    // the caller's shell; a filtered battery passes its scope in
+    // (StreamingQueries.scopeDrains)
+    assert(linesWith("sys.env", "src/main/scala/graft/queries").isEmpty)
   }
 
   test("the spec session keeps Spark's broadcast threshold, 4 " +

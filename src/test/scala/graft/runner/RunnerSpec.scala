@@ -936,6 +936,57 @@ class RunnerSpec extends SparkSpecBase {
     } finally srv.stop(0)
   }
 
+  test("a download cut off mid-body leaves no target; the next run fetches") {
+    // the server promises more bytes than it sends, then closes: the
+    // client sees a premature EOF after part of the body
+    val truncate = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val body = "0123456789".getBytes
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/data.txt", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.getResponseHeaders.set("ETag", "tag-v1")
+      if (truncate.get()) {
+        ex.sendResponseHeaders(200, body.length * 10L)
+        ex.getResponseBody.write(body)
+        ex.getResponseBody.flush()
+      } else {
+        ex.sendResponseHeaders(200, body.length.toLong)
+        ex.getResponseBody.write(body)
+      }
+      ex.close()
+    })
+    srv.start()
+    try {
+      val url = s"http://127.0.0.1:${srv.getAddress.getPort}/data.txt"
+      // plain and conditional fetches: the offline-grace catch of a
+      // conditional fetch must not keep a cut-off first download either
+      Seq(false, true).foreach { conditional =>
+        truncate.set(true)
+        val root = tmpDir()
+        val p = write(root, "cut.yml",
+          s"""steps:
+             |  - plugin: web_download_list
+             |    args:
+             |      url: "$url"
+             |      out: "{env.basedir}/staged"
+             |      conditional_get: $conditional
+             |""".stripMargin)
+        val target = root.resolve("staged/data.txt")
+        intercept[Exception] { runner(root).runFile(p) }
+        assert(!Files.exists(target), s"conditional=$conditional")
+        val staged = Files.list(root.resolve("staged"))
+        try assert(staged.count() == 0, "no staging file or ETag is left")
+        finally staged.close()
+        truncate.set(false)
+        val fields = runner(root).runFile(p).results.head.fields
+        assert(fields("n_fetched") == 1, s"conditional=$conditional")
+        assert(Files.readAllBytes(target).sameElements(body))
+        assert(Files.readString(root.resolve("staged/.data.txt.etag")) ==
+          "tag-v1")
+      }
+    } finally srv.stop(0)
+  }
+
   test("archive_extract + gzip_extract round-trip with ** glob (S4/S5)") {
     val root = tmpDir()
     // build a zip and a gz under nested dirs
