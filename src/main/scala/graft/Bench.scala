@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -64,7 +66,7 @@ object Bench {
       spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         // fatal errors (OutOfMemoryError, …) kill the run, as in
         // timedWarmup below: a poisoned JVM must not emit a window
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -91,7 +93,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { CoreWarmup.run(spark, sfDir, only)
         (true, (System.nanoTime() - t0) / 1e9, "") }
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         // Fatal errors (OutOfMemoryError, …) are NOT swallowed: a
         // battery measured on a poisoned JVM would be emitted as a
         // normal-looking window. Let them kill the run.
@@ -109,16 +111,7 @@ object Bench {
     // cores idle, and inter-query parallelism is how an engine actually
     // serves a workload. Per-query numbers below are latencies UNDER
     // that concurrency, so their sum exceeds the wall time.
-    val workers = sys.env.get("SPARK_GRAFT_BENCH_WORKERS") match {
-      case Some(v) =>
-        val n = try v.toInt catch {
-          case _: NumberFormatException =>
-            sys.error(s"SPARK_GRAFT_BENCH_WORKERS must be an integer, got '$v'")
-        }
-        math.max(1, n)
-      case None =>
-        math.max(2, Runtime.getRuntime.availableProcessors() / 2)
-    }
+    val workers = math.max(2, Runtime.getRuntime.availableProcessors() / 2)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
     import scala.jdk.CollectionConverters._
     val tasks = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -461,7 +454,7 @@ private object CoreWarmup {
     graft.Tables.names.foreach { t =>
       try graft.Tables.load(spark, sfDir, t).write.format("noop")
         .mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // Compile the exact-decimal + percentile aggregate paths on a
     // 1000-row slice (judge r12 ask #1): the generated code for an
@@ -482,20 +475,20 @@ private object CoreWarmup {
         Seq("l_suppkey", "ship_day"),
         col("l_extendedprice"), lit(1.0) - col("l_discount"), "wavg")
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // materialize the shared shingle cache (three dedup queries consume
     // the same persisted InMemoryRelation; racing its first
     // materialization mid-measurement duplicates the work)
     if (selected(pairCacheConsumers)) {
       try graft.queries.TextQueries.dedupJaccard(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       // …and the shared J≥0.5 candidate-pair cache: dedup_components and
       // edit_distance both consume it; generating it once here keeps pair
       // generation off both measured critical paths
       try graft.queries.TextQueries.candidatePairs(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // one full streaming GROUP drain (all sinks concurrently, marked
     // consumed): StreamExecution machinery, state-store providers,
@@ -508,7 +501,7 @@ private object CoreWarmup {
     if (selected(graft.SparkEntry.queries.keySet
         .filter(_.startsWith("stream_")).toSet)) {
       try graft.queries.StreamingQueries.warmupDrains(spark, sfDir)
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case NonFatal(_) => () }
     }
   }
 }

@@ -16,25 +16,11 @@ import graft.functions.{ArrayCountInSetExpr, DotProductExpr, PlaneProjectExpr}
   *    (driver-owned sessions we don't construct, e.g. notebook envs).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "cosine_sim"),
-      GraftExtensions.cosineBuilder))
-    e.injectFunction((
-      FunctionIdentifier("count_in_set"),
-      new ExpressionInfo(classOf[ArrayCountInSetExpr].getName,
-        "count_in_set"),
-      GraftExtensions.countInSetBuilder))
-    e.injectFunction((
-      FunctionIdentifier("plane_project"),
-      new ExpressionInfo(classOf[PlaneProjectExpr].getName, "plane_project"),
-      GraftExtensions.planeProjectBuilder))
-  }
+  def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }
 
 object GraftExtensions {
@@ -73,14 +59,20 @@ object GraftExtensions {
       PlaneProjectExpr(exprs.head, k.eval().asInstanceOf[Number].intValue())
     }
 
-  def register(spark: SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "dot_product", exprs => DotProductExpr(exprs(0), exprs(1)))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "cosine_sim", cosineBuilder)
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "count_in_set", countInSetBuilder)
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "plane_project", planeProjectBuilder)
-  }
+  /** Every SQL function: its name, the expression class its
+    * `ExpressionInfo` names, and its builder. Both registration paths
+    * read this one table. */
+  private[graft] val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProductExpr],
+      exprs => DotProductExpr(exprs(0), exprs(1))),
+    ("cosine_sim", classOf[DotProductExpr], cosineBuilder),
+    ("count_in_set", classOf[ArrayCountInSetExpr], countInSetBuilder),
+    ("plane_project", classOf[PlaneProjectExpr], planeProjectBuilder))
+
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.Bridge.registerFunction(
+        spark, name, builder)
+    }
 }

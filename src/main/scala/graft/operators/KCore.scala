@@ -160,14 +160,9 @@ object KCore {
       back
     }
     def diskRetire(frames: Seq[DataFrame]): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
       frames.foreach { f =>
         Option(spillOf.remove(f)) match {
-          case Some(d) => rm(d)
+          case Some(d) => graft.Scratch.deleteTree(d)
           case None => f.unpersist() // e.g. the non-pinned degree persist
         }
       }

@@ -285,14 +285,8 @@ object Triangles {
     val spark = eRaw.sparkSession
     val root = new java.io.File(dir)
     root.mkdirs()
-    def rm(name: String): Unit = {
-      def go(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles()).foreach(_.foreach(go))
-        f.delete()
-      }
-      go(new java.io.File(root, name))
-    }
+    def rm(name: String): Unit =
+      graft.Scratch.deleteTree(new java.io.File(root, name))
     def pin(df: DataFrame, name: String,
             partitionCols: Seq[String] = Nil): DataFrame = {
       val d = new java.io.File(root, name)

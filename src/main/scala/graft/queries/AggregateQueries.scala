@@ -138,22 +138,13 @@ object AggregateQueries extends QueryGroup {
     * across the write→store→read cycle. */
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.runner.plugins.JdbcWritePlugin
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_jdbcdb_$safe")
-    val db = root.resolve("db")
     // fresh store per invocation: shut the (possibly still-booted)
     // engine instance down first — deleting a booted Derby db corrupts
     // the next create (shutdown=true always signals via SQLException)
+    val db = graft.Scratch.root(spark, dir, "jdbcdb").resolve("db")
     try java.sql.DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true")
     catch { case _: java.sql.SQLException => () }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(root.toFile)
-    java.nio.file.Files.createDirectories(root)
+    graft.Scratch.fresh(spark, dir, "jdbcdb")
     val url = s"jdbc:derby:$db;create=true"
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -212,16 +203,7 @@ object AggregateQueries extends QueryGroup {
     * concurrency would otherwise abort racing same-table appends. */
   def duckdbRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.runner.plugins.JdbcWritePlugin
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_duckdb_$safe")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(root.toFile)
-    java.nio.file.Files.createDirectories(root)
+    val root = graft.Scratch.fresh(spark, dir, "duckdb")
     val url = s"jdbc:duckdb:${root.resolve("store.duckdb")}"
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -250,15 +232,7 @@ object AggregateQueries extends QueryGroup {
     * partitions holding their rows rewrite — byte-identity of untouched
     * files is pinned in PlanShapeSpec), read the survivors back. */
   def targetedDelete(spark: SparkSession, dir: String): DataFrame = {
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_tdel_$safe")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(root.toFile)
+    val root = graft.Scratch.fresh(spark, dir, "tdel")
     val path = root.resolve("events").toString
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
@@ -279,15 +253,7 @@ object AggregateQueries extends QueryGroup {
     * surface the new column as NULL, the contract an append-only 100 TB
     * lake lives on. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_sevo_$safe")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(root.toFile)
+    val root = graft.Scratch.fresh(spark, dir, "sevo")
     val path = root.resolve("docs").toString
     val d = Tables.documents(spark, dir)
     d.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
@@ -307,15 +273,7 @@ object AggregateQueries extends QueryGroup {
     * is the full recompute: incremental maintenance must be
     * indistinguishable from it. */
   def incrementalRollup(spark: SparkSession, dir: String): DataFrame = {
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_incr_$safe")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(root.toFile)
+    val root = graft.Scratch.fresh(spark, dir, "incr")
     val path = root.resolve("rollup").toString
     val ev = Tables.events(spark, dir)
       .select(col("ts").cast("date").as("day"), col("event_type"),

@@ -1,11 +1,14 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.Callable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{QueryGroup, Tables}
+import graft.{QueryGroup, Scratch, Tables}
 import graft.functions.Exact
 import graft.streaming.{NioLocalFileSystem, StreamOps}
 
@@ -97,11 +100,9 @@ object StreamingQueries extends QueryGroup {
       ss
     })
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-  }
+  /** Where a generation stages `table` for its file-stream sources. */
+  private def stageDir(base: Path, table: String): Path =
+    base.resolve(s"in_$table")
 
   /** Stage a table's data files into `stage` for a file-stream source
     * (the source watches a DIRECTORY — exactly the reference's
@@ -112,251 +113,275 @@ object StreamingQueries extends QueryGroup {
     * Staged ONCE per generation and shared by every member
     * watching that table: a file-stream source dir is read-only input,
     * and each member's checkpoint tracks its own offsets into it. */
-  private def stageTable(dir: String, table: String,
-                         stage: java.nio.file.Path): Unit = {
-    java.nio.file.Files.createDirectories(stage)
-    val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
-    if (java.nio.file.Files.isDirectory(src)) {
+  private def stageTable(dir: String, table: String, stage: Path): Unit = {
+    Files.createDirectories(stage)
+    val src = Paths.get(s"$dir/$table.parquet")
+    if (Files.isDirectory(src)) {
       val parts = src.toFile.listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       require(parts.nonEmpty, s"no parquet part files under $src")
-      parts.foreach(f => java.nio.file.Files.copy(
-        f.toPath, stage.resolve(f.getName)))
+      parts.foreach(f => Files.copy(f.toPath, stage.resolve(f.getName)))
     } else {
-      java.nio.file.Files.copy(src, stage.resolve(s"$table.parquet"))
+      Files.copy(src, stage.resolve(s"$table.parquet"))
     }
   }
 
-  /** The staged event stream, normalized: ns-timestamp → TimestampType
-    * (same as Tables.events) and `value` pre-cast to decimal(30,10) so
-    * the streamed sums are order-independent ([[Exact]]). */
-  private def eventStream(spark: SparkSession, dir: String,
-                          base: java.nio.file.Path): DataFrame = {
-    val ss = streamSession(spark)
-    // file-source streams cannot infer schemas: reuse the batch read's
-    // — resolved on the OUTER session via Tables.load, whose cache is
-    // keyed (session, path) and therefore DIR-correct: a second corpus
-    // on the same session resolves its own schema, not the first
-    // one's (keying on the sub-session would re-read footers per table)
-    val schema = Tables.load(spark, dir, "events").schema
-    val raw = StreamOps.fileStream(ss, base.resolve("in_events").toString,
-      schema)
-    Tables.normalizeEventTs(raw)
-      .withColumn("value", col("value").cast(Exact.DecimalT))
+  /** What a member's prep gets: the caller's session, the stream
+    * sub-session, the dataset dir, the generation root and the
+    * member's own sink path. */
+  private final case class Ctx(spark: SparkSession, ss: SparkSession,
+                               dir: String, base: Path, out: String) {
+    /** The generation's staged copy of `table` as a file stream on the
+      * sub-session. File-source streams cannot infer schemas, so the
+      * batch read's is reused — resolved on the OUTER session via
+      * Tables.load, whose cache is keyed (session, path) and therefore
+      * DIR-correct: a second corpus on the same session resolves its own
+      * schema, not the first one's (keying on the sub-session would
+      * re-read footers per table). */
+    def staged(table: String): DataFrame =
+      StreamOps.fileStream(ss, stageDir(base, table).toString,
+        Tables.load(spark, dir, table).schema)
+
+    /** The staged event stream, normalized: ns-timestamp → TimestampType
+      * (same as Tables.events) and `value` pre-cast to decimal(30,10) so
+      * the streamed sums are order-independent ([[Exact]]). */
+    def events: DataFrame =
+      Tables.normalizeEventTs(staged("events"))
+        .withColumn("value", col("value").cast(Exact.DecimalT))
   }
 
-  private def docStream(spark: SparkSession, dir: String,
-                        base: java.nio.file.Path): DataFrame = {
-    val ss = streamSession(spark)
-    StreamOps.fileStream(ss, base.resolve("in_documents").toString,
-      Tables.load(spark, dir, "documents").schema)
-  }
+  /** A member's streaming DataFrame tagged with its sink, which the
+    * drain group starts into the member's `out` with its own checkpoint:
+    * an append-mode parquet file sink, an update-mode drain (each
+    * micro-batch's revised rows appended through foreachBatch; the
+    * read-back recovers the final state), or a keyed merge of each
+    * micro-batch into the dataset the prep seeded at `out`. */
+  private sealed trait Drain
+  private final case class Append(df: DataFrame) extends Drain
+  private final case class Update(df: DataFrame) extends Drain
+  private final case class Merge(df: DataFrame, keys: Seq[String])
+      extends Drain
 
   /** One streaming correctness pipeline: which shared staged tables it
-    * reads, how to build its drain, how to read its sink back.
+    * reads, its prep, and how its query result reads back.
     *
-    * `launch` runs the member's PREP — static-side batch work (bloom
-    * bits, IVF centroid training, the CDC seed write) plus building the
-    * streaming DataFrame — and returns a thunk that `.start()`s the
-    * drain. Two phases matter: prep jobs that run concurrently with 17
-    * already-started drains queue behind their micro-batches (measured:
-    * IVF's train took 7.3 s on the drain's critical path vs ~1 s with
-    * the box to itself), so the group runs every prep first, THEN
-    * starts all drains together. */
-  private final case class Member(
-      name: String,
-      tables: Set[String],
-      launch: (SparkSession, String, java.nio.file.Path)
-        => () => StreamingQuery,
-      read: (SparkSession, java.nio.file.Path) => DataFrame) {
-    def out(base: java.nio.file.Path): String =
-      base.resolve(name).resolve("out").toString
-    def ckpt(base: java.nio.file.Path): String =
-      base.resolve(name).resolve("ckpt").toString
-  }
+    * `prep` runs the member's static-side batch work (bloom bits, IVF
+    * centroid training, the CDC seed write) and builds the streaming
+    * DataFrame. Two phases matter: prep jobs that run concurrently with
+    * 17 already-started drains queue behind their micro-batches
+    * (measured: IVF's train took 7.3 s on the drain's critical path vs
+    * ~1 s with the box to itself), so the group runs every prep first,
+    * THEN starts all drains together. `read` shapes
+    * `spark.read.parquet(out)` into the result. */
+  private final case class Member(name: String, tables: Set[String],
+                                  prep: Ctx => Drain,
+                                  read: DataFrame => DataFrame = identity)
 
-  // ---------------------------------------------------------------- //
-  //  Members. Each launch/read pair is the exact pipeline the former  //
-  //  standalone query ran; scaladocs preserved on the public defs.    //
-  // ---------------------------------------------------------------- //
-
-  private val memDaily: Member = Member("stream_daily_agg", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val agg = StreamOps.tumblingDailyAgg(evs, "ts", "event_type", "value",
-        watermark = "0 seconds")
-      () => StreamOps.startParquetSink(agg, memDaily.out(base), memDaily.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memDaily.out(base))
-        .select(to_date(col("day_start")).as("day"), col("event_type"),
-          col("n"),
-          col("total").cast("double").as("total"),
-          (col("total").cast("double") / col("n")).as("mean")))
-
-  private val memSliding: Member = Member("stream_sliding_sum", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val agg = StreamOps.slidingSum(evs, "ts", "event_type", "value",
-        windowDays = 7, watermark = "0 seconds")
-      () => StreamOps.startParquetSink(agg, memSliding.out(base),
-        memSliding.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memSliding.out(base))
-        .select(to_date(col("window_start")).as("window_start"),
-          to_date(col("window_end")).as("window_end"), col("event_type"),
-          col("total").cast("double").as("total")))
-
-  private val memSession: Member = Member("stream_session_agg", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val agg = StreamOps.sessionAgg(evs, "ts", "user_id", "value",
-        gap = "30 minutes", watermark = "0 seconds")
-      () => StreamOps.startParquetSink(agg, memSession.out(base),
-        memSession.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memSession.out(base))
-        .select(col("user_id"),
-          expr("unix_micros(session_start) div 1000").as("start_ms"),
-          expr("unix_micros(session_end) div 1000").as("end_ms"),
-          col("n"),
-          col("total").cast("double").as("total")))
-
-  private def joinSides(spark: SparkSession, dir: String,
-                        base: java.nio.file.Path)
-      : (DataFrame, DataFrame) = {
-    val evs = eventStream(spark, dir, base)
+  /** Clicks and same-user purchases at most an hour later, as a
+    * watermarked stream-stream interval join with epoch-ms times. */
+  private def clickToPurchase(ctx: Ctx, watermark: String,
+                              joinType: String): DataFrame = {
+    val evs = ctx.events
     def side(t: String) = evs.filter(col("event_type") === t)
       .select(col("user_id"), col("event_id"), col("ts"))
-    (side("click"), side("purchase"))
+    val joined = StreamOps.intervalJoin(side("click"), side("purchase"),
+      "user_id", "ts", "ts", maxDelay = "1 hour", watermark = watermark,
+      joinType = joinType)
+    val user =
+      if (joinType == "full_outer") coalesce(col("user_id"), col("r_user_id"))
+      else col("user_id")
+    joined.select(user.as("user_id"),
+      col("event_id").as("click_id"),
+      expr("unix_micros(ts) div 1000").as("click_ms"),
+      col("r_event_id").as("purchase_id"),
+      expr("unix_micros(r_ts) div 1000").as("purchase_ms"))
   }
 
-  private val memIJoin: Member = Member("stream_interval_join",
-    Set("events"),
-    launch = (spark, dir, base) => {
-      val (c, p) = joinSides(spark, dir, base)
-      val joined = StreamOps.intervalJoin(c, p,
-        "user_id", "ts", "ts", maxDelay = "1 hour")
-      val out = joined.select(col("user_id"),
-        col("event_id").as("click_id"),
-        expr("unix_micros(ts) div 1000").as("click_ms"),
-        col("r_event_id").as("purchase_id"),
-        expr("unix_micros(r_ts) div 1000").as("purchase_ms"))
-      () => StreamOps.startParquetSink(out, memIJoin.out(base), memIJoin.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memIJoin.out(base)))
+  // ---------------------------------------------------------------- //
+  //  Members. Each prep/read pair is the exact pipeline the former    //
+  //  standalone query ran; the scaladocs state each oracle contract.  //
+  // ---------------------------------------------------------------- //
 
-  private val memOJoin: Member = Member("stream_outer_join", Set("events"),
-    launch = (spark, dir, base) => {
-      val (c, p) = joinSides(spark, dir, base)
-      val joined = StreamOps.intervalJoin(c, p,
-        "user_id", "ts", "ts", maxDelay = "1 hour",
-        watermark = "0 seconds", joinType = "left_outer")
-      val out = joined.select(col("user_id"),
-        col("event_id").as("click_id"),
-        expr("unix_micros(ts) div 1000").as("click_ms"),
-        col("r_event_id").as("purchase_id"),
-        expr("unix_micros(r_ts) div 1000").as("purchase_ms"))
-      () => StreamOps.startParquetSink(out, memOJoin.out(base), memOJoin.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memOJoin.out(base)))
+  private val members: Seq[Member] = Seq(
+    /** Tumbling per-day aggregate per event_type, streamed: readStream →
+      * [[StreamOps.tumblingDailyAgg]] → checkpointed parquet sink
+      * (AvailableNow) → read back. Mean is derived from the exact sum at
+      * read-back with one double division, matching the oracle's davg
+      * form. */
+    Member("stream_daily_agg", Set("events"),
+      prep = ctx => Append(StreamOps.tumblingDailyAgg(ctx.events, "ts",
+        "event_type", "value", watermark = "0 seconds")),
+      read = _.select(to_date(col("day_start")).as("day"),
+        col("event_type"), col("n"),
+        col("total").cast("double").as("total"),
+        (col("total").cast("double") / col("n")).as("mean"))),
 
-  private val memFOJoin: Member = Member("stream_full_outer_join",
-    Set("events"),
-    launch = (spark, dir, base) => {
-      val (c, p) = joinSides(spark, dir, base)
-      val joined = StreamOps.intervalJoin(c, p,
-        "user_id", "ts", "ts", maxDelay = "1 hour",
-        watermark = "0 seconds", joinType = "full_outer")
-      val out = joined.select(
-        coalesce(col("user_id"), col("r_user_id")).as("user_id"),
-        col("event_id").as("click_id"),
-        expr("unix_micros(ts) div 1000").as("click_ms"),
-        col("r_event_id").as("purchase_id"),
-        expr("unix_micros(r_ts) div 1000").as("purchase_ms"))
-      () => StreamOps.startParquetSink(out, memFOJoin.out(base),
-        memFOJoin.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memFOJoin.out(base)))
+    /** Sliding 7-day/1-day window sums, streamed — the streaming form of
+      * W1's trailing rolling sums, under the same AvailableNow drain
+      * harness. Append emission holds back every window whose end lies
+      * beyond the final watermark; the oracle regenerates the slide grid
+      * (epoch-aligned daily starts, 7 per event) and applies the same
+      * end-≤-max-day cutoff. */
+    Member("stream_sliding_sum", Set("events"),
+      prep = ctx => Append(StreamOps.slidingSum(ctx.events, "ts",
+        "event_type", "value", windowDays = 7, watermark = "0 seconds")),
+      read = _.select(to_date(col("window_start")).as("window_start"),
+        to_date(col("window_end")).as("window_end"), col("event_type"),
+        col("total").cast("double").as("total"))),
 
-  private val memDedup: Member = Member("stream_dedup_keys", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val deduped = StreamOps.dedupedStream(
-        evs.select(col("ts"), col("user_id"), col("event_type")),
-        "ts", idCol = "user_id", watermark = "1 day")
-      () => StreamOps.startParquetSink(deduped.select(col("user_id")),
-        memDedup.out(base), memDedup.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memDedup.out(base)))
+    /** Session windows, streamed — the third windowed form under the
+      * drain harness. Spark merges two events into one session iff their
+      * gap is STRICTLY less than the gap duration (windows are
+      * half-open), and a session's end is last-event + gap; the oracle's
+      * gaps-and-islands uses the same strict rule and the same
+      * end-≤-max-event cutoff for append emission. Timestamps emitted as
+      * epoch ms (never raw ts — ns/µs mismatch across engines). */
+    Member("stream_session_agg", Set("events"),
+      prep = ctx => Append(StreamOps.sessionAgg(ctx.events, "ts",
+        "user_id", "value", gap = "30 minutes", watermark = "0 seconds")),
+      read = _.select(col("user_id"),
+        expr("unix_micros(session_start) div 1000").as("start_ms"),
+        expr("unix_micros(session_end) div 1000").as("end_ms"),
+        col("n"),
+        col("total").cast("double").as("total"))),
 
-  private val memQuality: Member = Member("stream_quality_filter",
-    Set("documents"),
-    launch = (spark, dir, base) => {
-      val docs = docStream(spark, dir, base)
-      val scored = TextQueries.qualityVerdict(docs)
-      () => StreamOps.startParquetSink(scored, memQuality.out(base),
-        memQuality.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memQuality.out(base)))
+    /** Watermarked stream-stream interval join (the attribution shape:
+      * purchase ≤ 1 h after a same-user click), drained. A streaming
+      * INNER join emits each pair the moment both rows are present —
+      * watermarks only bound retained state, never hold back matches —
+      * so a full AvailableNow drain equals the batch join exactly and
+      * the oracle is the plain interval-join SQL, no cutoff needed. */
+    Member("stream_interval_join", Set("events"),
+      prep = ctx => Append(clickToPurchase(ctx, "1 day", "inner"))),
 
-  private val memBloom: Member = Member("stream_bloom_probe",
-    Set("documents"),
-    launch = (spark, dir, base) => {
-      val ss = streamSession(spark)
-      // bounded collect: a build() result is ≤ m = 4096 position ints
-      val bits = graft.operators.Bloom.build(
-          ss.read.parquet(s"$dir/documents.parquet")
-            .filter(col("doc_id") % 19 === 0), col("text"), k = 4, m = 4096)
-        .collect().map(_.getInt(0)).toSeq
-      val docs = docStream(spark, dir, base)
-      val out = docs.select(col("doc_id"),
-        graft.operators.Bloom.memberExpr(col("text"), bits, k = 4, m = 4096)
-          .cast("int").as("maybe_member"))
-      () => StreamOps.startParquetSink(out, memBloom.out(base), memBloom.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memBloom.out(base)))
+    /** Watermarked stream-stream LEFT OUTER interval join, drained: the
+      * attribution shape again, but clicks with NO purchase within the
+      * hour surface as null-augmented rows — the unconverted-traffic side
+      * an inner join silently drops. Outer emission is watermark-GATED:
+      * a null row may only emit once the watermark proves no matching
+      * purchase can still arrive (left-state eviction), so the drain's
+      * final `maxDelay` of unmatched clicks stays in state and is absent
+      * from the sink. That gate is deterministic — watermark delay 0, so
+      * the final watermark is min(max click ts, max purchase ts) over the
+      * drained input (each side's watermark node sits after its filter),
+      * Spark tracks it in WHOLE MILLISECONDS — and the oracle reproduces
+      * exactly it: matched rows unconditionally, unmatched clicks iff
+      * click_ms + 1 h < watermark_ms. */
+    Member("stream_outer_join", Set("events"),
+      prep = ctx => Append(clickToPurchase(ctx, "0 seconds", "left_outer"))),
 
-  private val memGSample: Member = Member("stream_group_sample",
-    Set("documents"),
-    launch = (spark, dir, base) => {
-      val ss = streamSession(spark)
-      val docs = docStream(spark, dir, base)
-      val agg = StreamOps.boundedGroupSample(ss, docs, "source", "doc_id",
-        k = 20)
-      () => StreamOps.startParquetSinkUpdates(agg, memGSample.out(base),
-        memGSample.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memGSample.out(base))
-        .groupBy("source")
+    /** FULL OUTER stream-stream interval join, drained: both unmatched
+      * sides surface — clicks that never converted AND purchases with no
+      * qualifying prior click. Each side's null-augmented rows are gated
+      * by ITS OWN state eviction: unmatched clicks need the watermark
+      * past click + maxDelay (as in `stream_outer_join`); unmatched
+      * purchases need it past the purchase time itself (a purchase can
+      * only match clicks in [p − 1 h, p], so its state expires once the
+      * watermark passes p). Same millisecond-floored min-of-sides final
+      * watermark; both gates reproduced in the oracle. */
+    Member("stream_full_outer_join", Set("events"),
+      prep = ctx => Append(clickToPurchase(ctx, "0 seconds", "full_outer"))),
+
+    /** Streaming duplicate suppression, drained: WHICH physical row
+      * survives a duplicate group is arrival-order-dependent (not
+      * verifiable cross-engine), but the op's contract — every distinct
+      * key emitted exactly once — is deterministic, so the query projects
+      * the dedup key columns and the oracle is SELECT DISTINCT. First-
+      * seen rows emit immediately in append mode (the watermark only
+      * bounds retained state), so no cutoff applies. The one-file stage
+      * drains as a single micro-batch (watermark advances only BETWEEN
+      * batches), so the dedup horizon deterministically spans the whole
+      * input regardless of the watermark delay. */
+    Member("stream_dedup_keys", Set("events"),
+      prep = ctx => Append(StreamOps.dedupedStream(
+          ctx.events.select(col("ts"), col("user_id"), col("event_type")),
+          "ts", idCol = "user_id", watermark = "1 day")
+        .select(col("user_id")))),
+
+    /** The corpus-cleaning battery run INCREMENTALLY: documents arrive as
+      * a file stream (the staged-download shape a crawling pipeline
+      * produces) and the full quality battery — tokenization, stopword
+      * ratio, language ID, verdict — evaluates per micro-batch as pure
+      * stateless projections (all codegen, no state store), drained
+      * through the checkpointed sink. Stateless append emits every row
+      * immediately, so the drain equals the batch query exactly and the
+      * oracle is quality_filter's own SQL. This is the shape a 100 TB/day
+      * ingest actually runs: clean-on-arrival, not clean-after-landing. */
+    Member("stream_quality_filter", Set("documents"),
+      prep = ctx => Append(TextQueries.qualityVerdict(
+        ctx.staged("documents")))),
+
+    /** Bloom decontamination ON ARRIVAL: the filter built batch-side
+      * over the benchmark slice collapses to a literal position set
+      * (≤ m = 4096 ints — [[graft.operators.Bloom.memberExpr]]'s
+      * driver-sized-constant contract, the broadcast analog for
+      * streams) and every arriving document gets its verdict in a PURE
+      * PROJECTION — no join, no state store, codegen end to end.
+      * Stateless append emits rows immediately, so the drain equals the
+      * batch [[CorpusQueries.bloomMembership]] bit-for-bit and the
+      * oracle is bloom_membership's SQL verbatim. This is the shape a
+      * 100 TB/day ingest runs: the benchmark filter ships to the edge,
+      * contaminated docs are flagged before they ever land. */
+    Member("stream_bloom_probe", Set("documents"),
+      prep = ctx => {
+        // bounded collect: a build() result is ≤ m = 4096 position ints
+        val bits = graft.operators.Bloom.build(
+            ctx.ss.read.parquet(s"${ctx.dir}/documents.parquet")
+              .filter(col("doc_id") % 19 === 0), col("text"), k = 4, m = 4096)
+          .collect().map(_.getInt(0)).toSeq
+        Append(ctx.staged("documents").select(col("doc_id"),
+          graft.operators.Bloom.memberExpr(col("text"), bits, k = 4, m = 4096)
+            .cast("int").as("maybe_member")))
+      }),
+
+    /** Bounded-state k-per-group sampling run INCREMENTALLY
+      * ([[StreamOps.boundedGroupSample]]): documents arrive as a file
+      * stream and each source's k-smallest-salted-hash sample is
+      * maintained in k-row state — the always-current inspection sample a
+      * 100 TB/day ingest keeps without rescanning. min-k of the salted
+      * hash is order-insensitive, so the drained final state equals the
+      * batch [[TextQueries.groupSample]] cut bit-for-bit and the oracle
+      * is group_sample's SQL verbatim. Update-mode drain; read-back
+      * recovers each group's final sample via max_by(ids, n_seen), then
+      * ranks by array position (the ids are emitted in rank order). */
+    Member("stream_group_sample", Set("documents"),
+      prep = ctx => Update(StreamOps.boundedGroupSample(ctx.ss,
+        ctx.staged("documents"), "source", "doc_id", k = 20)),
+      read = _.groupBy("source")
         .agg(max_by(col("ids"), col("n_seen")).as("ids"))
         .select(col("source"),
           posexplode(col("ids")).as(Seq("pos", "doc_id")))
         .select(col("doc_id"), col("source"),
-          (col("pos") + 1).cast("int").as("sample_rank")))
+          (col("pos") + 1).cast("int").as("sample_rank"))),
 
-  private val memCorpusDedup: Member = Member("stream_corpus_dedup",
-    Set("documents"),
-    launch = (spark, dir, base) => {
-      val ss = streamSession(spark)
-      val docs = docStream(spark, dir, base)
-      val hist = ss.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") % 7 === 0)
-      val fresh = StreamOps.dedupAgainstCorpus(docs, hist)
-        .select("doc_id", "source")
-      () => StreamOps.startParquetSink(fresh, memCorpusDedup.out(base),
-        memCorpusDedup.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memCorpusDedup.out(base)))
+    /** Continuous-ingest dedup against a historical corpus
+      * ([[StreamOps.dedupAgainstCorpus]]): documents arrive as a file
+      * stream and pass only if their exact-text md5 is absent from the
+      * static fingerprint index (docs with doc_id % 7 = 0 play the
+      * already-ingested corpus). Stateless LEFT ANTI stream-static join —
+      * append mode, no state store — so the drained sink equals the batch
+      * anti-join verbatim; the corpus's real exact-dup texts make the
+      * filter bite beyond the carved slice itself. */
+    Member("stream_corpus_dedup", Set("documents"),
+      prep = ctx => {
+        val docs = ctx.staged("documents")
+        val hist = ctx.ss.read.parquet(s"${ctx.dir}/documents.parquet")
+          .filter(col("doc_id") % 7 === 0)
+        Append(StreamOps.dedupAgainstCorpus(docs, hist)
+          .select("doc_id", "source"))
+      }),
 
-  private val memManifest: Member = Member("stream_shard_manifest",
-    Set("documents"),
-    launch = (spark, dir, base) => {
-      val docs = docStream(spark, dir, base)
-      val agg = docs.filter(col("doc_id").isNotNull)
+    /** Incremental shard manifest ([[graft.operators.Shard]] columns
+      * under a streaming aggregate): as documents arrive, the per-shard
+      * doc/token/char totals stay current in numShards rows of state —
+      * the trainer sidecar maintained DURING ingest instead of recomputed
+      * after. Sums/counts are order-insensitive and the shard key is
+      * stateless, so the drained final state equals the batch
+      * [[CorpusQueries.shardManifest]] bit-for-bit (same oracle verbatim);
+      * Update-mode drain recovered via the monotone-n_docs struct max. */
+    Member("stream_shard_manifest", Set("documents"),
+      prep = ctx => Update(ctx.staged("documents")
+        .filter(col("doc_id").isNotNull)
         .select(
           graft.operators.Shard.shardOf(col("doc_id"), 8).as("shard"),
           size(split(trim(lower(col("text"))), "[ \\t\\n\\r]+")).cast("long")
@@ -364,133 +389,131 @@ object StreamingQueries extends QueryGroup {
           col("n_chars"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          sum("n_chars").as("n_chars"))
-      () => StreamOps.startParquetSinkUpdates(agg, memManifest.out(base),
-        memManifest.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memManifest.out(base))
-        .groupBy("shard")
+          sum("n_chars").as("n_chars"))),
+      read = _.groupBy("shard")
         .agg(max(struct(col("n_docs"), col("n_tokens"), col("n_chars")))
           .as("m"))
         .select(col("shard"), col("m.n_docs").as("n_docs"),
-          col("m.n_tokens").as("n_tokens"), col("m.n_chars").as("n_chars")))
+          col("m.n_tokens").as("n_tokens"), col("m.n_chars").as("n_chars"))),
 
-  private val memIvf: Member = Member("stream_ivf_ingest",
-    Set("embeddings"),
-    launch = (spark, dir, base) => {
-      val ss = streamSession(spark)
-      val hist = ss.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("id"),
+    /** Stateless streaming IVF-index ingest
+      * ([[StreamOps.ivfIngest]]): embeddings arrive as a file stream and
+      * each is assigned to its nearest centroid of an index TRAINED ON
+      * THE HISTORICAL SLICE (even vec_ids) — the centroid set rides the
+      * plan as literals, so the query is a pure projection (no state, no
+      * stream-side shuffle). Assignment is a pure function of the
+      * vector, so the drain equals the batch assignment however the
+      * input was micro-batched; the oracle re-derives the train-slice
+      * k-means in SQL and assigns every vector against it. */
+    Member("stream_ivf_ingest", Set("embeddings"),
+      prep = ctx => {
+        def idVec(df: DataFrame) = df.select(col("vec_id").as("id"),
           graft.operators.Similarity.asDouble(col("embedding")).as("vec"))
-      val cents = graft.operators.Ivf.train(hist, k = 8, iters = 1)
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      val schema = Tables.load(spark, dir, "embeddings").schema
-      val vecs = StreamOps.fileStream(ss,
-          base.resolve("in_embeddings").toString, schema)
-        .select(col("vec_id").as("id"),
-          graft.operators.Similarity.asDouble(col("embedding")).as("vec"))
-      val assigned = StreamOps.ivfIngest(vecs, cents)
-      () => StreamOps.startParquetSink(assigned, memIvf.out(base),
-        memIvf.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memIvf.out(base)))
+        val hist = idVec(ctx.ss.read.parquet(s"${ctx.dir}/embeddings.parquet")
+          .filter(col("vec_id") % 2 === 0))
+        val cents = graft.operators.Ivf.train(hist, k = 8, iters = 1)
+          .collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+        Append(StreamOps.ivfIngest(idVec(ctx.staged("embeddings")), cents))
+      }),
 
-  private val memEnrich: Member = Member("stream_enrich_join", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val ss = evs.sparkSession
-      val dim = ss.read.parquet(s"$dir/customer.parquet")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      val enriched = evs
-        .join(dim, evs("user_id") === dim("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("c_name"),
-          col("c_mktsegment"),
-          // the event stream pre-casts value to the exact-sum decimal;
-          // this join aggregates nothing, so hand back the source double
-          col("value").cast("double").as("value"))
-      () => StreamOps.startParquetSink(enriched, memEnrich.out(base),
-        memEnrich.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memEnrich.out(base)))
+    /** Stream-STATIC enrichment join — the remaining join mode of the
+      * streaming surface (stream-stream is `stream_interval_join`): each
+      * arriving event joins the static customer dimension statelessly (no
+      * state store, no watermark — the static side is simply read per
+      * micro-batch, broadcast by AQE when small). Append emits every
+      * match immediately, so the drain equals the batch join and the
+      * oracle is plain SQL. This is the canonical 100 TB ingest-enrich
+      * shape: facts stream in, dimensions sit still. */
+    Member("stream_enrich_join", Set("events"),
+      prep = ctx => {
+        val evs = ctx.events
+        val dim = ctx.ss.read.parquet(s"${ctx.dir}/customer.parquet")
+          .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
+        Append(evs
+          .join(dim, evs("user_id") === dim("c_custkey"))
+          .select(col("event_id"), col("user_id"), col("c_name"),
+            col("c_mktsegment"),
+            // the event stream pre-casts value to the exact-sum decimal;
+            // this join aggregates nothing, so hand back the source double
+            col("value").cast("double").as("value")))
+      }),
 
-  private val memTotals: Member = Member("stream_running_totals",
-    Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val totals = StreamOps.runningTotals(evs.sparkSession, evs,
-        "user_id", "value")
-      () => StreamOps.startParquetSinkUpdates(totals, memTotals.out(base),
-        memTotals.ckpt(base))
-    },
-    read = (spark, base) =>
-      spark.read.parquet(memTotals.out(base))
-        .groupBy("user_id")
+    /** Keyed running totals (mapGroupsWithState), drained: the custom-
+      * state surface under the oracle. The state sums are exact decimal
+      * ([[StreamOps.runningTotals]]), so the FINAL state per key equals a
+      * batch GROUP BY bit-for-bit; Update-mode drains append one row per
+      * (key, batch), and the monotone event count picks the final one via
+      * max(struct(n, total)) — replay/duplicate-safe. */
+    Member("stream_running_totals", Set("events"),
+      prep = ctx => Update(StreamOps.runningTotals(ctx.ss, ctx.events,
+        "user_id", "value")),
+      read = _.groupBy("user_id")
         .agg(max(struct(col("n_events"), col("total_value"))).as("m"))
         .select(col("user_id"), col("m.n_events").as("n_events"),
-          col("m.total_value").cast("double").as("total_value")))
+          col("m.total_value").cast("double").as("total_value"))),
 
-  private val memAlerts: Member = Member("stream_threshold_alerts",
-    Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-        .filter(col("value") >= 0)
-      val alerts = StreamOps.thresholdAlerts(evs.sparkSession, evs,
-        "user_id", "value", threshold = 500.0)
-      () => StreamOps.startParquetSink(alerts, memAlerts.out(base),
-        memAlerts.ckpt(base))
-    },
-    read = (spark, base) => spark.read.parquet(memAlerts.out(base)))
+    /** Threshold-crossing alerts (flatMapGroupsWithState), drained: the
+      * 0..n-output custom-state surface under the oracle. With the
+      * non-negative `value` filter the running total is monotone, so the
+      * union of every batch's emitted levels is exactly
+      * `1..floor(total/500)` per user — batch-count-independent, which is
+      * what makes the alert SET a cross-engine contract
+      * ([[StreamOps.thresholdAlerts]] computes floor on the double cast of
+      * the exact decimal total, the same IEEE ops the oracle runs). */
+    Member("stream_threshold_alerts", Set("events"),
+      prep = ctx => Append(StreamOps.thresholdAlerts(ctx.ss,
+        ctx.events.filter(col("value") >= 0), "user_id", "value",
+        threshold = 500.0))),
 
-  private val memCdc: Member = Member("stream_cdc_merge", Set.empty,
-    launch = (spark, dir, base) => {
-      val root = base.resolve("stream_cdc_merge")
-      val orders = Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val target = root.resolve("target").toString
-      orders.filter(col("o_orderkey") % 2 === 0).write.parquet(target)
-      val stage = root.resolve("in").toString
-      orders.filter(col("o_orderkey") % 3 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-        .write.parquet(stage)
-      val ss = streamSession(spark)
-      val changelog = StreamOps.fileStream(ss, stage, orders.schema)
-      () => StreamOps.startForeachBatchMerge(changelog, target, memCdc.ckpt(base),
-        keys = Seq("o_orderkey"))
-    },
-    read = (spark, base) => spark.read.parquet(
-      base.resolve("stream_cdc_merge").resolve("target").toString))
+    /** CDC changelog → keyed-dataset merge (foreachBatch), driver-
+      * verified: seed a keyed parquet snapshot (even order keys at their
+      * current price), stream a changelog (every third key re-priced
+      * +1000) through [[StreamOps.foreachBatchMerge]], read the merged
+      * dataset back. Last-write-wins per key: updated keys carry the
+      * changelog row, untouched seed keys survive, new keys append —
+      * the streaming form of the O8 catalog upsert
+      * (/root/reference/pipelines/tiger/county.yml:65-72). */
+    Member("stream_cdc_merge", Set.empty,
+      prep = ctx => {
+        val orders = Tables.orders(ctx.spark, ctx.dir)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        orders.filter(col("o_orderkey") % 2 === 0).write.parquet(ctx.out)
+        val stage = Paths.get(ctx.out).resolveSibling("in").toString
+        orders.filter(col("o_orderkey") % 3 === 0)
+          .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
+          .write.parquet(stage)
+        Merge(StreamOps.fileStream(ctx.ss, stage, orders.schema),
+          keys = Seq("o_orderkey"))
+      }),
 
-  private val memScd2: Member = Member("stream_scd2", Set("events"),
-    launch = (spark, dir, base) => {
-      val evs = eventStream(spark, dir, base)
-      val prepared = evs.select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("us"), col("event_id"))
-      val changes = StreamOps.scd2Changes(evs.sparkSession, prepared,
-        "user_id", "event_type", "us", "event_id")
-      () => StreamOps.startParquetSink(changes, memScd2.out(base),
-        memScd2.ckpt(base))
-    },
-    read = (spark, base) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("us", "event_id")
-      spark.read.parquet(memScd2.out(base))
-        .withColumn("__next", lead(col("us"), 1).over(w))
-        .select(col("user_id"), col("event_type").as("attr"),
-          expr("us div 1000").as("eff_from_ms"),
-          coalesce(expr("__next div 1000"), lit(-1L)).as("eff_to_ms"),
-          when(col("__next").isNull, 1).otherwise(0).cast("int")
-            .as("is_current"))
-    })
-
-  private val members: Seq[Member] = Seq(memDaily, memSliding, memSession,
-    memIJoin, memOJoin, memFOJoin, memDedup, memQuality, memBloom,
-    memGSample, memCorpusDedup, memManifest, memIvf, memEnrich, memTotals,
-    memAlerts, memCdc, memScd2)
-  private val byName: Map[String, Member] =
-    members.map(m => m.name -> m).toMap
+    /** Incremental SCD2 dimension maintenance, streamed
+      * ([[StreamOps.scd2Changes]]): the change-point rows are detected
+      * statefully as events arrive (the hard part — remembering each
+      * user's last attribute), committed append-only, and the validity
+      * close-out (eff_to, is_current) derives at read-back with lead()
+      * over the committed rows — each user's OPEN interval lives in
+      * state, never in an emitted row. The one-file drain is a single
+      * batch, so per-key arrival order is the sorted (us, id) order and
+      * the committed set equals the batch change-point set: the oracle is
+      * scd2_build's own SQL, verbatim. */
+    Member("stream_scd2", Set("events"),
+      prep = ctx => Append(StreamOps.scd2Changes(ctx.ss,
+        ctx.events.select(col("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("us"), col("event_id")),
+        "user_id", "event_type", "us", "event_id")),
+      read = committed => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("user_id").orderBy("us", "event_id")
+        committed
+          .withColumn("__next", lead(col("us"), 1).over(w))
+          .select(col("user_id"), col("event_type").as("attr"),
+            expr("us div 1000").as("eff_from_ms"),
+            coalesce(expr("__next div 1000"), lit(-1L)).as("eff_to_ms"),
+            when(col("__next").isNull, 1).otherwise(0).cast("int")
+              .as("is_current"))
+      })
+  )
 
   /** Per outer session, the queries a filtered battery runs (see
     * [[scopeDrains]]); a session without an entry drains every member. */
@@ -502,8 +525,8 @@ object StreamingQueries extends QueryGroup {
     * and concurrent first-callers of one generation simply block until
     * the drain commits, then read back. */
   private object DrainGroup {
-    private final class St(val gen: Long, val base: java.nio.file.Path,
-                           val prevBase: Option[java.nio.file.Path]) {
+    private final class St(val gen: Long, val base: Path,
+                           val prevBase: Option[Path]) {
       val consumed = scala.collection.mutable.Set[String]()
     }
     private val lock = new Object
@@ -518,16 +541,21 @@ object StreamingQueries extends QueryGroup {
     private[queries] val drainNanos =
       new java.util.concurrent.atomic.AtomicLong
 
+    /** A member's sink path and checkpoint in a generation. */
+    private def out(base: Path, m: Member): String =
+      base.resolve(m.name).resolve("out").toString
+    private def ckpt(base: Path, m: Member): String =
+      base.resolve(m.name).resolve("ckpt").toString
+
     /** The member subset a session's battery runs: a filtered battery
       * (see [[scopeDrains]]) must not drain 17 siblings nobody will
       * read. The requested member is always included. */
     private def scoped(spark: SparkSession,
-                       requested: Option[String]): Seq[Member] =
+                       requested: Option[Member]): Seq[Member] =
       Option(scopes.get(spark)) match {
         case None => members
         case Some(names) =>
-          members.filter(m => names.contains(m.name) ||
-            requested.contains(m.name))
+          members.filter(m => names.contains(m.name) || requested.contains(m))
       }
 
     /** CALLER CONTRACT (generation retention): the returned DataFrame
@@ -539,20 +567,17 @@ object StreamingQueries extends QueryGroup {
       * (Verify's parquet write, Bench's noop sink, the specs' collects)
       * materializes immediately. Holding a lazy result across two
       * fresh generations reads deleted paths. */
-    def resultFor(name: String, spark: SparkSession,
-                  dir: String): DataFrame = {
-      val m = byName(name)
+    def resultFor(m: Member, spark: SparkSession, dir: String): DataFrame = {
       val base = lock.synchronized {
-        val key = (spark, dir)
-        val st = states.get(key) match {
-          case Some(s) if !s.consumed(name) &&
-              java.nio.file.Files.exists(s.base.resolve(name)) => s
-          case prev => newGeneration(spark, dir, prev, Some(name))
+        val st = states.get((spark, dir)) match {
+          case Some(s) if !s.consumed(m.name) &&
+              Files.exists(s.base.resolve(m.name)) => s
+          case prev => newGeneration(spark, dir, prev, Some(m))
         }
-        st.consumed += name
+        st.consumed += m.name
         st.base
       }
-      m.read(spark, base)
+      m.read(spark.read.parquet(out(base, m)))
     }
 
     /** Drain a full generation and mark EVERY member consumed: the
@@ -562,9 +587,18 @@ object StreamingQueries extends QueryGroup {
       * state-store providers, file-sink metadata log, codegen). */
     def warmupAll(spark: SparkSession, dir: String): Unit =
       lock.synchronized {
-        val key = (spark, dir)
-        val st = newGeneration(spark, dir, states.get(key), None)
+        val st = newGeneration(spark, dir, states.get((spark, dir)), None)
         st.consumed ++= scoped(spark, None).map(_.name)
+      }
+
+    /** The only place a member's drain starts: its DataFrame into its
+      * sink at `out`, checkpointed at `ckpt`, AvailableNow. */
+    private def start(d: Drain, out: String, ckpt: String): StreamingQuery =
+      d match {
+        case Append(df) => StreamOps.startParquetSink(df, out, ckpt)
+        case Update(df) => StreamOps.startParquetSinkUpdates(df, out, ckpt)
+        case Merge(df, keys) =>
+          StreamOps.startForeachBatchMerge(df, out, ckpt, keys)
       }
 
     /** Stage shared sources once, start every scoped member's drain,
@@ -573,32 +607,20 @@ object StreamingQueries extends QueryGroup {
       * them) and wipes the one before that. */
     private def newGeneration(spark: SparkSession, dir: String,
                               prev: Option[St],
-                              requested: Option[String]): St = {
+                              requested: Option[Member]): St = {
       val gen0 = System.nanoTime()
       val gen = prev.map(_.gen + 1).getOrElse(1L)
-      prev.flatMap(_.prevBase).foreach(p => rmTree(p.toFile))
-      val safe = spark.sparkContext.applicationId + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_streams_g${gen}_$safe")
-      rmTree(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      prev.flatMap(_.prevBase).foreach(p => Scratch.deleteTree(p.toFile))
+      val base = Scratch.fresh(spark, dir, s"streams_g$gen")
       val ms = scoped(spark, requested)
-      // resolve batch schemas BEFORE the parallel launches: Tables.load
+      val ss = streamSession(spark)
+      // resolve batch schemas BEFORE the parallel preps: Tables.load
       // caches per (session, path) — dir-correct by construction — and
-      // warming it here keeps 18 launch threads off its cache lock
+      // warming it here keeps 18 prep threads off its cache lock
       Seq("events", "documents").foreach(t => Tables.load(spark, dir, t))
-      ms.flatMap(_.tables).distinct.foreach {
-        case "events" => stageTable(dir, "events", base.resolve("in_events"))
-        case "documents" =>
-          stageTable(dir, "documents", base.resolve("in_documents"))
-        case "embeddings" =>
-          stageTable(dir, "embeddings", base.resolve("in_embeddings"))
-      }
-      ms.foreach(m =>
-        java.nio.file.Files.createDirectories(base.resolve(m.name)))
-      // launch in parallel: a launch does its member's static prep
-      // (bloom build, IVF train, CDC seed) and .start()s the drain
+      ms.flatMap(_.tables).distinct
+        .foreach(t => stageTable(dir, t, stageDir(base, t)))
+      ms.foreach(m => Files.createDirectories(base.resolve(m.name)))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(ms.size, 8))
       val started =
@@ -607,20 +629,16 @@ object StreamingQueries extends QueryGroup {
         import scala.jdk.CollectionConverters._
         // phase 1: every member's prep (static batch work + plan
         // building), with the box to itself
-        val prepFuts = pool.invokeAll(ms.map(m =>
-          new java.util.concurrent.Callable[() => StreamingQuery] {
-            def call(): () => StreamingQuery = m.launch(spark, dir, base)
-          }).asJava)
+        val prepFuts = pool.invokeAll(ms.map[Callable[Drain]](m =>
+          () => m.prep(Ctx(spark, ss, dir, base, out(base, m)))).asJava)
         // surface the FIRST prep failure (get() rethrows)
-        val thunks = prepFuts.asScala.map(_.get()).toSeq
+        val preps = ms.zip(prepFuts.asScala.map(_.get()))
         // phase 2: start all drains together, then await them all
-        val startFuts = pool.invokeAll(thunks.map { th =>
-          new java.util.concurrent.Callable[StreamingQuery] {
-            def call(): StreamingQuery = {
-              val q = th()
-              started.add(q)
-              q
-            }
+        val startFuts = pool.invokeAll(preps.map[Callable[StreamingQuery]] {
+          case (m, d) => () => {
+            val q = start(d, out(base, m), ckpt(base, m))
+            started.add(q)
+            q
           }
         }.asJava)
         startFuts.asScala.map(_.get()).foreach(_.awaitTermination())
@@ -654,230 +672,12 @@ object StreamingQueries extends QueryGroup {
     * the attribution hook for Bench's `stream_generation_sec` field. */
   def drainSecondsTotal: Double = DrainGroup.drainNanos.get() / 1e9
 
-  /** Tumbling per-day aggregate per event_type, streamed: readStream →
-    * [[StreamOps.tumblingDailyAgg]] → checkpointed parquet sink
-    * (AvailableNow) → read back. Mean is derived from the exact sum at
-    * read-back with one double division, matching the oracle's davg
-    * form. */
-  def streamDailyAgg(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_daily_agg", spark, dir)
-
-  /** Sliding 7-day/1-day window sums, streamed — the streaming form of
-    * W1's trailing rolling sums, under the same AvailableNow drain
-    * harness. Append emission holds back every window whose end lies
-    * beyond the final watermark; the oracle regenerates the slide grid
-    * (epoch-aligned daily starts, 7 per event) and applies the same
-    * end-≤-max-day cutoff. */
-  def streamSlidingSum(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_sliding_sum", spark, dir)
-
-  /** Session windows, streamed — the third windowed form under the
-    * drain harness. Spark merges two events into one session iff their
-    * gap is STRICTLY less than the gap duration (windows are
-    * half-open), and a session's end is last-event + gap; the oracle's
-    * gaps-and-islands uses the same strict rule and the same
-    * end-≤-max-event cutoff for append emission. Timestamps emitted as
-    * epoch ms (never raw ts — ns/µs mismatch across engines). */
-  def streamSessionAgg(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_session_agg", spark, dir)
-
-  /** Watermarked stream-stream interval join (the attribution shape:
-    * purchase ≤ 1 h after a same-user click), drained. A streaming
-    * INNER join emits each pair the moment both rows are present —
-    * watermarks only bound retained state, never hold back matches —
-    * so a full AvailableNow drain equals the batch join exactly and
-    * the oracle is the plain interval-join SQL, no cutoff needed. */
-  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_interval_join", spark, dir)
-
-  /** Watermarked stream-stream LEFT OUTER interval join, drained: the
-    * attribution shape again, but clicks with NO purchase within the
-    * hour surface as null-augmented rows — the unconverted-traffic side
-    * an inner join silently drops. Outer emission is watermark-GATED:
-    * a null row may only emit once the watermark proves no matching
-    * purchase can still arrive (left-state eviction), so the drain's
-    * final `maxDelay` of unmatched clicks stays in state and is absent
-    * from the sink. That gate is deterministic — watermark delay 0, so
-    * the final watermark is min(max click ts, max purchase ts) over the
-    * drained input (each side's watermark node sits after its filter),
-    * Spark tracks it in WHOLE MILLISECONDS — and the oracle reproduces
-    * exactly it: matched rows unconditionally, unmatched clicks iff
-    * click_ms + 1 h < watermark_ms. */
-  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_outer_join", spark, dir)
-
-  /** FULL OUTER stream-stream interval join, drained: both unmatched
-    * sides surface — clicks that never converted AND purchases with no
-    * qualifying prior click. Each side's null-augmented rows are gated
-    * by ITS OWN state eviction: unmatched clicks need the watermark
-    * past click + maxDelay (as in [[streamOuterJoin]]); unmatched
-    * purchases need it past the purchase time itself (a purchase can
-    * only match clicks in [p − 1 h, p], so its state expires once the
-    * watermark passes p). Same millisecond-floored min-of-sides final
-    * watermark; both gates reproduced in the oracle. */
-  def streamFullOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_full_outer_join", spark, dir)
-
-  /** Streaming duplicate suppression, drained: WHICH physical row
-    * survives a duplicate group is arrival-order-dependent (not
-    * verifiable cross-engine), but the op's contract — every distinct
-    * key emitted exactly once — is deterministic, so the query projects
-    * the dedup key columns and the oracle is SELECT DISTINCT. First-
-    * seen rows emit immediately in append mode (the watermark only
-    * bounds retained state), so no cutoff applies. The one-file stage
-    * drains as a single micro-batch (watermark advances only BETWEEN
-    * batches), so the dedup horizon deterministically spans the whole
-    * input regardless of the watermark delay. */
-  def streamDedupKeys(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_dedup_keys", spark, dir)
-
-  /** The corpus-cleaning battery run INCREMENTALLY: documents arrive as
-    * a file stream (the staged-download shape a crawling pipeline
-    * produces) and the full quality battery — tokenization, stopword
-    * ratio, language ID, verdict — evaluates per micro-batch as pure
-    * stateless projections (all codegen, no state store), drained
-    * through the checkpointed sink. Stateless append emits every row
-    * immediately, so the drain equals the batch query exactly and the
-    * oracle is quality_filter's own SQL. This is the shape a 100 TB/day
-    * ingest actually runs: clean-on-arrival, not clean-after-landing. */
-  def streamQualityFilter(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_quality_filter", spark, dir)
-
-  /** Bloom decontamination ON ARRIVAL: the filter built batch-side
-    * over the benchmark slice collapses to a literal position set
-    * (≤ m = 4096 ints — [[graft.operators.Bloom.memberExpr]]'s
-    * driver-sized-constant contract, the broadcast analog for
-    * streams) and every arriving document gets its verdict in a PURE
-    * PROJECTION — no join, no state store, codegen end to end.
-    * Stateless append emits rows immediately, so the drain equals the
-    * batch [[CorpusQueries.bloomMembership]] bit-for-bit and the
-    * oracle is bloom_membership's SQL verbatim. This is the shape a
-    * 100 TB/day ingest runs: the benchmark filter ships to the edge,
-    * contaminated docs are flagged before they ever land. */
-  def streamBloomProbe(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_bloom_probe", spark, dir)
-
-  /** Bounded-state k-per-group sampling run INCREMENTALLY
-    * ([[StreamOps.boundedGroupSample]]): documents arrive as a file
-    * stream and each source's k-smallest-salted-hash sample is
-    * maintained in k-row state — the always-current inspection sample a
-    * 100 TB/day ingest keeps without rescanning. min-k of the salted
-    * hash is order-insensitive, so the drained final state equals the
-    * batch [[TextQueries.groupSample]] cut bit-for-bit and the oracle
-    * is group_sample's SQL verbatim. Update-mode drain; read-back
-    * recovers each group's final sample via max_by(ids, n_seen), then
-    * ranks by array position (the ids are emitted in rank order). */
-  def streamGroupSample(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_group_sample", spark, dir)
-
-  /** Continuous-ingest dedup against a historical corpus
-    * ([[StreamOps.dedupAgainstCorpus]]): documents arrive as a file
-    * stream and pass only if their exact-text md5 is absent from the
-    * static fingerprint index (docs with doc_id % 7 = 0 play the
-    * already-ingested corpus). Stateless LEFT ANTI stream-static join —
-    * append mode, no state store — so the drained sink equals the batch
-    * anti-join verbatim; the corpus's real exact-dup texts make the
-    * filter bite beyond the carved slice itself. */
-  def streamCorpusDedup(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_corpus_dedup", spark, dir)
-
-  /** Incremental shard manifest ([[graft.operators.Shard]] columns
-    * under a streaming aggregate): as documents arrive, the per-shard
-    * doc/token/char totals stay current in numShards rows of state —
-    * the trainer sidecar maintained DURING ingest instead of recomputed
-    * after. Sums/counts are order-insensitive and the shard key is
-    * stateless, so the drained final state equals the batch
-    * [[CorpusQueries.shardManifest]] bit-for-bit (same oracle verbatim);
-    * Update-mode drain recovered via the monotone-n_docs struct max. */
-  def streamShardManifest(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_shard_manifest", spark, dir)
-
-  /** Stateless streaming IVF-index ingest
-    * ([[StreamOps.ivfIngest]]): embeddings arrive as a file stream and
-    * each is assigned to its nearest centroid of an index TRAINED ON
-    * THE HISTORICAL SLICE (even vec_ids) — the centroid set rides the
-    * plan as literals, so the query is a pure projection (no state, no
-    * stream-side shuffle). Assignment is a pure function of the
-    * vector, so the drain equals the batch assignment however the
-    * input was micro-batched; the oracle re-derives the train-slice
-    * k-means in SQL and assigns every vector against it. */
-  def streamIvfIngest(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_ivf_ingest", spark, dir)
-
-  /** Stream-STATIC enrichment join — the remaining join mode of the
-    * streaming surface (stream-stream is `stream_interval_join`): each
-    * arriving event joins the static customer dimension statelessly (no
-    * state store, no watermark — the static side is simply read per
-    * micro-batch, broadcast by AQE when small). Append emits every
-    * match immediately, so the drain equals the batch join and the
-    * oracle is plain SQL. This is the canonical 100 TB ingest-enrich
-    * shape: facts stream in, dimensions sit still. */
-  def streamEnrichJoin(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_enrich_join", spark, dir)
-
-  /** Keyed running totals (mapGroupsWithState), drained: the custom-
-    * state surface under the oracle. The state sums are exact decimal
-    * ([[StreamOps.runningTotals]]), so the FINAL state per key equals a
-    * batch GROUP BY bit-for-bit; Update-mode drains append one row per
-    * (key, batch), and the monotone event count picks the final one via
-    * max(struct(n, total)) — replay/duplicate-safe. */
-  def streamRunningTotals(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_running_totals", spark, dir)
-
-  /** Threshold-crossing alerts (flatMapGroupsWithState), drained: the
-    * 0..n-output custom-state surface under the oracle. With the
-    * non-negative `value` filter the running total is monotone, so the
-    * union of every batch's emitted levels is exactly
-    * `1..floor(total/500)` per user — batch-count-independent, which is
-    * what makes the alert SET a cross-engine contract
-    * ([[StreamOps.thresholdAlerts]] computes floor on the double cast of
-    * the exact decimal total, the same IEEE ops the oracle runs). */
-  def streamThresholdAlerts(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_threshold_alerts", spark, dir)
-
-  /** CDC changelog → keyed-dataset merge (foreachBatch), driver-
-    * verified: seed a keyed parquet snapshot (even order keys at their
-    * current price), stream a changelog (every third key re-priced
-    * +1000) through [[StreamOps.foreachBatchMerge]], read the merged
-    * dataset back. Last-write-wins per key: updated keys carry the
-    * changelog row, untouched seed keys survive, new keys append —
-    * the streaming form of the O8 catalog upsert
-    * (/root/reference/pipelines/tiger/county.yml:65-72). */
-  def streamCdcMerge(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_cdc_merge", spark, dir)
-
-  /** Incremental SCD2 dimension maintenance, streamed
-    * ([[StreamOps.scd2Changes]]): the change-point rows are detected
-    * statefully as events arrive (the hard part — remembering each
-    * user's last attribute), committed append-only, and the validity
-    * close-out (eff_to, is_current) derives at read-back with lead()
-    * over the committed rows — each user's OPEN interval lives in
-    * state, never in an emitted row. The one-file drain is a single
-    * batch, so per-key arrival order is the sorted (us, id) order and
-    * the committed set equals the batch change-point set: the oracle is
-    * scd2_build's own SQL, verbatim. */
-  def streamScd2(spark: SparkSession, dir: String): DataFrame =
-    DrainGroup.resultFor("stream_scd2", spark, dir)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_scd2" -> (streamScd2 _),
-    "stream_daily_agg" -> (streamDailyAgg _),
-    "stream_sliding_sum" -> (streamSlidingSum _),
-    "stream_session_agg" -> (streamSessionAgg _),
-    "stream_interval_join" -> (streamIntervalJoin _),
-    "stream_outer_join" -> (streamOuterJoin _),
-    "stream_full_outer_join" -> (streamFullOuterJoin _),
-    "stream_dedup_keys" -> (streamDedupKeys _),
-    "stream_quality_filter" -> (streamQualityFilter _),
-    "stream_bloom_probe" -> (streamBloomProbe _),
-    "stream_enrich_join" -> (streamEnrichJoin _),
-    "stream_running_totals" -> (streamRunningTotals _),
-    "stream_group_sample" -> (streamGroupSample _),
-    "stream_corpus_dedup" -> (streamCorpusDedup _),
-    "stream_ivf_ingest" -> (streamIvfIngest _),
-    "stream_shard_manifest" -> (streamShardManifest _),
-    "stream_threshold_alerts" -> (streamThresholdAlerts _),
-    "stream_cdc_merge" -> (streamCdcMerge _))
+  /** Each member's query: its generation's committed sink, read back
+    * (see [[DrainGroup.resultFor]]). */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    members.map(m => m.name ->
+      ((spark: SparkSession, dir: String) =>
+        DrainGroup.resultFor(m, spark, dir))).toMap
 
   def oracles: Map[String, String] = {
     import Exact.sql._

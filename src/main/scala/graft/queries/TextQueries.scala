@@ -48,12 +48,8 @@ object TextQueries extends QueryGroup {
   private def formatRoundtrip(spark: SparkSession, dir: String,
                               ext: String): DataFrame = {
     import graft.sources.Formats
-    // appId isolates concurrent JVMs on the same dataset (a second
-    // process's overwrite must not race this one's read), and keeps
-    // lossily-sanitized dir names from colliding across datasets
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${sys.props("java.io.tmpdir")}/graft_$ext$safe/docs.$ext"
+    val path = graft.Scratch.fresh(spark, dir, ext).resolve(s"docs.$ext")
+      .toString
     val slim = Tables.documents(spark, dir)
       .select("doc_id", "source", "n_chars")
     Formats.write(slim, path)
@@ -157,24 +153,16 @@ object TextQueries extends QueryGroup {
     * against the same recursive-CTE oracle. Shares the persisted
     * candidate-pair cache with the other dedup consumers. */
   def dedupComponentsDist(spark: SparkSession, dir: String): DataFrame = {
-    val safe = spark.sparkContext.applicationId + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
     // reliable-checkpoint SCRATCH: prefer tmpfs when the box has it —
     // the point of this twin is exercising the reliable-checkpoint CODE
     // PATH (file write + lineage cut), not local disk latency; on a
     // cluster this path is HDFS/object storage anyway
-    val scratchBase = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val ckpt =
       if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm)) shm.toString
-      else sys.props("java.io.tmpdir")
-    }
-    val ckpt = java.nio.file.Paths.get(scratchBase, s"graft_ccdist_$safe")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(ckpt.toFile)
+          java.nio.file.Files.isWritable(shm))
+        graft.Scratch.fresh(spark, dir, "ccdist", shm.toString)
+      else graft.Scratch.fresh(spark, dir, "ccdist")
     Components.connected(candidatePairs(spark, dir), "doc_a", "doc_b",
       checkpointDir = Some(ckpt.toString), localThreshold = 0)
       .select(col("id").as("doc_id"), col("component"))
@@ -268,26 +256,29 @@ object TextQueries extends QueryGroup {
         when(exists(col("__t"), t => t.rlike("[0-9]")), 1).otherwise(0)
           .cast("int").as("has_digit"))
 
-  /** The composed training-data quality filter: stats + language ID
-    * fused into one keep/drop decision with a reason column — the query
-    * shape an actual corpus-cleaning pipeline runs. One pass, all
-    * codegen projections, then a single filter. */
   /** The verdict battery itself, over any documents-shaped frame —
     * pure stateless projections, so it runs identically on a batch
-    * table and on a streaming micro-batch ([[StreamingQueries
-    * .streamQualityFilter]] feeds it a file stream). */
-  def qualityVerdict(docs: DataFrame): DataFrame = {
-    val scored = LangId(TextStats(docs, col("text")), col("text"))
+    * table, on a streaming micro-batch (`stream_quality_filter` feeds it
+    * a file stream) and in the `text_quality` pipeline step, which
+    * passes its own id/text columns and token bounds. */
+  def qualityVerdict(docs: DataFrame, idCol: String = "doc_id",
+                     textCol: String = "text", minTokens: Long = 20L,
+                     maxTokens: Long = 500L): DataFrame = {
+    val scored = LangId(TextStats(docs, col(textCol)), col(textCol))
     scored.select(
-      col("doc_id"),
+      col(idCol),
       col("n_tokens"), col("stopword_ratio"), col("lang_pred"),
-      when(col("n_tokens") < 20, "too_short")
-        .when(col("n_tokens") > 500, "too_long")
+      when(col("n_tokens") < minTokens, "too_short")
+        .when(col("n_tokens") > maxTokens, "too_long")
         .when(col("stopword_ratio") < 0.01, "no_stopwords")
         .when(col("lang_pred") =!= "en", "not_english")
         .otherwise("keep").as("verdict"))
   }
 
+  /** The composed training-data quality filter: stats + language ID
+    * fused into one keep/drop decision with a reason column — the query
+    * shape an actual corpus-cleaning pipeline runs. One pass, all
+    * codegen projections, then a single filter. */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame =
     qualityVerdict(Tables.documents(spark, dir))
 

@@ -152,13 +152,7 @@ object JdbcWritePlugin extends StepPlugin {
         con.createStatement().execute(sql)
       } finally con.close()
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(tmp.toFile)
-    }
+    } finally graft.Scratch.deleteTree(tmp.toFile)
   }
 
   /** Derby bulk-load fast path (the r9 judge's ask #7, mirroring the
@@ -242,13 +236,7 @@ object JdbcWritePlugin extends StepPlugin {
         } finally con.close()
       }
       true
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(tmp.toFile)
-    }
+    } finally graft.Scratch.deleteTree(tmp.toFile)
   }
 
   /** The physical table write, routed per dialect: DuckDB takes the

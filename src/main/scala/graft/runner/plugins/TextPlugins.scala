@@ -3,7 +3,7 @@ package graft.runner.plugins
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Decontaminate, Dedup, Fingerprint,
-  LangId, Resample, Sample, Scrub, SequencePack, SpanDedup, Split,
+  Resample, Sample, Scrub, SequencePack, SpanDedup, Split,
   TermIndex, TextStats}
 import graft.runner._
 
@@ -177,15 +177,8 @@ object TextQualityPlugin extends StepPlugin {
     val minTok = ctx.argOpt("min_tokens").map(_.toString.toLong).getOrElse(20L)
     val maxTok = ctx.argOpt("max_tokens").map(_.toString.toLong).getOrElse(500L)
 
-    val scored = LangId(
-      TextStats(ctx.spark.read.parquet(in), col(textCol)), col(textCol))
-    val verdicts = scored.select(
-      col(idCol), col("n_tokens"), col("stopword_ratio"), col("lang_pred"),
-      when(col("n_tokens") < minTok, "too_short")
-        .when(col("n_tokens") > maxTok, "too_long")
-        .when(col("stopword_ratio") < 0.01, "no_stopwords")
-        .when(col("lang_pred") =!= "en", "not_english")
-        .otherwise("keep").as("verdict"))
+    val verdicts = graft.queries.TextQueries.qualityVerdict(
+      ctx.spark.read.parquet(in), idCol, textCol, minTok, maxTok)
     val c = Counted.write(verdicts, out,
       "n_keep" -> sum(when(col("verdict") === "keep", 1)),
       "n_total" -> Counted.rows)

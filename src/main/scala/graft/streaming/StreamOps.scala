@@ -117,7 +117,7 @@ object StreamOps {
     * `(group, n_seen, ids)` with the ids already in rank order;
     * `n_seen` is strictly monotone per group, so read-back recovers the
     * final sample via `max_by(ids, n_seen)` — the library's
-    * Update-drain recovery idiom ([[toParquetSinkUpdates]]). Null ids
+    * Update-drain recovery idiom ([[startParquetSinkUpdates]]). Null ids
     * are filtered before the state op (the batch rule: a row that
     * cannot be re-identified cannot hold a reproducible sample slot).
     */
@@ -361,12 +361,7 @@ object StreamOps {
     * `max(struct(n_events, ...))` — the running count only grows), which
     * also absorbs a replayed epoch after a crash (duplicate rows, same
     * max). AvailableNow + checkpoint keep restart semantics identical to
-    * [[toParquetSink]]. */
-  def toParquetSinkUpdates(df: DataFrame, path: String,
-                           checkpointDir: String): Unit =
-    startParquetSinkUpdates(df, path, checkpointDir).awaitTermination()
-
-  /** [[toParquetSinkUpdates]] without the await (see
+    * [[toParquetSink]]. Returns the started query (see
     * [[startParquetSink]]). */
   def startParquetSinkUpdates(df: DataFrame, path: String,
                               checkpointDir: String)
@@ -396,8 +391,8 @@ object StreamOps {
     * [[startParquetSink]]). */
   def startForeachBatchMerge(df: DataFrame, path: String,
                              checkpointDir: String, keys: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val q = df.writeStream
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -414,20 +409,4 @@ object StreamOps {
         } finally batch.unpersist()
       }
       .start()
-    q
-  }
-
-  /** Run a streaming DataFrame to completion against currently-available
-    * input (batch-parity harness: memory sink + processAllAvailable). */
-  def runToMemory(df: DataFrame, queryName: String,
-                  outputMode: OutputMode = OutputMode.Update): DataFrame = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(queryName)
-  }
 }

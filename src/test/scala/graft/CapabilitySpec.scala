@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.WeightedQuantile
 import graft.operators.Skew
+import graft.streaming.MemoryDrain.runToMemory
 import graft.streaming.StreamOps
 
 /** Specs for the capability extensions: weighted quantiles (both forms
@@ -148,7 +149,7 @@ class CapabilitySpec extends SparkSpecBase {
     val schema = spark.read.parquet(s"$sf/events.parquet").schema
     def normalize(df: org.apache.spark.sql.DataFrame) =
       graft.Tables.normalizeEventTs(df)
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.sessionAgg(
         normalize(StreamOps.fileStream(spark, stagedDir, schema)),
         "ts", "user_id", "value", "2 hours"),

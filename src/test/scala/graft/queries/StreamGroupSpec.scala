@@ -14,17 +14,17 @@ class StreamGroupSpec extends SparkSpecBase {
       "re-invocation starts a fresh one with identical results") {
     val d0 = StreamingQueries.drainCount
     // first member invocation: drains a full generation
-    val daily1 = StreamingQueries.streamDailyAgg(spark, sf).collect()
+    val daily1 = StreamingQueries.queries("stream_daily_agg")(spark, sf).collect()
     val afterFirst = StreamingQueries.drainCount
     assert(afterFirst == d0 + 1, "first member must trigger one drain")
     // a DIFFERENT member consumes the same generation: no new drain
-    val sliding1 = StreamingQueries.streamSlidingSum(spark, sf).collect()
+    val sliding1 = StreamingQueries.queries("stream_sliding_sum")(spark, sf).collect()
     assert(StreamingQueries.drainCount == afterFirst,
       "sibling member must reuse the drained generation")
     assert(sliding1.nonEmpty)
     // re-invoking the CONSUMED member starts a fresh generation —
     // and the fresh drain reproduces the first result exactly
-    val daily2 = StreamingQueries.streamDailyAgg(spark, sf).collect()
+    val daily2 = StreamingQueries.queries("stream_daily_agg")(spark, sf).collect()
     assert(StreamingQueries.drainCount == afterFirst + 1,
       "re-invocation of a consumed member must re-drain")
     assert(daily1.map(_.toString).sorted.toSeq ==
@@ -32,7 +32,7 @@ class StreamGroupSpec extends SparkSpecBase {
       "fresh generation must reproduce the consumed one bit-for-bit")
     // the sibling then consumes the NEW generation without another
     // drain (its gen-1 consumption does not leak into gen 2)
-    val sliding2 = StreamingQueries.streamSlidingSum(spark, sf).collect()
+    val sliding2 = StreamingQueries.queries("stream_sliding_sum")(spark, sf).collect()
     assert(StreamingQueries.drainCount == afterFirst + 1)
     assert(sliding1.map(_.toString).sorted.toSeq ==
       sliding2.map(_.toString).sorted.toSeq)

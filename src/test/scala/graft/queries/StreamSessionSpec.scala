@@ -78,10 +78,10 @@ class StreamSessionSpec extends SparkSpecBase {
     StreamingQueries.scopeDrains(scopedSpark,
       Set("stream_daily_agg", "stream_sliding_sum"))
     val d0 = StreamingQueries.drainCount
-    assert(StreamingQueries.streamDailyAgg(scopedSpark, sf).collect().nonEmpty)
+    assert(StreamingQueries.queries("stream_daily_agg")(scopedSpark, sf).collect().nonEmpty)
     assert(StreamingQueries.drainCount == d0 + 1)
     // the scoped sibling was drained with it
-    StreamingQueries.streamSlidingSum(scopedSpark, sf).collect()
+    StreamingQueries.queries("stream_sliding_sum")(scopedSpark, sf).collect()
     assert(StreamingQueries.drainCount == d0 + 1)
     // a member outside the scope was not, so asking for it drains again
     StreamingQueries.queries("stream_scd2")(scopedSpark, sf).collect()

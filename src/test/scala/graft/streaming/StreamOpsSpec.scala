@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpecBase, Tables}
+import graft.streaming.MemoryDrain.runToMemory
 
 /** SURVEY §5.5: events replayed as a file-source stream; windowed
   * aggregates must equal their batch counterparts. */
@@ -25,7 +26,7 @@ class StreamOpsSpec extends SparkSpecBase {
   }
 
   test("tumbling daily aggregate equals batch groupBy(day)") {
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.tumblingDailyAgg(eventsStream, "ts", "user_id", "value"),
       "tumbling_out")
       .select(to_date(col("day_start")).as("day"), col("user_id"),
@@ -42,7 +43,7 @@ class StreamOpsSpec extends SparkSpecBase {
   }
 
   test("sliding 3-day window equals batch range-frame rolling sum") {
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.slidingSum(eventsStream, "ts", "user_id", "value", 3),
       "sliding_out")
     // batch check for one (user, window_end): sum of events in [start,end)
@@ -73,7 +74,7 @@ class StreamOpsSpec extends SparkSpecBase {
     val schema = docs.schema
     val stream = StreamOps.fileStream(spark, s"$dir/in", schema,
       options = Map("maxFilesPerTrigger" -> "1"))
-    val drained = StreamOps.runToMemory(
+    val drained = runToMemory(
       StreamOps.boundedGroupSample(spark, stream, "source", "doc_id", 7),
       "gsample_out", org.apache.spark.sql.streaming.OutputMode.Update)
     val got = drained.groupBy("source")
@@ -108,7 +109,7 @@ class StreamOpsSpec extends SparkSpecBase {
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
         sum("n_chars").as("n_chars"))
-    val drained = StreamOps.runToMemory(manifestOf(stream),
+    val drained = runToMemory(manifestOf(stream),
       "manifest_out", org.apache.spark.sql.streaming.OutputMode.Update)
     val streamed = drained.groupBy("shard")
       .agg(max(struct(col("n_docs"), col("n_tokens"), col("n_chars")))
@@ -220,7 +221,7 @@ class StreamOpsSpec extends SparkSpecBase {
     val stream = graft.Tables.normalizeEventTs(
       StreamOps.fileStream(spark, stagedDir,
         spark.read.parquet(s"$sf/events.parquet").schema))
-    val deduped = StreamOps.runToMemory(
+    val deduped = runToMemory(
       StreamOps.dedupedStream(stream.unionByName(stream), "ts", "event_id"),
       "dedup_out", org.apache.spark.sql.streaming.OutputMode.Append)
     assert(deduped.count() == eventsBatch.count())
@@ -267,7 +268,7 @@ class StreamOpsSpec extends SparkSpecBase {
       .select(col("user_id"), col("ts").as("click_ts"))
     val purchases = eventsStream.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.intervalJoin(clicks, purchases, "user_id",
         "click_ts", "p_ts", "2 hours"),
       "ssjoin_out", org.apache.spark.sql.streaming.OutputMode.Append)
@@ -284,7 +285,7 @@ class StreamOpsSpec extends SparkSpecBase {
   }
 
   test("flatMapGroupsWithState emits one alert per crossed threshold") {
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.thresholdAlerts(spark, eventsStream, "user_id", "value",
         threshold = 500.0),
       "alerts_out", org.apache.spark.sql.streaming.OutputMode.Append)
@@ -302,7 +303,7 @@ class StreamOpsSpec extends SparkSpecBase {
   }
 
   test("mapGroupsWithState running totals equal batch per-user totals") {
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.runningTotals(spark, eventsStream, "user_id", "value"),
       "state_out")
     // memory sink in Update mode keeps every emitted row; take the last
@@ -345,7 +346,7 @@ class StreamOpsSpec extends SparkSpecBase {
     }
     val stream = StreamOps.fileStream(spark, staging.toString,
       ev.schema, options = Map("maxFilesPerTrigger" -> "1"))
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.scd2Changes(spark, stream, "user_id", "event_type",
         "us", "event_id"),
       "scd2_multi_out", org.apache.spark.sql.streaming.OutputMode.Append)
@@ -388,7 +389,7 @@ class StreamOpsSpec extends SparkSpecBase {
       .find(_.toString.endsWith(".parquet")).get
     java.nio.file.Files.move(found, staging.resolve("00.parquet"))
     val stream = StreamOps.fileStream(spark, staging.toString, ev.schema)
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.scd2Changes(spark, stream, "user_id", "event_type",
         "us", "event_id"),
       "scd2_nulls_out", org.apache.spark.sql.streaming.OutputMode.Append)
@@ -412,7 +413,7 @@ class StreamOpsSpec extends SparkSpecBase {
     val raw = spark.read.parquet(s"$sf/events.parquet")
     val stream = graft.Tables.normalizeEventTs(
       StreamOps.fileStream(ss, stagedDir, raw.schema))
-    val streamed = StreamOps.runToMemory(
+    val streamed = runToMemory(
       StreamOps.tumblingDailyAgg(stream, "ts", "user_id", "value"),
       "rocksdb_out", org.apache.spark.sql.streaming.OutputMode.Complete)
     val got = streamed
