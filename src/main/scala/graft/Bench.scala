@@ -263,7 +263,7 @@ object Bench {
               val rs = st.executeQuery(sql)
               while (rs.next()) {} // drain: materialize every row
               rs.close(); true
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               System.err.println(s"[bench] duckdb $name failed: ${e.getMessage}")
               errs += 1; false
             }
@@ -271,7 +271,7 @@ object Bench {
           }.toMap
           Some(((System.nanoTime() - t0) / 1e9, times, errs))
         } finally con.close()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] duckdb pairing unavailable: ${e.getMessage}")
         None
       } }
@@ -303,7 +303,7 @@ object Bench {
             }.toSeq.takeRight(6)
           if (ducks.isEmpty) None
           else Some((ducks.min, ducks.max, ducks.size))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] window-band unavailable: ${e.getMessage}")
           None
         }
@@ -362,7 +362,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(outFile, "UTF-8")
       try w.println(fullJson) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     println(fullJson)
@@ -420,7 +420,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(summaryFile, "UTF-8")
       try w.println(summaryJson) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(
         s"[bench] could not write $summaryFile: ${e.getMessage}")
     }

@@ -21,6 +21,13 @@ object Scratch {
     f.delete()
   }
 
+  /** Run `body` on a new directory under `java.io.tmpdir`, deleted
+    * afterwards whatever `body` does. */
+  def withTempDir[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally deleteTree(dir.toFile)
+  }
+
   /** `<base>/graft_<tag>_<appId>_<dir, sanitized>`. The application id
     * keeps concurrent JVMs on one dataset apart (one process's reset
     * must not race another's read), and the dir keeps datasets apart

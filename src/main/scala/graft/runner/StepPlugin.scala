@@ -97,6 +97,12 @@ final case class StepContext(
     args.get(key).map(_.toString.toBoolean).getOrElse(default)
   def argInt(key: String, default: Int): Int =
     args.get(key).map(_.toString.toInt).getOrElse(default)
+  /** A list arg: a YAML list gives its elements and a scalar is a
+    * one-element list (`urls: a` reads as `urls: [a]`). */
+  def argList(key: String): Option[Seq[String]] = args.get(key).map {
+    case l: Seq[_] => l.map(_.toString)
+    case s => Seq(s.toString)
+  }
   /** `overwrite: false` is the reference's idempotence contract
     * (e.g. /root/reference/pipelines/cdl/download-national-30m-2008-2025.yml:22). */
   def overwrite: Boolean = argBool("overwrite", default = false)

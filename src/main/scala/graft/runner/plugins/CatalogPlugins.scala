@@ -67,8 +67,7 @@ object VectorFactsPlugin extends StepPlugin {
       case None =>
         Paths.get(ctx.argStr("output_dir")).resolve("vector_facts.json")
     }
-    Files.createDirectories(out.getParent)
-    Files.writeString(out, JsonUtil.write(facts))
+    Ledger.commit(out)(Files.writeString(_, JsonUtil.write(facts)))
     StepResult(Map("vector_facts_json" -> out.toString,
       "feature_count" -> facts("feature_count")))
   }
@@ -84,36 +83,34 @@ object EvidenceBundlePlugin extends StepPlugin {
     // supplemental_urls_file / dataset_id / vector_facts_json
     // (/root/reference/pipelines/tiger/county.yml:44-51)
     val outDir = Paths.get(ctx.argAnyStr("out", "output_dir"))
-    Files.createDirectories(outDir)
     val df = ctx.spark.read.parquet(ctx.argAnyStr("path", "input_path"))
     val n = ctx.argInt("sample_rows", 10)
     val sample = outDir.resolve("sample.json")
-    Files.writeString(sample,
-      df.limit(n).toJSON.collect().mkString("[\n", ",\n", "\n]"))
+    val rows = df.limit(n).toJSON.collect().mkString("[\n", ",\n", "\n]")
+    Ledger.commit(sample)(Files.writeString(_, rows))
     val schema = outDir.resolve("schema.json")
-    Files.writeString(schema, df.schema.prettyJson)
+    Ledger.commit(schema)(Files.writeString(_, df.schema.prettyJson))
     val notes = outDir.resolve("notes.md")
-    Files.writeString(notes, ctx.argOpt("notes").map(_.toString).getOrElse(""))
+    Ledger.commit(notes)(Files.writeString(_,
+      ctx.argOpt("notes").map(_.toString).getOrElse("")))
     val urls = outDir.resolve("supplemental_urls.txt")
     // inline list (`supplemental_urls`) or a urls FILE whose lines are
     // bundled (`supplemental_urls_file`, the reference's form — resolved
     // against the runner's asset roots like any pipeline-relative path)
-    val urlLines = ctx.argOpt("supplemental_urls").map {
-      case l: Seq[_] => l.mkString("\n")
-      case s => s.toString
-    }.orElse(ctx.argOpt("supplemental_urls_file").map { f =>
-      val p = ctx.runner.resolvePath(Paths.get(f.toString),
-        ctx.currentPipeline.map(Paths.get(_)))
-      Files.readString(p)
-    }).getOrElse("")
-    Files.writeString(urls, urlLines)
+    val urlLines = ctx.argList("supplemental_urls").map(_.mkString("\n"))
+      .orElse(ctx.argOpt("supplemental_urls_file").map { f =>
+        val p = ctx.runner.resolvePath(Paths.get(f.toString),
+          ctx.currentPipeline.map(Paths.get(_)))
+        Files.readString(p)
+      }).getOrElse("")
+    Ledger.commit(urls)(Files.writeString(_, urlLines))
     // dataset identity + upstream facts pointer ride along so the
     // bundle is self-describing (what the research step consumes)
     val meta = outDir.resolve("dataset.json")
-    Files.writeString(meta, JsonUtil.write(Map(
+    Ledger.commit(meta)(Files.writeString(_, JsonUtil.write(Map(
       "dataset_id" -> ctx.argOpt("dataset_id").map(_.toString).getOrElse(""),
       "vector_facts_json" ->
-        ctx.argOpt("vector_facts_json").map(_.toString).getOrElse(""))))
+        ctx.argOpt("vector_facts_json").map(_.toString).getOrElse("")))))
     StepResult(Map(
       "sample_file" -> sample.toString, "schema_file" -> schema.toString,
       "notes_file" -> notes.toString,
@@ -137,7 +134,6 @@ object DatasetResearchPlugin extends StepPlugin {
       case Some(p) => Paths.get(p.toString)
       case None => Paths.get(ctx.argStr("output_dir")).resolve("research.md")
     }
-    Files.createDirectories(out.getParent)
     def opt(k: String) = ctx.argOpt(k).map(_.toString).getOrElse("")
     val doc = s"""# Dataset research (deterministic stub)
                  |dataset_id: ${opt("dataset_id")}
@@ -149,7 +145,7 @@ object DatasetResearchPlugin extends StepPlugin {
                  |notes: ${opt("notes_file")}
                  |supplemental_urls: ${opt("supplemental_urls_file")}
                  |""".stripMargin
-    Files.writeString(out, doc)
+    Ledger.commit(out)(Files.writeString(_, doc))
     StepResult(Map("output_file" -> out.toString))
   }
 }
@@ -194,8 +190,7 @@ object CatalogJsonUpsertPlugin extends StepPlugin {
       case _ => Map.empty[String, Any]
     }
     val merged = existing + (datasetId -> (old ++ tagged))
-    Files.createDirectories(path.getParent)
-    Files.writeString(path, JsonUtil.write(merged))
+    Ledger.commit(path)(Files.writeString(_, JsonUtil.write(merged)))
     StepResult(Map("catalog_json" -> path.toString, "dataset_id" -> datasetId))
   }
 }
@@ -219,12 +214,8 @@ object CatalogYamlSyncPlugin extends StepPlugin {
     // sibling checkout the YAML lands in, checkout-relative
     val target = ctx.fsPath(ctx.argAnyStr("target_dir", "catalog_repo"))
       .resolve(s"$datasetId.yml")
-    Files.createDirectories(target.getParent)
     val overwriteManaged = ctx.argBool("overwrite_managed_fields", false)
-    val managed: Set[String] = ctx.argOpt("managed_fields") match {
-      case Some(l: Seq[_]) => l.map(_.toString).toSet
-      case _ => Set.empty
-    }
+    val managed = ctx.argList("managed_fields").getOrElse(Nil).toSet
     val existing: Map[String, Any] =
       if (Files.exists(target))
         graft.spec.Pipeline.asMap(Yaml.parse(Files.readString(target)))
@@ -232,7 +223,7 @@ object CatalogYamlSyncPlugin extends StepPlugin {
     val merged = if (overwriteManaged) existing ++ entry
     else entry ++ existing.view.filterKeys(managed).toMap ++
       (existing -- entry.keySet)
-    Files.writeString(target, Yaml.dump(merged))
+    Ledger.commit(target)(Files.writeString(_, Yaml.dump(merged)))
     StepResult(Map("target_file" -> target.toString))
   }
 }

@@ -1,8 +1,7 @@
 package graft.runner.plugins
 
-import java.io.{FileOutputStream, InputStream}
 import java.net.URI
-import java.nio.file.{FileSystems, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileSystems, Files, Path, Paths}
 import java.util.zip.{GZIPInputStream, ZipInputStream}
 
 import scala.jdk.CollectionConverters._
@@ -104,10 +103,7 @@ object WebDownloadPlugin extends StepPlugin {
     val out = Paths.get(ctx.argStr("out"))
     Files.createDirectories(out)
     val urls: Seq[String] = ctx.argOpt("url").map(u => Seq(u.toString))
-      .orElse(ctx.argOpt("urls").map {
-        case l: Seq[_] => l.map(_.toString)
-        case s => Seq(s.toString)
-      })
+      .orElse(ctx.argList("urls"))
       .orElse(ctx.argOpt("urls_file").map { f =>
         // checkout-relative like every reference file arg
         // (`urls_file: pipelines/tiger/county_urls.txt`,
@@ -153,18 +149,6 @@ object WebDownloadPlugin extends StepPlugin {
   private def etagSidecar(target: Path): Path =
     target.resolveSibling("." + target.getFileName.toString + ".etag")
 
-  /** Write `target` through a hidden sibling (`.name.part`) that is
-    * moved into place only once `write` returns: an interrupted
-    * download leaves no target, so the next run fetches it again. */
-  private def stageThenMove(target: Path)(write: Path => Unit): Unit = {
-    val part =
-      target.resolveSibling("." + target.getFileName.toString + ".part")
-    try {
-      write(part)
-      Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(part)
-  }
-
   private def fetch(url: String, target: Path, timeoutMs: Int,
                     conditional: Boolean): FetchOutcome = {
     val uri = URI.create(url)
@@ -174,8 +158,7 @@ object WebDownloadPlugin extends StepPlugin {
         !Files.getLastModifiedTime(src)
           .toInstant.isAfter(Files.getLastModifiedTime(target).toInstant))
         return NotModified
-      stageThenMove(target)(
-        Files.copy(src, _, StandardCopyOption.REPLACE_EXISTING))
+      Ledger.commit(target)(Ledger.fetch(url, _, timeoutMs))
       Fetched
     } else try {
       val conn = uri.toURL.openConnection()
@@ -196,17 +179,9 @@ object WebDownloadPlugin extends StepPlugin {
       }
       if (conn.getResponseCode == 304) { conn.disconnect(); NotModified }
       else {
-        val in = conn.getInputStream
-        try stageThenMove(target) { part =>
-          val n = Files.copy(in, part, StandardCopyOption.REPLACE_EXISTING)
-          // the JDK client ends a fixed-length body at a dropped
-          // connection without an error: compare the length it promised
-          val promised = conn.getContentLengthLong
-          if (promised >= 0 && n != promised) throw new java.io.IOException(
-            s"$url: connection closed after $n of $promised bytes")
-        } finally in.close()
+        Ledger.commit(target)(Ledger.fetchBody(conn, _))
         Option(conn.getHeaderField("ETag")) match {
-          case Some(tag) => Files.writeString(etagFile, tag)
+          case Some(tag) => Ledger.commit(etagFile)(Files.writeString(_, tag))
           case None => Files.deleteIfExists(etagFile) // stale validator
         }
         Fetched
@@ -240,8 +215,7 @@ object WebDownloadPlugin extends StepPlugin {
   * in-memory lister over a local tree).
   */
 class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
-                       fetch: (String, Path) => Unit,
-                       fetchTimed: Option[(String, Path, Int) => Unit] = None)
+                       fetch: (String, Path, Int) => Unit)
   extends StepPlugin {
   val name = "ftp_download_tree"
 
@@ -253,10 +227,6 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
     // reference contract: per-step network timeout
     // (/root/reference/pipelines/prism/download-ts-ppt-day.yml:25)
     val timeoutMs = ctx.argInt("timeout_seconds", 120) * 1000
-    val doFetch: (String, Path) => Unit = fetchTimed match {
-      case Some(ft) => (u, t) => ft(u, t, timeoutMs)
-      case None => fetch
-    }
     Files.createDirectories(out)
     val matcher = FileSystems.getDefault.getPathMatcher(s"glob:$glob")
     val uri = URI.create(url)
@@ -268,10 +238,11 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
       // "../../x" must not escape the mirror root (same contract as
       // ArchiveExtractPlugin's zip-slip check)
       require(target.startsWith(out), s"tree-walk slip blocked: $rel")
-      Files.createDirectories(
-        Option(target.getParent).getOrElse(out))
       if (!Ledger.shouldWrite(target, ctx.overwrite)) skipped += 1
-      else try { doFetch(sourceUrl, target); fetched += 1 }
+      else try {
+        Ledger.commit(target)(fetch(sourceUrl, _, timeoutMs))
+        fetched += 1
+      }
       catch {
         // OFFLINE GRACE: a mirror pass that cannot reach the origin
         // keeps an already-staged tree (the overwrite:false
@@ -279,12 +250,10 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
         // Scoped tight: only under overwrite:false AND a non-empty
         // mirror dir — an EMPTY mirror has nothing staged to keep and
         // still fails. Counted separately (n_offline_kept) so a run
-        // that degraded this way is visible in the step result. A
-        // failed partial target is removed — a 0-byte file would read
-        // as materialized on the next run.
+        // that degraded this way is visible in the step result; the
+        // failed fetch's commit left no partial target behind.
         case _: java.io.IOException
             if !ctx.overwrite && Ledger.materialized(out) =>
-          Files.deleteIfExists(target)
           offlineKept += 1
       }
     }
@@ -378,27 +347,12 @@ object RemoteTreeWalker {
         } finally in.close()
       } catch { case _: Exception => None }
   }
-
-  def jdkFetch(url: String, target: Path): Unit =
-    jdkFetchTimed(url, target, 120 * 1000)
-
-  /** URL fetch with connect/read timeouts — `timeout_seconds` is part
-    * of the reference's download contract (a hung FTP data channel must
-    * fail the step, not the whole run's wall clock). */
-  def jdkFetchTimed(url: String, target: Path, timeoutMs: Int): Unit = {
-    val conn = URI.create(url).toURL.openConnection()
-    conn.setConnectTimeout(timeoutMs)
-    conn.setReadTimeout(timeoutMs)
-    val in = conn.getInputStream
-    try Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
-    finally in.close()
-  }
 }
 
-/** Default instance: JDK ftp listing + timed URL fetch. */
+/** Default instance: JDK ftp listing + [[Ledger.fetch]] with the step's
+  * `timeout_seconds` (part of the reference's download contract). */
 object FtpDownloadTreePlugin extends RemoteTreeWalker(
-  RemoteTreeWalker.JdkFtpLister, RemoteTreeWalker.jdkFetch,
-  fetchTimed = Some(RemoteTreeWalker.jdkFetchTimed))
+  RemoteTreeWalker.JdkFtpLister, Ledger.fetch)
 
 /** `archive_extract` — unzip one archive or a (recursive `**`) glob
   * (/root/reference/pipelines/cdl/download-national-30m-2008-2025.yml:27-34;
@@ -420,7 +374,7 @@ object ArchiveExtractPlugin extends StepPlugin {
       if (!Ledger.shouldWrite(marker, ctx.overwrite)) skipped += 1
       else {
         unzip(a, out)
-        Files.writeString(marker, a.toString)
+        Ledger.commit(marker)(Files.writeString(_, a.toString))
         extracted += 1
       }
     }
@@ -451,19 +405,11 @@ object ArchiveExtractPlugin extends StepPlugin {
         val target = out.resolve(e.getName).normalize
         require(target.startsWith(out), s"zip slip blocked: ${e.getName}")
         if (e.isDirectory) Files.createDirectories(target)
-        else {
-          Files.createDirectories(target.getParent)
-          copyStream(zin, target)
-        }
+        else Ledger.commit(target)(Files.copy(zin, _))
         zin.closeEntry()
         e = zin.getNextEntry
       }
     } finally zin.close()
-  }
-
-  private def copyStream(in: InputStream, target: Path): Unit = {
-    val os = new FileOutputStream(target.toFile)
-    try in.transferTo(os) finally os.close()
   }
 }
 
@@ -476,14 +422,14 @@ object GzipExtractPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val src = Paths.get(ctx.argStr("archive"))
     val out = Paths.get(ctx.argStr("out"))
-    Files.createDirectories(out)
     val target = out.resolve(src.getFileName.toString.stripSuffix(".gz"))
     if (!Ledger.shouldWrite(target, ctx.overwrite))
       StepResult(Map("out" -> target.toString), skipped = true)
     else {
-      val in = new GZIPInputStream(Files.newInputStream(src))
-      try Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
-      finally in.close()
+      Ledger.commit(target) { part =>
+        val in = new GZIPInputStream(Files.newInputStream(src))
+        try Files.copy(in, part) finally in.close()
+      }
       StepResult(Map("out" -> target.toString))
     }
   }
@@ -519,21 +465,15 @@ object CombineFilesPlugin extends StepPlugin {
       case other => throw new IllegalArgumentException(
         s"combine_files format must be csv|tsv|jsonl|parquet, got '$other'")
     }
-    val tmp = Files.createTempDirectory("combine_files")
-    val tmpOut = tmp.resolve("out")
-    val w = df.coalesce(1).write
-    fmt match {
-      case "csv" => w.option("header", "true").csv(tmpOut.toString)
-      case "tsv" => w.option("header", "true").option("sep", "\t")
-        .csv(tmpOut.toString)
-      case "jsonl" | "json" => w.json(tmpOut.toString)
-      case "parquet" => w.parquet(tmpOut.toString)
+    Ledger.commitSingleFile(outFile) { dir =>
+      val w = df.coalesce(1).write
+      fmt match {
+        case "csv" => w.option("header", "true").csv(dir)
+        case "tsv" => w.option("header", "true").option("sep", "\t").csv(dir)
+        case "jsonl" | "json" => w.json(dir)
+        case "parquet" => w.parquet(dir)
+      }
     }
-    val part = Files.list(tmpOut).iterator().asScala
-      .find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException("no part file written"))
-    Files.createDirectories(outFile.getParent)
-    Files.move(part, outFile, StandardCopyOption.REPLACE_EXISTING)
     StepResult(Map("output_file" -> outFile.toString,
       "n_rows" -> df.count()))
   }

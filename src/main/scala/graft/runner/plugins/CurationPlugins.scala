@@ -176,14 +176,9 @@ object TargetedDeletePlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val path = ctx.argStr("dataset_path")
-    val keys = ctx.argOpt("keys") match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case _ => sys.error("targeted_delete: 'keys' list is required")
-    }
-    val pcols = ctx.argOpt("partition_cols") match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case _ => Nil
-    }
+    val keys = ctx.argList("keys")
+      .getOrElse(sys.error("targeted_delete: 'keys' list is required"))
+    val pcols = ctx.argList("partition_cols").getOrElse(Nil)
     val before = ctx.spark.read.parquet(path).count()
     val doomed = (ctx.argOpt("keys_input"), ctx.argOpt("where")) match {
       case (Some(p), _) => ctx.spark.read.parquet(p.toString)

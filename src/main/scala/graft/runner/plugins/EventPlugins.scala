@@ -51,10 +51,8 @@ object EventFunnelPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val stages = ctx.argOpt("stages") match {
-      case Some(l: Seq[_]) if l.nonEmpty => l.map(_.toString)
-      case _ => sys.error("event_funnel: 'stages' list is required")
-    }
+    val stages = ctx.argList("stages").filter(_.nonEmpty)
+      .getOrElse(sys.error("event_funnel: 'stages' list is required"))
     val userCol = ctx.argOpt("user_col").map(_.toString).getOrElse("user_id")
     val kindCol = ctx.argOpt("kind_col").map(_.toString).getOrElse("event_type")
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
@@ -204,10 +202,9 @@ object SketchQuantilesPlugin extends StepPlugin {
     val valueCol = ctx.argStr("value_col")
     val width = ctx.argOpt("width").map(_.toString.toDouble).getOrElse(25.0)
     val origin = ctx.argOpt("origin").map(_.toString.toDouble).getOrElse(0.0)
-    val qs = ctx.argOpt("quantiles") match {
-      case Some(l: Seq[_]) if l.nonEmpty => l.map(_.toString.toDouble)
-      case Some(other) => sys.error(
-        s"sketch_quantiles: 'quantiles' must be a list, got $other")
+    val qs = ctx.argList("quantiles") match {
+      case Some(l) if l.nonEmpty => l.map(_.toDouble)
+      case Some(_) => sys.error("sketch_quantiles: 'quantiles' is empty")
       case None => Seq(0.25, 0.5, 0.9, 0.99)
     }
     val raw = ctx.spark.read.parquet(ctx.argStr("input"))

@@ -1,8 +1,6 @@
 package graft.runner.plugins
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -45,17 +43,13 @@ object GeoPluginUtil {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  /** Reference output shape is one CSV file (county_ppt_{day}.csv —
+  /** A parquet dataset, or at a `.csv` path the reference's output
+    * shape: one CSV file (county_ppt_{day}.csv —
     * pipelines/prism/county_daily_aggregate.yml:29). */
-  def writeSingleCsv(df: DataFrame, path: String): Unit = {
-    val out = Paths.get(path)
-    val tmp = Files.createTempDirectory("geo_csv").resolve("out")
-    df.coalesce(1).write.option("header", "true").csv(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.startsWith("part-")).get
-    Files.createDirectories(out.getParent)
-    Files.move(part, out, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeTable(df: DataFrame, path: String): Unit =
+    if (path.endsWith(".csv")) Ledger.commitSingleFile(Paths.get(path))(
+      df.coalesce(1).write.option("header", "true").csv(_))
+    else writeParquet(df, path)
 
   /** Polygon dimension: `selector_path` (stage-ts-ppt-day-state.yml:30)
     * or the county aggregates' `county_path`
@@ -219,8 +213,7 @@ object GeoCountyAggregatePlugin extends StepPlugin {
     val stats = ZonalStats(assigned, keys, col("value"), prefix)
     val out = ctx.argOpt("output_path").map(_.toString)
       .getOrElse(outPath(ctx))
-    if (out.endsWith(".csv")) writeSingleCsv(stats, out)
-    else writeParquet(stats, out)
+    writeTable(stats, out)
     StepResult(Map("output_path" -> out))
   }
 }
@@ -249,8 +242,7 @@ object GeoCountyWeightedAggregatePlugin extends StepPlugin {
       .drop(s"${prefix}_wavg_num", s"${prefix}_wavg_den")
     val path = ctx.argOpt("output_file").map(_.toString)
       .getOrElse(outPath(ctx))
-    if (path.endsWith(".csv")) writeSingleCsv(out, path)
-    else writeParquet(out, path)
+    writeTable(out, path)
     StepResult(Map("output_file" -> path))
   }
 }

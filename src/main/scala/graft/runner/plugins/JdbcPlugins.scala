@@ -104,8 +104,7 @@ object JdbcWritePlugin extends StepPlugin {
                               sparkMode: String,
                               props: Properties): Unit =
       graft.sources.DuckGate.withDuck {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_duck_bulk")
-    try {
+    graft.Scratch.withTempDir("graft_duck_bulk") { tmp =>
       df.write.mode("overwrite").parquet(tmp.toString)
       val staged = Option(tmp.toFile.listFiles())
         .getOrElse(Array.empty[java.io.File])
@@ -152,7 +151,7 @@ object JdbcWritePlugin extends StepPlugin {
         con.createStatement().execute(sql)
       } finally con.close()
       }
-    } finally graft.Scratch.deleteTree(tmp.toFile)
+    }
   }
 
   /** Derby bulk-load fast path (the r9 judge's ask #7, mirroring the
@@ -180,8 +179,7 @@ object JdbcWritePlugin extends StepPlugin {
         case _ => false
       })
     if (!bulkSafe) return false
-    val tmp = java.nio.file.Files.createTempDirectory("graft_derby_bulk")
-    try {
+    graft.Scratch.withTempDir("graft_derby_bulk") { tmp =>
       df.write.mode("overwrite")
         .option("header", "false").option("emptyValue", "")
         .csv(tmp.toString)
@@ -194,7 +192,8 @@ object JdbcWritePlugin extends StepPlugin {
         .filter(f => f.getName.startsWith("part-") &&
           f.getName.endsWith(".csv"))
         .sortBy(_.getName)
-      if (parts.nonEmpty) {
+      if (parts.isEmpty) true
+      else {
         val con = java.sql.DriverManager.getConnection(url)
         try {
           val cs = con.prepareCall(
@@ -212,6 +211,7 @@ object JdbcWritePlugin extends StepPlugin {
             cs.setShort(7, 0.toShort) // append into the fresh table
             cs.execute()
           }
+          true
         } catch {
           // a mid-import failure (e.g. a NaN/Infinity double — Spark's
           // CSV writer emits 'NaN'/'Infinity', which Derby DOUBLE
@@ -227,7 +227,7 @@ object JdbcWritePlugin extends StepPlugin {
               s"(${e.getMessage}); re-creating $table and falling back " +
               "to the row-based JDBC writer")
             df.limit(0).write.mode("overwrite").jdbc(url, table, props)
-            return false
+            false
           case e: java.sql.SQLException =>
             throw new IllegalStateException(
               s"derbyBulkWrite: bulk append into $table failed mid-" +
@@ -235,8 +235,7 @@ object JdbcWritePlugin extends StepPlugin {
                 "a partial import on top of its pre-existing rows", e)
         } finally con.close()
       }
-      true
-    } finally graft.Scratch.deleteTree(tmp.toFile)
+    }
   }
 
   /** The physical table write, routed per dialect: DuckDB takes the
@@ -330,11 +329,7 @@ object JdbcWritePlugin extends StepPlugin {
     val table = ctx.argStr("table")
     val fmt = ctx.argOpt("format").map(_.toString).getOrElse("parquet")
     val mode = ctx.argOpt("mode").map(_.toString).getOrElse("overwrite")
-    val keys = ctx.argOpt("keys") match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case Some(s) => Seq(s.toString)
-      case None => Nil
-    }
+    val keys = ctx.argList("keys").getOrElse(Nil)
     val incoming = ctx.spark.read.format(fmt)
       .options(if (fmt == "csv") Map("header" -> "true", "inferSchema" -> "true")
                else Map.empty[String, String])

@@ -1,6 +1,6 @@
 package graft.runner.plugins
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -69,10 +69,9 @@ object PublishTargetPlugin extends StepPlugin {
         if (Files.isDirectory(source)) source.relativize(f).toString
         else f.getFileName.toString
       val dest = targetDir.resolve(rel)
-      Files.createDirectories(dest.getParent)
       if (!Ledger.shouldWrite(dest, ctx.overwrite)) skipped += 1
       else {
-        Files.copy(f, dest, StandardCopyOption.REPLACE_EXISTING)
+        Ledger.commit(dest)(Files.copy(f, _))
         published += 1
       }
       val sha = java.security.MessageDigest.getInstance("SHA-256")
@@ -89,7 +88,8 @@ object PublishTargetPlugin extends StepPlugin {
            |  "n_files": ${files.size},
            |  "files": [${entries.mkString(", ")}]
            |}""".stripMargin
-      Files.writeString(targetDir.resolve("_manifest.json"), manifest)
+      Ledger.commit(targetDir.resolve("_manifest.json"))(
+        Files.writeString(_, manifest))
     }
 
     StepResult(Map("target_uri" -> uri.toString,

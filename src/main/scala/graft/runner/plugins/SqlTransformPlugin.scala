@@ -1,5 +1,7 @@
 package graft.runner.plugins
 
+import java.nio.file.Paths
+
 import graft.runner._
 
 /** `sql_transform` — run a SQL statement over registered inputs of any
@@ -58,7 +60,8 @@ object SqlTransformPlugin extends StepPlugin {
     // .jsonl/.tsv/.orc would emit parquet bytes that the NEXT step's
     // extension-routed read misparses; .csv keeps the reference's
     // single-file contract (header'd, one part)
-    if (out.endsWith(".csv")) GeoPluginUtil.writeSingleCsv(result, out)
+    if (out.endsWith(".csv")) Ledger.commitSingleFile(Paths.get(out))(
+      result.coalesce(1).write.option("header", "true").csv(_))
     else graft.sources.Formats.write(result, out,
       format = graft.sources.Formats.infer(out).orElse(Some("parquet")))
     StepResult(Map("output_path" -> out, "n_tables" -> tables.size))

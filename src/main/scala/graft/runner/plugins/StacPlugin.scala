@@ -1,7 +1,7 @@
 package graft.runner.plugins
 
 import java.net.URI
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import graft.runner._
 
@@ -26,15 +26,14 @@ object StacAssetDownloadPlugin extends StepPlugin {
     val maxItems = ctx.argInt("max_items", 0)
     val items = search(ctx)
     val selected = if (maxItems > 0) items.take(maxItems) else items
-    val assetKeys: Seq[String] = ctx.argOpt("asset_keys") match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case _ => Seq.empty
-    }
+    val assetKeys = ctx.argList("asset_keys").getOrElse(Nil)
+    val timeoutMs = ctx.argInt("timeout_seconds", 180) * 1000
     var fetched = 0
     selected.foreach { item =>
       val id = item.getOrElse("id", "item").toString
       if (ctx.argBool("save_item_json", default = false)) {
-        Files.writeString(out.resolve(s"$id.json"), JsonUtil.write(item))
+        Ledger.commit(out.resolve(s"$id.json"))(
+          Files.writeString(_, JsonUtil.write(item)))
       }
       val assets = item.getOrElse("assets", Map.empty)
         .asInstanceOf[Map[String, Any]]
@@ -46,7 +45,7 @@ object StacAssetDownloadPlugin extends StepPlugin {
         if (href.nonEmpty) {
           val target = out.resolve(s"${id}_$key${ext(href)}")
           if (Ledger.shouldWrite(target, ctx.overwrite)) {
-            stage(sign(href, ctx), target)
+            Ledger.commit(target)(Ledger.fetch(sign(href, ctx), _, timeoutMs))
             fetched += 1
           }
         }
@@ -60,17 +59,6 @@ object StacAssetDownloadPlugin extends StepPlugin {
     val f = href.split('/').last
     val i = f.lastIndexOf('.')
     if (i >= 0) f.substring(i) else ""
-  }
-
-  private def stage(href: String, target: java.nio.file.Path): Unit = {
-    val uri = URI.create(href)
-    if (uri.getScheme == "file")
-      Files.copy(Paths.get(uri), target, StandardCopyOption.REPLACE_EXISTING)
-    else {
-      val in = uri.toURL.openStream()
-      try Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
-      finally in.close()
-    }
   }
 
   /** Asset-href signing (`sign_api_url`, the reference's Planetary-

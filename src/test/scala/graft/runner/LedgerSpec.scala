@@ -25,6 +25,13 @@ class LedgerSpec extends AnyFunSuite {
       overwrite = false))
   }
 
+  test("a directory holding only a staging leftover (.<name>.part) is " +
+    "not materialized") {
+    val dir = outDir(".a.csv.part", ".b.csv.part/part-00000.csv")
+    assert(!Ledger.materialized(dir))
+    assert(Ledger.materialized(outDir(".a.csv.part", "a.csv")))
+  }
+
   test("a committed Spark write (part files + _SUCCESS) is materialized") {
     val dir = outDir("part-00000.parquet", "_SUCCESS")
     assert(Ledger.materialized(dir))

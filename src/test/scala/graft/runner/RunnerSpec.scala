@@ -332,7 +332,7 @@ class RunnerSpec extends SparkSpecBase {
     }
     val fetched = collection.mutable.ListBuffer[String]()
     val walker = new RemoteTreeWalker(lister,
-      (url, target) => { fetched += url; Files.writeString(target, url) })
+      (url, target, _) => { fetched += url; Files.writeString(target, url) })
     val root = tmpDir()
     val r = new PipelineRunner(
       DefaultRegistry().withPlugins(Seq(walker)),
@@ -376,7 +376,7 @@ class RunnerSpec extends SparkSpecBase {
     }
     val fetched = collection.mutable.ListBuffer[String]()
     val walker = new RemoteTreeWalker(lister,
-      (url, target) => { fetched += url; Files.writeString(target, url) })
+      (url, target, _) => { fetched += url; Files.writeString(target, url) })
     val root = tmpDir()
     val r = new PipelineRunner(
       DefaultRegistry().withPlugins(Seq(walker)),
@@ -397,7 +397,7 @@ class RunnerSpec extends SparkSpecBase {
     val loopLister = new RemoteTreeWalker.Lister {
       def list(url: String) = Some(Seq("x/"))
     }
-    val loopWalker = new RemoteTreeWalker(loopLister, (_, _) => ())
+    val loopWalker = new RemoteTreeWalker(loopLister, (_, _, _) => ())
     val r2 = new PipelineRunner(
       DefaultRegistry().withPlugins(Seq(loopWalker)),
       env = Map("basedir" -> root.toString),

@@ -1,0 +1,251 @@
+package graft.runner
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
+
+import graft.SparkSpecBase
+import graft.runner.plugins.{CatalogJsonUpsertPlugin, DefaultRegistry,
+  RemoteTreeWalker}
+import graft.spec.Scope
+
+/** Every file a plugin writes outside a Spark directory write goes
+  * through [[Ledger.commit]]: a write cut off partway leaves no target
+  * that a later run would skip as finished, the previous bytes of a
+  * replaced target stay whole, and no staging file is left beside it. */
+class StagedWriteSpec extends SparkSpecBase {
+
+  private def tmpDir(): Path = Files.createTempDirectory("graft_staged")
+
+  private def names(dir: Path): Set[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSet
+    finally s.close()
+  }
+
+  private def run(root: Path, yaml: String,
+                  plugins: StepPlugin*): Map[String, Any] = {
+    val p = root.resolve("p.yml")
+    Files.writeString(p, yaml)
+    new PipelineRunner(DefaultRegistry().withPlugins(plugins),
+      env = Map("basedir" -> root.toString),
+      sparkProvider = () => spark, assetRoots = Seq(root))
+      .runFile(p).results.head.fields
+  }
+
+  /** A one-item STAC FeatureCollection whose item `s1` has one asset
+    * per `(key, href)`. */
+  private def stacCatalog(root: Path, assets: (String, String)*): Path = {
+    val as = assets.map { case (k, h) => s""""$k": {"href": "$h"}""" }
+    val page = root.resolve("items.json")
+    Files.writeString(page, s"""{"features": [{"id": "s1",
+      |  "properties": {"datetime": "2024-06-01T12:00:00Z"},
+      |  "assets": {${as.mkString(", ")}}}]}""".stripMargin)
+    page
+  }
+
+  test("a STAC asset cut off mid-body leaves no target; the next run " +
+    "fetches it") {
+    // the server promises ten times the bytes it sends, then closes
+    val truncate = new AtomicBoolean(true)
+    val body = "0123456789".getBytes
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/B04.tif", (ex: com.sun.net.httpserver.HttpExchange) => {
+      val promised = if (truncate.get()) body.length * 10L else body.length
+      ex.sendResponseHeaders(200, promised)
+      ex.getResponseBody.write(body)
+      ex.getResponseBody.flush()
+      ex.close()
+    })
+    srv.start()
+    try {
+      val root = tmpDir()
+      val page = stacCatalog(root,
+        "B04" -> s"http://127.0.0.1:${srv.getAddress.getPort}/B04.tif")
+      val yaml = s"""steps:
+        |  - plugin: stac_asset_download
+        |    args:
+        |      api_url: "${page.toUri}"
+        |      timeout_seconds: 10
+        |      out: "{env.basedir}/staged"
+        |""".stripMargin
+      intercept[Exception](run(root, yaml))
+      assert(names(root.resolve("staged")).isEmpty,
+        "no target and no staging file")
+      truncate.set(false)
+      assert(run(root, yaml)("n_assets") == 1)
+      assert(Files.readAllBytes(root.resolve("staged/s1_B04.tif"))
+        .sameElements(body))
+    } finally srv.stop(0)
+  }
+
+  test("asset_keys given as a scalar fetches only that asset") {
+    val root = tmpDir()
+    Seq("B04", "B08").foreach(b => Files.writeString(root.resolve(s"$b.tif"), b))
+    val page = stacCatalog(root,
+      "B04" -> root.resolve("B04.tif").toUri.toString,
+      "B08" -> root.resolve("B08.tif").toUri.toString)
+    val res = run(root, s"""steps:
+      |  - plugin: stac_asset_download
+      |    args:
+      |      api_url: "${page.toUri}"
+      |      asset_keys: B04
+      |      out: "{env.basedir}/staged"
+      |""".stripMargin)
+    assert(res("n_assets") == 1, res.toString)
+    assert(names(root.resolve("staged")) == Set("s1_B04.tif"))
+  }
+
+  test("a tree-walk fetch that throws after a partial write leaves no " +
+    "target; the next run fetches it") {
+    val lister = new RemoteTreeWalker.Lister {
+      def list(url: String) =
+        if (url.stripSuffix("/") == "ftp://host/d") Some(Seq("a.bin"))
+        else None
+    }
+    val fail = new AtomicBoolean(true)
+    val walker = new RemoteTreeWalker(lister, (url, to, _) => {
+      Files.writeString(to, "partial")
+      if (fail.get()) throw new java.io.IOException(s"$url: data channel lost")
+      Files.writeString(to, url)
+    })
+    val root = tmpDir()
+    val yaml = s"""steps:
+      |  - plugin: ftp_download_tree
+      |    args:
+      |      url: "ftp://host/d"
+      |      out: "{env.basedir}/mirror"
+      |""".stripMargin
+    intercept[Exception](run(root, yaml, walker))
+    assert(names(root.resolve("mirror")).isEmpty)
+    fail.set(false)
+    assert(run(root, yaml, walker)("n_fetched") == 1)
+    assert(Files.readString(root.resolve("mirror/a.bin")) == "ftp://host/d/a.bin")
+  }
+
+  test("a truncated .gz fails without a partial target; the re-run " +
+    "extracts") {
+    val root = tmpDir()
+    val data = new Array[Byte](256 * 1024)
+    new scala.util.Random(7).nextBytes(data)
+    val buf = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(buf)
+    gz.write(data); gz.close()
+    val full = buf.toByteArray
+    val archive = root.resolve("t.bin.gz")
+    Files.write(archive, full.take(full.length / 2))
+    val yaml = s"""steps:
+      |  - plugin: gzip_extract
+      |    args:
+      |      archive: "$archive"
+      |      out: "{env.basedir}/extract"
+      |""".stripMargin
+    intercept[Exception](run(root, yaml))
+    assert(names(root.resolve("extract")).isEmpty)
+    Files.write(archive, full)
+    run(root, yaml)
+    assert(Files.readAllBytes(root.resolve("extract/t.bin")).sameElements(data))
+  }
+
+  test("a truncated zip leaves no .extracted_ marker; the re-run " +
+    "extracts") {
+    val root = tmpDir()
+    val big = new Array[Byte](128 * 1024)
+    new scala.util.Random(11).nextBytes(big)
+    val buf = new java.io.ByteArrayOutputStream()
+    val zos = new java.util.zip.ZipOutputStream(buf)
+    zos.putNextEntry(new java.util.zip.ZipEntry("a.txt"))
+    zos.write("alpha".getBytes); zos.closeEntry()
+    zos.putNextEntry(new java.util.zip.ZipEntry("inner/big.bin"))
+    zos.write(big); zos.closeEntry(); zos.close()
+    val full = buf.toByteArray
+    val archive = root.resolve("data.zip")
+    Files.write(archive, full.take(full.length / 2))
+    val yaml = s"""steps:
+      |  - plugin: archive_extract
+      |    args:
+      |      archive: "$archive"
+      |      out: "{env.basedir}/extract"
+      |""".stripMargin
+    intercept[Exception](run(root, yaml))
+    assert(!Files.exists(root.resolve("extract/.extracted_data.zip")))
+    assert(!Files.exists(root.resolve("extract/inner/big.bin")),
+      "the entry cut off is not left partial")
+    Files.write(archive, full)
+    assert(run(root, yaml)("n_extracted") == 1)
+    assert(Files.readString(root.resolve("extract/a.txt")) == "alpha")
+    assert(Files.readAllBytes(root.resolve("extract/inner/big.bin"))
+      .sameElements(big))
+    assert(names(root.resolve("extract/inner")) == Set("big.bin"))
+  }
+
+  test("combine_files and a geo .csv aggregate leave only their target: " +
+    "nothing beside it, nothing new in java.io.tmpdir") {
+    import spark.implicits._
+    val root = tmpDir()
+    Files.createDirectories(root.resolve("in"))
+    Files.writeString(root.resolve("in/a.csv"), "k,v\n1,2\n")
+    Files.writeString(root.resolve("in/b.csv"), "k,v\n3,4\n")
+    Seq((1L, 0, 0, 1.0), (2L, 1, 0, 3.0), (3L, 5, 5, 7.0))
+      .toDF("cell_id", "x", "y", "value")
+      .write.parquet(root.resolve("raster").toString)
+    Seq(("26001", "Alcona", "MI", 0, 0, 1, 1))
+      .toDF("geoid", "name", "stusps", "xmin", "ymin", "xmax", "ymax")
+      .write.parquet(root.resolve("counties").toString)
+    val tmp = Paths.get(sys.props("java.io.tmpdir"))
+    val before = names(tmp)
+    run(root, s"""steps:
+      |  - plugin: combine_files
+      |    args:
+      |      input_glob: "{env.basedir}/in/*.csv"
+      |      output_file: "{env.basedir}/out/combined.csv"
+      |  - plugin: geo/geo_county_raster_aggregate
+      |    args:
+      |      raster_path: "{env.basedir}/raster"
+      |      county_path: "{env.basedir}/counties"
+      |      value_prefix: ppt
+      |      output_path: "{env.basedir}/out/county.csv"
+      |""".stripMargin)
+    assert(names(root.resolve("out")) == Set("combined.csv", "county.csv"))
+    assert(Files.readAllLines(root.resolve("out/combined.csv")).asScala
+      .toSet == Set("k,v", "1,2", "3,4"))
+    val county = Files.readAllLines(root.resolve("out/county.csv")).asScala
+    assert(county.size == 2 && county(1).startsWith("26001,Alcona"), county)
+    assert(names(tmp) -- before == Set.empty)
+  }
+
+  test("a failing commit leaves the previous catalog.json " +
+    "byte-identical") {
+    val root = tmpDir()
+    val catalog = root.resolve("catalog.json")
+    Seq("d1" -> "one", "d2" -> "two").foreach { case (id, title) =>
+      CatalogJsonUpsertPlugin.run(StepContext(
+        Map("catalog_json" -> catalog.toString, "dataset_id" -> id,
+          "record" -> Map("title" -> title)),
+        Scope(), () => spark, runner = null))
+    }
+    val before = Files.readAllBytes(catalog)
+    // the upsert's write, cut off after part of the new catalog is out
+    intercept[java.io.IOException](Ledger.commit(catalog) { part =>
+      Files.write(part, before.take(before.length / 2))
+      throw new java.io.IOException("disk full")
+    })
+    assert(Files.readAllBytes(catalog).sameElements(before))
+    assert(names(root) == Set("catalog.json"))
+  }
+
+  test("no plugin writes a file in place: staging lives in Ledger") {
+    // split so this file does not match its own needles
+    val needles = Seq("REPLACE_" + "EXISTING", "Files." + "move",
+      "createTemp" + "Directory")
+    val dir = Paths.get("src/main/scala/graft/runner/plugins")
+    val hits = names(dir).toSeq.sorted.flatMap { f =>
+      Files.readAllLines(dir.resolve(f)).asScala.zipWithIndex.collect {
+        case (l, i) if needles.exists(l.contains) => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}

@@ -156,7 +156,8 @@ class StreamOpsSpec extends SparkSpecBase {
       .select("id", "cluster_id")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(streamed == batch,
-      s"diverge on ${streamed.keySet.filter(k => streamed(k) != batch.get(k)).take(5)}")
+      s"diverge on ${(streamed.keySet ++ batch.keySet)
+        .filter(k => streamed.get(k) != batch.get(k)).take(5)}")
     assert(streamed.values.toSet.size > 1, "degenerate single cluster")
   }
 
