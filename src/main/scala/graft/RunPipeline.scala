@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Paths
 
-import graft.runner.PipelineRunner
+import graft.runner.{PipelineRunner, StepContext}
 import graft.runner.plugins.DefaultRegistry
 
 /** CLI pipeline runner — the engine's analog of the reference's
@@ -45,9 +45,7 @@ object RunPipeline {
       case "--env" +: name +: tail => (Some(name), tail)
       case tail => (None, tail)
     }
-    val kvs = rest.map { a =>
-      val Array(k, v) = a.split("=", 2); k -> v
-    }
+    val kvs = rest.map(StepContext.splitPair)
     val profile: Map[String, Any] = profileName
       .map(loadProfile(_, Seq(path.toAbsolutePath.getParent, Paths.get("."))))
       .getOrElse(Map.empty)

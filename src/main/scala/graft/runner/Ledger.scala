@@ -116,9 +116,10 @@ object Ledger {
     * completeness — those plugins skip per-file via [[shouldWrite]],
     * matching the reference's per-download `overwrite: false` semantics.
     */
+  val outputKeys: Seq[String] = Seq("output_path", "output_file")
+
   def declaredOutputs(args: Map[String, Any]): Seq[Path] =
-    Seq("output_path", "output_file")
-      .flatMap(args.get).map(v => Paths.get(v.toString))
+    outputKeys.flatMap(args.get).map(v => Paths.get(v.toString))
 
   /** Step-level skip: every declared output already materialized. */
   def stepSkippable(args: Map[String, Any], overwrite: Boolean): Boolean = {

@@ -208,17 +208,17 @@ final class PipelineRunner(
     def invoke(itemScope: Scope): StepResult = {
       val args = Interpolator.resolve(step.args, itemScope)
         .asInstanceOf[Map[String, Any]]
-      val overwrite = args.get("overwrite").exists(_.toString.toBoolean)
+      val ctx = StepContext(args, itemScope, sparkProvider, this,
+        sourcePath, asyncRuns)
       // tombstone-aware skip: a dropped intermediate counts as
       // materialized only while every transitive consumer also skips —
       // a missing downstream output re-runs the chain back to here
-      if (Ledger.stepSkippable(args, overwrite) ||
-          retention.exists(_.tombstoneSkippable(idx, args, overwrite)))
+      if (Ledger.stepSkippable(args, ctx.overwrite) ||
+          retention.exists(_.tombstoneSkippable(idx, args, ctx.overwrite)))
         StepResult(skipped = true)
       else withResources(step) {
         retention.foreach(_.stepRan(args)) // re-materializing: clear tombstones
-        plugin.run(StepContext(args, itemScope, sparkProvider, this,
-          sourcePath, asyncRuns))
+        plugin.run(ctx)
       }
     }
 

@@ -1,7 +1,6 @@
 package graft.runner
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import scala.util.Try
 
@@ -102,7 +101,7 @@ object Retention {
     if (scratchIdx.isEmpty) return None
 
     def rawOutputs(s: Step): Seq[String] =
-      Seq("output_path", "output_file").flatMap(s.args.get).map(_.toString)
+      Ledger.outputKeys.flatMap(s.args.get).map(_.toString)
     def rawStrings(v: Any): Seq[String] = v match {
       case s: String => Seq(s)
       case m: Map[_, _] => m.values.toSeq.flatMap(rawStrings)
@@ -160,12 +159,8 @@ object Retention {
 
   /** Delete an output (file or directory tree) and leave a tombstone. */
   private def drop(o: Path): Unit = if (Files.exists(o)) {
-    if (Files.isDirectory(o)) {
-      val s = Files.walk(o)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(p =>
-        Files.deleteIfExists(p))
-      finally s.close()
-    } else Files.deleteIfExists(o)
+    graft.Scratch.deleteTree(o.toFile)
+    if (Files.exists(o)) throw new java.io.IOException(s"could not delete $o")
     Files.write(tombstonePath(o),
       s"dropped after last consumer (retention: scratch) at ${java.time.Instant.now}\n"
         .getBytes("UTF-8"))

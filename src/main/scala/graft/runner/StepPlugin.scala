@@ -67,7 +67,15 @@ object AsyncRuns {
   def inline: AsyncRuns = new AsyncRuns(None)
 }
 
-/** Everything a plugin sees for one invocation. */
+/** Everything a plugin sees for one invocation.
+  *
+  * The typed readers (`argStr`, `argInt`, `argLong`, `argDouble` and
+  * `argBool`, given a default or required, and the `…Opt` forms of an
+  * optional arg) are the only code that turns an arg value into a typed
+  * value: each goes through one parse, and a value that does not read
+  * as the type fails naming the key, the type and the value. `argOpt`
+  * hands out the raw value and is for structured args only (maps and
+  * lists). */
 final case class StepContext(
     /** Fully interpolated argument map for this invocation. */
     args: Map[String, Any],
@@ -82,21 +90,42 @@ final case class StepContext(
 
   def spark: SparkSession = sparkProvider()
 
-  def arg(key: String): Any = args.getOrElse(key,
-    throw new IllegalArgumentException(s"missing arg '$key' in $args"))
-  def argStr(key: String): String = arg(key).toString
+  private def missing(key: String): Nothing =
+    throw new IllegalArgumentException(s"missing arg '$key' in $args")
+
+  /** The one parse of an arg value; `kind` names the type in the error. */
+  private def parse[A](key: String, kind: String)(read: String => A)
+      : Option[A] = args.get(key).map { v =>
+    try read(v.toString)
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(
+        s"arg '$key' must be $kind, got '$v'", e) }
+  }
+  private def long(key: String) = parse(key, "a Long")(_.toLong)
+
+  def arg(key: String): Any = args.getOrElse(key, missing(key))
   def argOpt(key: String): Option[Any] = args.get(key)
+  def argStr(key: String): String = arg(key).toString
+  def argStr(key: String, default: String): String =
+    argStrOpt(key).getOrElse(default)
+  def argStrOpt(key: String): Option[String] = parse(key, "a string")(identity)
+  def argInt(key: String): Int = argIntOpt(key).getOrElse(missing(key))
+  def argInt(key: String, default: Int): Int = argIntOpt(key).getOrElse(default)
+  def argIntOpt(key: String): Option[Int] = parse(key, "an Int")(_.toInt)
+  def argLong(key: String): Long = long(key).getOrElse(missing(key))
+  def argLong(key: String, default: Long): Long = long(key).getOrElse(default)
+  def argDouble(key: String, default: Double): Double =
+    argDoubleOpt(key).getOrElse(default)
+  def argDoubleOpt(key: String): Option[Double] =
+    parse(key, "a Double")(_.toDouble)
+  def argBool(key: String, default: Boolean): Boolean =
+    parse(key, "a Boolean")(_.toBoolean).getOrElse(default)
   /** First present key wins — plugins accept the reference's YAML arg
     * names AND the engine's (verbatim reference pipelines must run). */
-  def argAny(keys: String*): Option[Any] =
-    keys.iterator.map(args.get).collectFirst { case Some(v) => v }
-  def argAnyStr(keys: String*): String = argAny(keys: _*).map(_.toString)
-    .getOrElse(throw new IllegalArgumentException(
-      s"missing arg (any of ${keys.mkString("/")}) in $args"))
-  def argBool(key: String, default: Boolean): Boolean =
-    args.get(key).map(_.toString.toBoolean).getOrElse(default)
-  def argInt(key: String, default: Int): Int =
-    args.get(key).map(_.toString.toInt).getOrElse(default)
+  def argAnyStr(keys: String*): String =
+    keys.iterator.flatMap(argStrOpt).nextOption().getOrElse(
+      throw new IllegalArgumentException(
+        s"missing arg (any of ${keys.mkString("/")}) in $args"))
   /** A list arg: a YAML list gives its elements and a scalar is a
     * one-element list (`urls: a` reads as `urls: [a]`). */
   def argList(key: String): Option[Seq[String]] = args.get(key).map {
@@ -120,6 +149,16 @@ final case class StepContext(
     val p = java.nio.file.Paths.get(s)
     if (p.isAbsolute) p
     else runner.checkoutRoot.resolve(s).normalize()
+  }
+}
+
+object StepContext {
+  /** Split one `key=value` pair at its first `=` (`vars_kv`, `weights`,
+    * the CLI's overrides); a pair without `=` fails naming it. */
+  def splitPair(pair: String): (String, String) = pair.split("=", 2) match {
+    case Array(k, v) => (k, v)
+    case _ => throw new IllegalArgumentException(
+      s"malformed pair '$pair': expected key=value")
   }
 }
 

@@ -62,11 +62,8 @@ object VectorFactsPlugin extends StepPlugin {
       "feature_count" -> df.count(),
       "schema" -> df.schema.json,
       "columns" -> profile)
-    val out = ctx.argOpt("output_path") match {
-      case Some(p) => Paths.get(p.toString)
-      case None =>
-        Paths.get(ctx.argStr("output_dir")).resolve("vector_facts.json")
-    }
+    val out = ctx.argStrOpt("output_path").map(Paths.get(_)).getOrElse(
+      Paths.get(ctx.argStr("output_dir")).resolve("vector_facts.json"))
     Ledger.commit(out)(Files.writeString(_, JsonUtil.write(facts)))
     StepResult(Map("vector_facts_json" -> out.toString,
       "feature_count" -> facts("feature_count")))
@@ -92,14 +89,14 @@ object EvidenceBundlePlugin extends StepPlugin {
     Ledger.commit(schema)(Files.writeString(_, df.schema.prettyJson))
     val notes = outDir.resolve("notes.md")
     Ledger.commit(notes)(Files.writeString(_,
-      ctx.argOpt("notes").map(_.toString).getOrElse("")))
+      ctx.argStr("notes", "")))
     val urls = outDir.resolve("supplemental_urls.txt")
     // inline list (`supplemental_urls`) or a urls FILE whose lines are
     // bundled (`supplemental_urls_file`, the reference's form — resolved
     // against the runner's asset roots like any pipeline-relative path)
     val urlLines = ctx.argList("supplemental_urls").map(_.mkString("\n"))
-      .orElse(ctx.argOpt("supplemental_urls_file").map { f =>
-        val p = ctx.runner.resolvePath(Paths.get(f.toString),
+      .orElse(ctx.argStrOpt("supplemental_urls_file").map { f =>
+        val p = ctx.runner.resolvePath(Paths.get(f),
           ctx.currentPipeline.map(Paths.get(_)))
         Files.readString(p)
       }).getOrElse("")
@@ -108,9 +105,9 @@ object EvidenceBundlePlugin extends StepPlugin {
     // bundle is self-describing (what the research step consumes)
     val meta = outDir.resolve("dataset.json")
     Ledger.commit(meta)(Files.writeString(_, JsonUtil.write(Map(
-      "dataset_id" -> ctx.argOpt("dataset_id").map(_.toString).getOrElse(""),
+      "dataset_id" -> ctx.argStr("dataset_id", ""),
       "vector_facts_json" ->
-        ctx.argOpt("vector_facts_json").map(_.toString).getOrElse("")))))
+        ctx.argStr("vector_facts_json", "")))))
     StepResult(Map(
       "sample_file" -> sample.toString, "schema_file" -> schema.toString,
       "notes_file" -> notes.toString,
@@ -130,11 +127,9 @@ object DatasetResearchPlugin extends StepPlugin {
     // output_dir receives research.md; title/data_class/artifact_uri/
     // notes_file/supplemental_urls_file all flow into the document so
     // the downstream catalog_json_upsert has the full record
-    val out = ctx.argOpt("output_file") match {
-      case Some(p) => Paths.get(p.toString)
-      case None => Paths.get(ctx.argStr("output_dir")).resolve("research.md")
-    }
-    def opt(k: String) = ctx.argOpt(k).map(_.toString).getOrElse("")
+    val out = ctx.argStrOpt("output_file").map(Paths.get(_)).getOrElse(
+      Paths.get(ctx.argStr("output_dir")).resolve("research.md"))
+    def opt(k: String) = ctx.argStr(k, "")
     val doc = s"""# Dataset research (deterministic stub)
                  |dataset_id: ${opt("dataset_id")}
                  |title: ${opt("title")}
@@ -163,8 +158,8 @@ object CatalogJsonUpsertPlugin extends StepPlugin {
     // the reference step carries no dataset_id arg
     // (/root/reference/pipelines/tiger/county.yml:66-71) — the id is
     // read from the research document it upserts
-    val datasetId = ctx.argOpt("dataset_id").map(_.toString).getOrElse {
-      val rf = ctx.argOpt("research_file").map(_.toString).getOrElse(
+    val datasetId = ctx.argStrOpt("dataset_id").getOrElse {
+      val rf = ctx.argStrOpt("research_file").getOrElse(
         throw new IllegalArgumentException(
           "catalog_json_upsert needs dataset_id or a research_file " +
             "carrying one"))

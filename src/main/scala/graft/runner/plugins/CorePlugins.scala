@@ -13,7 +13,7 @@ import graft.runner._
 object EchoPlugin extends StepPlugin {
   val name = "echo"
   def run(ctx: StepContext): StepResult = {
-    val msg = ctx.argOpt("message").map(_.toString).getOrElse("")
+    val msg = ctx.argStr("message", "")
     if (msg.nonEmpty) println(s"[echo] $msg")
     StepResult(Map("message" -> msg))
   }
@@ -53,9 +53,9 @@ object PipelineExecutePlugin extends StepPlugin {
   val name = "pipeline_execute"
   def run(ctx: StepContext): StepResult = {
     val path = ctx.argStr("pipeline_path")
-    val overrides = ctx.argOpt("vars_kv").map(kv => parseVarsKv(kv.toString))
+    val overrides = ctx.argStrOpt("vars_kv").map(parseVarsKv)
       .getOrElse(Map.empty[String, Any])
-    ctx.argOpt("mode").map(_.toString).getOrElse("synchronized") match {
+    ctx.argStr("mode", "synchronized") match {
       case "async" =>
         // carry the requires-resolution chain onto the async thread so a
         // dependency cycle through this child still fails fast instead
@@ -68,9 +68,11 @@ object PipelineExecutePlugin extends StepPlugin {
           }
         }
         StepResult(Map("pipeline" -> path, "mode" -> "async"))
-      case _ =>
+      case "synchronized" =>
         val result = ctx.runner.runRelative(path, ctx.currentPipeline, overrides)
         StepResult(Map("pipeline" -> path, "n_steps" -> result.results.size))
+      case other => throw new IllegalArgumentException(
+        s"pipeline_execute mode must be synchronized|async, got '$other'")
     }
   }
 
@@ -79,7 +81,7 @@ object PipelineExecutePlugin extends StepPlugin {
     * own `vars` typing (county_daily_aggregate_child.yml:5). */
   def parseVarsKv(kv: String): Map[String, Any] =
     kv.split(",").filter(_.nonEmpty).map { pair =>
-      val Array(k, v) = pair.split("=", 2)
+      val (k, v) = StepContext.splitPair(pair)
       k.trim -> retype(v.trim)
     }.toMap
 
@@ -102,15 +104,15 @@ object WebDownloadPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val out = Paths.get(ctx.argStr("out"))
     Files.createDirectories(out)
-    val urls: Seq[String] = ctx.argOpt("url").map(u => Seq(u.toString))
+    val urls: Seq[String] = ctx.argStrOpt("url").map(Seq(_))
       .orElse(ctx.argList("urls"))
-      .orElse(ctx.argOpt("urls_file").map { f =>
+      .orElse(ctx.argStrOpt("urls_file").map { f =>
         // checkout-relative like every reference file arg
         // (`urls_file: pipelines/tiger/county_urls.txt`,
         // /root/reference/pipelines/tiger/county.yml:23): resolve
         // sibling-of-pipeline first, then asset roots — same contract
         // as EvidenceBundlePlugin's supplemental_urls_file
-        val p = ctx.runner.resolvePath(Paths.get(f.toString),
+        val p = ctx.runner.resolvePath(Paths.get(f),
           ctx.currentPipeline.map(Paths.get(_)))
         Files.readAllLines(p).asScala.toSeq
           .map(_.trim).filter(_.nonEmpty)
@@ -222,7 +224,7 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
   def run(ctx: StepContext): StepResult = {
     val url = ctx.argStr("url")
     val out = Paths.get(ctx.argStr("out"))
-    val glob = ctx.argOpt("filename_glob").map(_.toString).getOrElse("*")
+    val glob = ctx.argStr("filename_glob", "*")
     val recursive = ctx.argBool("recursive", default = true)
     // reference contract: per-step network timeout
     // (/root/reference/pipelines/prism/download-ts-ppt-day.yml:25)
@@ -273,8 +275,7 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
         // the recursion then consumes. A visited-URL set plus a depth
         // cap guard against pathological/hostile listings (self or
         // mutual references would otherwise loop forever).
-        val maxDepth = ctx.argOpt("max_depth")
-          .map(_.toString.toInt).getOrElse(64)
+        val maxDepth = ctx.argInt("max_depth", 64)
         val visited = scala.collection.mutable.Set[String]()
         def walk(dirUrl: String, relPrefix: String,
                  entries: Seq[String], depth: Int): Unit = {
@@ -362,11 +363,9 @@ object ArchiveExtractPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val out = Paths.get(ctx.argStr("out"))
     Files.createDirectories(out)
-    val archives: Seq[Path] = ctx.argOpt("archive") match {
-      case Some(a) => Seq(Paths.get(a.toString))
-      case None =>
-        val glob = ctx.argStr("archive_glob")
-        globPaths(glob)
+    val archives: Seq[Path] = ctx.argStrOpt("archive") match {
+      case Some(a) => Seq(Paths.get(a))
+      case None => globPaths(ctx.argStr("archive_glob"))
     }
     var extracted, skipped = 0
     archives.foreach { a =>
@@ -453,7 +452,7 @@ object CombineFilesPlugin extends StepPlugin {
     // explicit `format` (the reference passes it —
     // /root/reference/pipelines/prism/county_daily_aggregate_child.yml
     // combine form) falls back to the output extension, then csv
-    val fmt = ctx.argOpt("format").map(_.toString.toLowerCase)
+    val fmt = ctx.argStrOpt("format").map(_.toLowerCase)
       .orElse(graft.sources.Formats.infer(outFile.toString))
       .getOrElse("csv")
     val df = fmt match {

@@ -30,13 +30,13 @@ object TextLmScorePlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
     val docs = ctx.spark.read.parquet(in)
-    val (lm, scored) = ctx.argOpt("lm_input") match {
-      case Some(p) => (ctx.spark.read.parquet(p.toString), docs)
+    val (lm, scored) = ctx.argStrOpt("lm_input") match {
+      case Some(p) => (ctx.spark.read.parquet(p), docs)
       case None =>
-        val m = ctx.argOpt("train_mod").map(_.toString.toInt).getOrElse(10)
+        val m = ctx.argInt("train_mod", 10)
         (docs.filter(col(idCol) % m === 0),
           docs.filter(col(idCol) % m =!= 0))
     }
@@ -60,13 +60,14 @@ object TextDsirPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val b = ctx.argOpt("buckets").map(_.toString.toInt).getOrElse(512)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val b = ctx.argInt("buckets", 512)
     val docs = ctx.spark.read.parquet(in)
-    val target = (ctx.argOpt("target_input"), ctx.argOpt("target_where")) match {
-      case (Some(p), _) => ctx.spark.read.parquet(p.toString)
-      case (None, Some(w)) => docs.filter(expr(w.toString))
+    val target = (ctx.argStrOpt("target_input"),
+        ctx.argStrOpt("target_where")) match {
+      case (Some(p), _) => ctx.spark.read.parquet(p)
+      case (None, Some(w)) => docs.filter(expr(w))
       case _ => sys.error(
         "text_dsir: one of 'target_input' / 'target_where' is required")
     }
@@ -89,10 +90,10 @@ object TextCurriculumPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val buckets = ctx.argOpt("buckets").map(_.toString.toInt).getOrElse(64)
-    val diff = ctx.argOpt("difficulty_expr").map(e => expr(e.toString))
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val buckets = ctx.argInt("buckets", 64)
+    val diff = ctx.argStrOpt("difficulty_expr").map(expr)
       .getOrElse(size(TextStats.tokens(col(textCol))).cast("long"))
     val docs = ctx.spark.read.parquet(in)
     val c = Counted.write(Curriculum.order(docs, col(idCol), diff, buckets)
@@ -115,22 +116,21 @@ object EmbeddingSemdedupPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("vec_id")
-    val vecCol = ctx.argOpt("vec_col").map(_.toString).getOrElse("embedding")
-    val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(8)
-    val iters = ctx.argOpt("iters").map(_.toString.toInt).getOrElse(1)
-    val minCos = ctx.argOpt("min_cosine").map(_.toString.toDouble)
-      .getOrElse(0.9)
+    val idCol = ctx.argStr("id_col", "vec_id")
+    val vecCol = ctx.argStr("vec_col", "embedding")
+    val k = ctx.argInt("k", 8)
+    val iters = ctx.argInt("iters", 1)
+    val minCos = ctx.argDouble("min_cosine", 0.9)
     val raw = ctx.spark.read.parquet(in)
     val verdicts = SemanticDedup.dedupe(
       raw.select(col(idCol).as("id"),
         Similarity.asDouble(col(vecCol)).as("vec")), k, iters, minCos)
     val c = Counted.write(verdicts, out, "n_in" -> Counted.rows,
       "n_kept" -> sum(when(col("keep"), 1)))
-    ctx.argOpt("keep_path").foreach { kp =>
+    ctx.argStrOpt("keep_path").foreach { kp =>
       val v = ctx.spark.read.parquet(out)
       raw.join(v.filter(col("keep")).select(col("id").as(idCol)), Seq(idCol))
-        .write.mode("overwrite").parquet(kp.toString)
+        .write.mode("overwrite").parquet(kp)
     }
     StepResult(Map("output_path" -> out) ++ c)
   }
@@ -148,10 +148,10 @@ object EmbeddingOutliersPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("vec_id")
-    val grpCol = ctx.argOpt("group_col").map(_.toString).getOrElse("label")
-    val vecCol = ctx.argOpt("vec_col").map(_.toString).getOrElse("embedding")
-    val k = ctx.argOpt("top_k").map(_.toString.toInt).getOrElse(5)
+    val idCol = ctx.argStr("id_col", "vec_id")
+    val grpCol = ctx.argStr("group_col", "label")
+    val vecCol = ctx.argStr("vec_col", "embedding")
+    val k = ctx.argInt("top_k", 5)
     val c = Counted.write(Outliers.byGroup(
         ctx.spark.read.parquet(in).select(col(idCol).as("id"),
           col(grpCol).as("grp"),
@@ -180,10 +180,9 @@ object TargetedDeletePlugin extends StepPlugin {
       .getOrElse(sys.error("targeted_delete: 'keys' list is required"))
     val pcols = ctx.argList("partition_cols").getOrElse(Nil)
     val before = ctx.spark.read.parquet(path).count()
-    val doomed = (ctx.argOpt("keys_input"), ctx.argOpt("where")) match {
-      case (Some(p), _) => ctx.spark.read.parquet(p.toString)
-      case (None, Some(w)) =>
-        ctx.spark.read.parquet(path).filter(expr(w.toString))
+    val doomed = (ctx.argStrOpt("keys_input"), ctx.argStrOpt("where")) match {
+      case (Some(p), _) => ctx.spark.read.parquet(p)
+      case (None, Some(w)) => ctx.spark.read.parquet(path).filter(expr(w))
       case _ => sys.error(
         "targeted_delete: one of 'keys_input' / 'where' is required")
     }
@@ -207,15 +206,14 @@ object GraphPagerankPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val ein = ctx.argStr("edges_input")
     val out = ctx.argStr("output_path")
-    val iters = ctx.argOpt("iters").map(_.toString.toInt).getOrElse(5)
-    val damping = ctx.argOpt("damping").map(_.toString.toDouble)
-      .getOrElse(0.85)
+    val iters = ctx.argInt("iters", 5)
+    val damping = ctx.argDouble("damping", 0.85)
     val raw = ctx.spark.read.parquet(ein).select("src", "dst")
     val edges = if (ctx.argBool("symmetric", default = false))
       raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
     else raw
-    val nodes = ctx.argOpt("nodes_input") match {
-      case Some(p) => ctx.spark.read.parquet(p.toString).select("id")
+    val nodes = ctx.argStrOpt("nodes_input") match {
+      case Some(p) => ctx.spark.read.parquet(p).select("id")
       case None => edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id"))).distinct()
     }
@@ -239,10 +237,10 @@ object TextBudgetCapPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val budget = ctx.argStr("budget").toLong
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val srcCol = ctx.argOpt("source_col").map(_.toString).getOrElse("source")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
+    val budget = ctx.argLong("budget")
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val srcCol = ctx.argStr("source_col", "source")
+    val textCol = ctx.argStr("text_col", "text")
     val docs = ctx.spark.read.parquet(in)
     val audited = Budget.capTokens(docs, col(idCol), col(srcCol),
       size(TextStats.tokens(col(textCol))), budget)
@@ -271,14 +269,13 @@ object TextQualityFloorPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val minPct = ctx.argOpt("min_pct").map(_.toString.toDouble)
-      .getOrElse(0.25)
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val srcCol = ctx.argOpt("source_col").map(_.toString).getOrElse("source")
+    val minPct = ctx.argDouble("min_pct", 0.25)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val srcCol = ctx.argStr("source_col", "source")
     val docs = ctx.spark.read.parquet(in)
-    val score = ctx.argOpt("score_col").map(c => col(c.toString))
+    val score = ctx.argStrOpt("score_col").map(col)
       .getOrElse(size(TextStats.tokens(
-        col(ctx.argOpt("text_col").map(_.toString).getOrElse("text")))))
+        col(ctx.argStr("text_col", "text")))))
     val audited = Budget.percentileFilter(docs, col(idCol), col(srcCol),
       score, minPct)
     val result =
@@ -304,8 +301,8 @@ object GraphTrianglesPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val ein = ctx.argStr("edges_input")
     val out = ctx.argStr("output_path")
-    val aCol = ctx.argOpt("a_col").map(_.toString).getOrElse("a")
-    val bCol = ctx.argOpt("b_col").map(_.toString).getOrElse("b")
+    val aCol = ctx.argStr("a_col", "a")
+    val bCol = ctx.argStr("b_col", "b")
     val raw = ctx.spark.read.parquet(ein)
       .select(col(aCol).as("__x"), col(bCol).as("__y"))
       .filter(col("__x") =!= col("__y"))
@@ -329,8 +326,8 @@ object TextBpeLearnPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val rounds = ctx.argOpt("rounds").map(_.toString.toInt).getOrElse(16)
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
+    val rounds = ctx.argInt("rounds", 16)
+    val textCol = ctx.argStr("text_col", "text")
     val c = Counted.write(
       Bpe.learnMerges(ctx.spark.read.parquet(in), col(textCol), rounds),
       out, "n_merges" -> Counted.rows)
@@ -351,17 +348,17 @@ object GraphKcorePlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val ein = ctx.argStr("edges_input")
     val out = ctx.argStr("output_path")
-    val k = ctx.argStr("k").toInt
-    val rounds = ctx.argOpt("rounds").map(_.toString.toInt).getOrElse(8)
-    val aCol = ctx.argOpt("a_col").map(_.toString).getOrElse("a")
-    val bCol = ctx.argOpt("b_col").map(_.toString).getOrElse("b")
+    val k = ctx.argInt("k")
+    val rounds = ctx.argInt("rounds", 8)
+    val aCol = ctx.argStr("a_col", "a")
+    val bCol = ctx.argStr("b_col", "b")
     val raw = ctx.spark.read.parquet(ein)
       .select(col(aCol).as("__x"), col(bCol).as("__y"))
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
       greatest(col("__x"), col("__y")).as("b")).distinct()
     val c = Counted.write(KCore.peel(canon, k, rounds,
-        ctx.argOpt("checkpoint_dir").map(_.toString)),
+        ctx.argStrOpt("checkpoint_dir")),
       out, "n_nodes" -> Counted.rows,
       "n_converged" -> sum(when(col("in_core"), 1)))
     StepResult(Map("output_path" -> out) ++ c)
@@ -388,26 +385,26 @@ object EmbeddingAnnPlugin extends StepPlugin {
   val name = "embedding_ann"
 
   def run(ctx: StepContext): StepResult = {
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("vec_id")
-    val vecCol = ctx.argOpt("vec_col").map(_.toString).getOrElse("embedding")
-    val clusters = ctx.argOpt("clusters").map(_.toString.toInt).getOrElse(8)
-    val iters = ctx.argOpt("iters").map(_.toString.toInt).getOrElse(1)
+    val idCol = ctx.argStr("id_col", "vec_id")
+    val vecCol = ctx.argStr("vec_col", "embedding")
+    val clusters = ctx.argInt("clusters", 8)
+    val iters = ctx.argInt("iters", 1)
     val indexPath = ctx.argStr("index_path")
     val corpus = ctx.spark.read.parquet(ctx.argStr("input"))
       .select(col(idCol).as("id"), Similarity.asDouble(col(vecCol)).as("vec"))
     val centroids = Ivf.train(corpus, clusters, iters)
     val assigned = Ivf.assign(corpus, centroids)
     Ivf.writeIndex(assigned, indexPath)
-    ctx.argOpt("centroids_path").foreach(p =>
-      centroids.write.mode("overwrite").parquet(p.toString))
+    ctx.argStrOpt("centroids_path").foreach(p =>
+      centroids.write.mode("overwrite").parquet(p))
     val index = ctx.spark.read.parquet(indexPath)
-    val extra = ctx.argOpt("queries_input").map { qp =>
+    val extra = ctx.argStrOpt("queries_input").map { qp =>
       val tp = ctx.argStr("topk_path")
-      val qid = ctx.argOpt("query_id_col").map(_.toString).getOrElse(idCol)
-      val qvec = ctx.argOpt("query_vec_col").map(_.toString).getOrElse(vecCol)
-      val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(5)
-      val nprobe = ctx.argOpt("nprobe").map(_.toString.toInt).getOrElse(2)
-      val queries = ctx.spark.read.parquet(qp.toString)
+      val qid = ctx.argStr("query_id_col", idCol)
+      val qvec = ctx.argStr("query_vec_col", vecCol)
+      val k = ctx.argInt("k", 5)
+      val nprobe = ctx.argInt("nprobe", 2)
+      val queries = ctx.spark.read.parquet(qp)
         .select(col(qid).as("qid"),
           Similarity.asDouble(col(qvec)).as("qvec"))
       val c = Counted.write(Ivf.searchTopK(queries, index, centroids, k,
@@ -445,12 +442,10 @@ object CorpusShardPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val numShards = ctx.argOpt("num_shards").map(_.toString.toInt)
-      .getOrElse(16)
-    val id = ctx.argOpt("id_expr").map(e => expr(e.toString))
-      .getOrElse(col(ctx.argOpt("id_col").map(_.toString)
-        .getOrElse("doc_id")))
-    val epoch = ctx.argOpt("epoch").map(_.toString.toInt).getOrElse(0)
+    val numShards = ctx.argInt("num_shards", 16)
+    val id = ctx.argStrOpt("id_expr").map(expr)
+      .getOrElse(col(ctx.argStr("id_col", "doc_id")))
+    val epoch = ctx.argInt("epoch", 0)
     val source = ctx.spark.read.parquet(in)
     val nShards =
       if (ctx.argBool("assign_only", default = false)) {
@@ -487,10 +482,8 @@ object ShardManifestPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
     val cut = ctx.spark.read.parquet(ctx.argStr("input"))
-    val toks = expr(ctx.argOpt("tokens_expr").map(_.toString)
-      .getOrElse("0"))
-    val chars = expr(ctx.argOpt("chars_expr").map(_.toString)
-      .getOrElse("0"))
+    val toks = expr(ctx.argStr("tokens_expr", "0"))
+    val chars = expr(ctx.argStr("chars_expr", "0"))
     val c = Counted.write(
       graft.operators.Shard.manifest(cut, toks, chars).coalesce(1), out,
       "n_docs" -> sum("n_docs"), "n_shards" -> Counted.rows)
@@ -511,8 +504,8 @@ object CorpusDiffPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
     val diff = graft.operators.CorpusDiff.diff(
         ctx.spark.read.parquet(ctx.argStr("old_input")),
         ctx.spark.read.parquet(ctx.argStr("new_input")),
@@ -538,9 +531,9 @@ object BloomBuildPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val valueCol = ctx.argOpt("value_col").map(_.toString).getOrElse("text")
-    val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(4)
-    val m = ctx.argOpt("m").map(_.toString.toInt).getOrElse(4096)
+    val valueCol = ctx.argStr("value_col", "text")
+    val k = ctx.argInt("k", 4)
+    val m = ctx.argInt("m", 4096)
     val c = Counted.write(graft.operators.Bloom.build(
         ctx.spark.read.parquet(ctx.argStr("input")), col(valueCol), k, m),
       out, "n_bits" -> Counted.rows)
@@ -564,10 +557,10 @@ object BloomProbePlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val valueCol = ctx.argOpt("value_col").map(_.toString).getOrElse("text")
-    val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(4)
-    val m = ctx.argOpt("m").map(_.toString.toInt).getOrElse(4096)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val valueCol = ctx.argStr("value_col", "text")
+    val k = ctx.argInt("k", 4)
+    val m = ctx.argInt("m", 4096)
     val corpus = ctx.spark.read.parquet(ctx.argStr("input"))
     val filter = ctx.spark.read.parquet(ctx.argStr("filter_path"))
     val verdict = graft.operators.Bloom.probe(

@@ -53,10 +53,10 @@ object EventFunnelPlugin extends StepPlugin {
     val out = ctx.argStr("output_path")
     val stages = ctx.argList("stages").filter(_.nonEmpty)
       .getOrElse(sys.error("event_funnel: 'stages' list is required"))
-    val userCol = ctx.argOpt("user_col").map(_.toString).getOrElse("user_id")
-    val kindCol = ctx.argOpt("kind_col").map(_.toString).getOrElse("event_type")
+    val userCol = ctx.argStr("user_col", "user_id")
+    val kindCol = ctx.argStr("kind_col", "event_type")
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
-    val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
+    val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.microsExpr(input))
     val c = Counted.write(Funnel.steps(input,
         col(userCol), col(kindCol), expr(tsExpr), stages),
@@ -77,9 +77,9 @@ object EventRetentionPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val userCol = ctx.argOpt("user_col").map(_.toString).getOrElse("user_id")
+    val userCol = ctx.argStr("user_col", "user_id")
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
-    val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
+    val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.timestampExpr(input))
     val c = Counted.write(Retention.cohorts(input,
         col(userCol), expr(tsExpr)), out, "n_cells" -> Counted.rows)
@@ -102,11 +102,11 @@ object EventScd2Plugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
     val attrCol = ctx.argStr("attr_col")
-    val userCol = ctx.argOpt("user_col").map(_.toString).getOrElse("user_id")
+    val userCol = ctx.argStr("user_col", "user_id")
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
-    val tsExpr = ctx.argOpt("ts_expr").map(_.toString)
+    val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.microsExpr(input))
-    val tb = ctx.argOpt("tiebreak_col").map(_.toString).getOrElse("event_id")
+    val tb = ctx.argStr("tiebreak_col", "event_id")
     val c = Counted.write(Scd2.build(input,
         col(userCol), col(attrCol), expr(tsExpr), col(tb)),
       out, "n_intervals" -> Counted.rows,
@@ -134,38 +134,37 @@ object SketchCountMinPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val d = ctx.argOpt("depth").map(_.toString.toInt).getOrElse(4)
-    val w = ctx.argOpt("width").map(_.toString.toInt).getOrElse(256)
+    val d = ctx.argInt("depth", 4)
+    val w = ctx.argInt("width", 256)
     val raw = ctx.spark.read.parquet(ctx.argStr("input"))
-    val grp = ctx.argOpt("group_col").map(c => col(c.toString))
+    val grp = ctx.argStrOpt("group_col").map(col)
       .getOrElse(lit("all"))
-    val toks = (ctx.argOpt("token_col"), ctx.argOpt("text_col")) match {
-      case (Some(t), _) => raw.select(grp.as("grp"),
-        col(t.toString).as("w"))
+    val toks = (ctx.argStrOpt("token_col"), ctx.argStrOpt("text_col")) match {
+      case (Some(t), _) => raw.select(grp.as("grp"), col(t).as("w"))
       case (None, Some(t)) => raw.select(grp.as("grp"),
-        explode(TextStats.tokens(col(t.toString))).as("w"))
+        explode(TextStats.tokens(col(t))).as("w"))
       case _ => sys.error(
         "sketch_count_min: one of 'token_col' / 'text_col' is required")
     }
     val partials = CountMin.partials(toks, col("grp"), col("w"), d, w)
     // with partials_path the merged grid is built from the PERSISTED
     // per-group partials — the actual incremental-rollup round trip
-    val mergeSrc = ctx.argOpt("partials_path") match {
+    val mergeSrc = ctx.argStrOpt("partials_path") match {
       case Some(p) =>
-        partials.write.mode("overwrite").parquet(p.toString)
-        ctx.spark.read.parquet(p.toString)
+        partials.write.mode("overwrite").parquet(p)
+        ctx.spark.read.parquet(p)
       case None => partials
     }
     val c = Counted.write(CountMin.merge(mergeSrc), out,
       "n_counters" -> Counted.rows)
-    val extra = ctx.argOpt("queries_input").map { qp =>
+    val extra = ctx.argStrOpt("queries_input").map { qp =>
       val ep = ctx.argStr("estimates_path")
-      val qraw = ctx.spark.read.parquet(qp.toString)
-      val qtoks = (ctx.argOpt("query_token_col"),
-          ctx.argOpt("query_text_col")) match {
-        case (Some(t), _) => qraw.select(col(t.toString).as("token"))
+      val qraw = ctx.spark.read.parquet(qp)
+      val qtoks = (ctx.argStrOpt("query_token_col"),
+          ctx.argStrOpt("query_text_col")) match {
+        case (Some(t), _) => qraw.select(col(t).as("token"))
         case (None, Some(t)) => qraw.select(
-          explode(TextStats.tokens(col(t.toString))).as("token"))
+          explode(TextStats.tokens(col(t))).as("token"))
         case _ => sys.error("sketch_count_min: queries_input needs one " +
           "of 'query_token_col' / 'query_text_col'")
       }
@@ -200,23 +199,23 @@ object SketchQuantilesPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
     val valueCol = ctx.argStr("value_col")
-    val width = ctx.argOpt("width").map(_.toString.toDouble).getOrElse(25.0)
-    val origin = ctx.argOpt("origin").map(_.toString.toDouble).getOrElse(0.0)
+    val width = ctx.argDouble("width", 25.0)
+    val origin = ctx.argDouble("origin", 0.0)
     val qs = ctx.argList("quantiles") match {
       case Some(l) if l.nonEmpty => l.map(_.toDouble)
       case Some(_) => sys.error("sketch_quantiles: 'quantiles' is empty")
       case None => Seq(0.25, 0.5, 0.9, 0.99)
     }
     val raw = ctx.spark.read.parquet(ctx.argStr("input"))
-    val grpKeys = ctx.argOpt("group_col").map(_.toString).toSeq
+    val grpKeys = ctx.argStrOpt("group_col").toSeq
     val partials = Histogram(raw, grpKeys, col(valueCol), width, origin)
       .select((grpKeys.map(col) :+ col("bin") :+ col("n")): _*)
     // with partials_path the estimate is built from the PERSISTED
     // per-group grids — the actual incremental-rollup round trip
-    val mergeSrc = ctx.argOpt("partials_path") match {
+    val mergeSrc = ctx.argStrOpt("partials_path") match {
       case Some(p) =>
-        partials.write.mode("overwrite").parquet(p.toString)
-        ctx.spark.read.parquet(p.toString)
+        partials.write.mode("overwrite").parquet(p)
+        ctx.spark.read.parquet(p)
       case None => partials
     }
     val c = Counted.write(

@@ -27,18 +27,12 @@ object GeoPluginUtil {
     * (geo_raster_reproject, prism-mi-corn-ppt-county.yml:52), or
     * `input_dir` (stack form, stage-ts-ppt-day-state.yml:26). The
     * verbatim-execution spec (ReferenceExecutionSpec) pins all four. */
-  def readRaster(ctx: StepContext): DataFrame = {
-    val path = ctx.argAny(
-      "raster_path", "input_raster", "input_path", "input_dir")
-      .getOrElse(throw new IllegalArgumentException(
-        "need raster_path/input_raster/input_path/input_dir")).toString
-    ctx.spark.read.parquet(path)
-  }
+  def readRaster(ctx: StepContext): DataFrame =
+    ctx.spark.read.parquet(ctx.argAnyStr(
+      "raster_path", "input_raster", "input_path", "input_dir"))
 
   def outPath(ctx: StepContext): String =
-    ctx.argOpt("output_path").orElse(ctx.argOpt("output_dir"))
-      .getOrElse(throw new IllegalArgumentException(
-        "need output_path or output_dir")).toString
+    ctx.argAnyStr("output_path", "output_dir")
 
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
@@ -156,7 +150,7 @@ object GeoRunningWindowPlugin extends StepPlugin {
   val name = "geo/geo_raster_running_window"
   def run(ctx: StepContext): StepResult = {
     val window = ctx.argInt("window", ctx.argInt("windows", 7))
-    val metric = ctx.argOpt("metric").map(_.toString).getOrElse("sum")
+    val metric = ctx.argStr("metric", "sum")
     require(metric == "sum", s"unsupported running-window metric: $metric")
     val df = readRaster(ctx)
     val rolled = Rolling.trailingDaySums(
@@ -165,10 +159,8 @@ object GeoRunningWindowPlugin extends StepPlugin {
       Seq("cell_id"), col("day"), col("__v_dec"), Seq(window))
       .drop("__v_dec", "value")
       .withColumnRenamed(s"rollsum_${window}d", "value")
-    val trimmed = ctx.argOpt("target_year") match {
-      case Some(y) => Rolling.trimYear(rolled, col("day"), y.toString.toInt)
-      case None => rolled
-    }
+    val trimmed = ctx.argIntOpt("target_year")
+      .map(Rolling.trimYear(rolled, col("day"), _)).getOrElse(rolled)
     val out = outPath(ctx)
     writeParquet(trimmed, out)
     StepResult(Map("output_path" -> out, "window" -> window))
@@ -182,7 +174,7 @@ object GeoSpiPlugin extends StepPlugin {
   import GeoPluginUtil._
   val name = "geo/geo_raster_spi"
   def run(ctx: StepContext): StepResult = {
-    val method = ctx.argOpt("method").map(_.toString).getOrElse("zscore")
+    val method = ctx.argStr("method", "zscore")
     require(method == "zscore", s"unsupported SPI method: $method")
     val df = readRaster(ctx).withColumn("doy", dayofyear(col("day")))
     val out = outPath(ctx)
@@ -201,7 +193,7 @@ object GeoCountyAggregatePlugin extends StepPlugin {
   import GeoPluginUtil._
   val name = "geo/geo_county_raster_aggregate"
   def run(ctx: StepContext): StepResult = {
-    val prefix = ctx.argOpt("value_prefix").map(_.toString).getOrElse("v")
+    val prefix = ctx.argStr("value_prefix", "v")
     val raster = readRaster(ctx)
     val counties = selector(ctx)
       .select(col("geoid"), col("name"), col("xmin"), col("ymin"),
@@ -211,8 +203,7 @@ object GeoCountyAggregatePlugin extends StepPlugin {
     val keys = if (raster.columns.contains("day"))
       Seq("geoid", "name", "day") else Seq("geoid", "name")
     val stats = ZonalStats(assigned, keys, col("value"), prefix)
-    val out = ctx.argOpt("output_path").map(_.toString)
-      .getOrElse(outPath(ctx))
+    val out = outPath(ctx)
     writeTable(stats, out)
     StepResult(Map("output_path" -> out))
   }
@@ -226,7 +217,7 @@ object GeoCountyWeightedAggregatePlugin extends StepPlugin {
   import GeoPluginUtil._
   val name = "geo/geo_county_weighted_raster_aggregate"
   def run(ctx: StepContext): StepResult = {
-    val prefix = ctx.argOpt("value_prefix").map(_.toString).getOrElse("v")
+    val prefix = ctx.argStr("value_prefix", "v")
     val stack = readRaster(ctx)
     val weights = ctx.spark.read.parquet(ctx.argStr("weight_raster"))
       .select(col("x"), col("y"), col("value").as("__w"))
@@ -240,8 +231,7 @@ object GeoCountyWeightedAggregatePlugin extends StepPlugin {
     val out = WeightedZonal(assigned, Seq("geoid", "name", "day"),
       col("value"), col("__w"), s"${prefix}_wavg")
       .drop(s"${prefix}_wavg_num", s"${prefix}_wavg_den")
-    val path = ctx.argOpt("output_file").map(_.toString)
-      .getOrElse(outPath(ctx))
+    val path = ctx.argStrOpt("output_file").getOrElse(outPath(ctx))
     writeTable(out, path)
     StepResult(Map("output_file" -> path))
   }

@@ -35,7 +35,7 @@ object JdbcProbePlugin extends StepPlugin {
   }
 
   def run(ctx: StepContext): StepResult = {
-    val rawUrl = ctx.argOpt("url").map(_.toString)
+    val rawUrl = ctx.argStrOpt("url")
       .orElse(sys.env.get("ETL_DATABASE_URL"))
       .getOrElse(throw new IllegalArgumentException(
         "jdbc_probe needs url or ETL_DATABASE_URL"))
@@ -71,7 +71,7 @@ object JdbcWritePlugin extends StepPlugin {
   val name = "jdbc_write"
 
   private def jdbcUrl(ctx: StepContext): String =
-    ctx.argOpt("url").map(_.toString).getOrElse {
+    ctx.argStrOpt("url").getOrElse {
       val p = ctx.argStr("db_path")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(p).toAbsolutePath.getParent)
@@ -327,8 +327,8 @@ object JdbcWritePlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val url = jdbcUrl(ctx)
     val table = ctx.argStr("table")
-    val fmt = ctx.argOpt("format").map(_.toString).getOrElse("parquet")
-    val mode = ctx.argOpt("mode").map(_.toString).getOrElse("overwrite")
+    val fmt = ctx.argStr("format", "parquet")
+    val mode = ctx.argStr("mode", "overwrite")
     val keys = ctx.argList("keys").getOrElse(Nil)
     val incoming = ctx.spark.read.format(fmt)
       .options(if (fmt == "csv") Map("header" -> "true", "inferSchema" -> "true")

@@ -42,7 +42,7 @@ object PublishTargetPlugin extends StepPlugin {
         if (uri.getScheme == null) Paths.get(ctx.argStr("target_uri"))
         else Paths.get(uri)
       case remote =>
-        val root = ctx.argOpt("publish_root").map(_.toString)
+        val root = ctx.argStrOpt("publish_root")
           .orElse(ctx.scope.env.get("publish_root").map(_.toString))
           .getOrElse(sys.props("java.io.tmpdir") + "/graft_published")
         // gdrive://data/etl/X -> <root>/gdrive/data/etl/X

@@ -66,10 +66,10 @@ object StacAssetDownloadPlugin extends StepPlugin {
     * response is either JSON `{"href": signed}` or the signed URL
     * itself. No signer configured → href passes through. */
   private def sign(href: String, ctx: StepContext): String =
-    ctx.argOpt("sign_api_url") match {
+    ctx.argStrOpt("sign_api_url") match {
       case Some(s) =>
-        val sep = if (s.toString.contains("?")) "&" else "?"
-        val u = s.toString + sep + "href=" +
+        val sep = if (s.contains("?")) "&" else "?"
+        val u = s + sep + "href=" +
           java.net.URLEncoder.encode(href, "UTF-8")
         val resp = fetchDoc(u, ctx).trim
         try JsonUtil.parse(resp) match {
@@ -176,8 +176,8 @@ object StacAssetDownloadPlugin extends StepPlugin {
     // `collection` selects the searched collection
     // (/root/reference/pipelines/sentinel/download-sentinel2-l2a-michigan.yml:46);
     // items without the field pass (tolerant, like the other filters)
-    val collOk = ctx.argOpt("collection").forall { c =>
-      item.get("collection").forall(_.toString == c.toString)
+    val collOk = ctx.argStrOpt("collection").forall { c =>
+      item.get("collection").forall(_.toString == c)
     }
     val bboxOk = ctx.argOpt("bbox") match {
       case Some(q: Seq[_]) =>
@@ -190,9 +190,9 @@ object StacAssetDownloadPlugin extends StepPlugin {
         }
       case _ => true
     }
-    val dtOk = ctx.argOpt("datetime") match {
+    val dtOk = ctx.argStrOpt("datetime") match {
       case Some(range) =>
-        val Array(start, end) = range.toString.split("/", 2)
+        val Array(start, end) = range.split("/", 2)
         props.get("datetime").forall { d =>
           // Compare as Instants, not raw strings: a date-only end bound
           // must cover the whole day (STAC interval semantics — the

@@ -36,10 +36,10 @@ object TextDedupPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val minJ = ctx.argOpt("min_jaccard").map(_.toString.toDouble)
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val minJ = ctx.argDoubleOpt("min_jaccard")
+    val n = ctx.argInt("ngram", 3)
 
     val docs = ctx.spark.read.parquet(in)
     // exact pass first: cheapest, always on (one hash-aggregate window)
@@ -92,12 +92,11 @@ object TextCrossDedupPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val minJ = ctx.argOpt("min_jaccard").map(_.toString.toDouble)
-      .getOrElse(0.5)
-    val cap = ctx.argOpt("max_doc_freq").map(_.toString.toInt)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 3)
+    val minJ = ctx.argDouble("min_jaccard", 0.5)
+    val cap = ctx.argIntOpt("max_doc_freq")
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val ref = ctx.spark.read.parquet(ctx.argStr("reference_input"))
     val matches = Dedup.crossCorpusBest(docs, ref, idCol, col(textCol),
@@ -105,7 +104,7 @@ object TextCrossDedupPlugin extends StepPlugin {
       .withColumnRenamed("doc_id", idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      ctx.argOpt("matches_path").map(_.toString).foreach(p =>
+      ctx.argStrOpt("matches_path").foreach(p =>
         matches.write.mode("overwrite").parquet(p))
       docs.join(matches.select(idCol), Seq(idCol), "left_anti")
         .write.mode("overwrite").parquet(out)
@@ -133,10 +132,9 @@ object TextDriftPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val srcCol = ctx.argOpt("source_col").map(_.toString)
-      .getOrElse("source")
-    val topK = ctx.argOpt("top_k").map(_.toString.toInt).getOrElse(50)
+    val textCol = ctx.argStr("text_col", "text")
+    val srcCol = ctx.argStr("source_col", "source")
+    val topK = ctx.argInt("top_k", 50)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val ref = ctx.spark.read.parquet(ctx.argStr("reference_input"))
     graft.operators.Drift.termDrift(docs, ref, col(textCol), topK)
@@ -147,7 +145,7 @@ object TextDriftPlugin extends StepPlugin {
     val fields = scala.collection.mutable.Map[String, Any](
       "output_path" -> out, "n_terms" -> drifted.count(),
       "max_ratio" -> maxRatio)
-    ctx.argOpt("oov_path").map(_.toString).foreach { p =>
+    ctx.argStrOpt("oov_path").foreach { p =>
       graft.operators.Drift.oovRate(docs, ref, col(textCol), col(srcCol))
         .coalesce(1).write.mode("overwrite").parquet(p)
       val oov = ctx.spark.read.parquet(p)
@@ -172,10 +170,10 @@ object TextQualityPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val minTok = ctx.argOpt("min_tokens").map(_.toString.toLong).getOrElse(20L)
-    val maxTok = ctx.argOpt("max_tokens").map(_.toString.toLong).getOrElse(500L)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val minTok = ctx.argLong("min_tokens", 20L)
+    val maxTok = ctx.argLong("max_tokens", 500L)
 
     val verdicts = graft.queries.TextQueries.qualityVerdict(
       ctx.spark.read.parquet(in), idCol, textCol, minTok, maxTok)
@@ -198,10 +196,10 @@ object TextFingerprintPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val w = ctx.argOpt("window").map(_.toString.toInt).getOrElse(4)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 3)
+    val w = ctx.argInt("window", 4)
 
     val c = Counted.write(Fingerprint.winnowFingerprints(
         ctx.spark.read.parquet(in), idCol, col(textCol), n = n, w = w),
@@ -226,14 +224,12 @@ object TextSpanAuditPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val outDir = ctx.argStr("output_dir")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val srcCol = ctx.argOpt("source_col").map(_.toString).getOrElse("source")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(8)
-    val flagRatio = ctx.argOpt("flag_ratio").map(_.toString.toDouble)
-      .getOrElse(0.5)
-    val cap = ctx.argOpt("max_sources_per_shingle")
-      .map(_.toString.toInt).getOrElse(0)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val srcCol = ctx.argStr("source_col", "source")
+    val n = ctx.argInt("ngram", 8)
+    val flagRatio = ctx.argDouble("flag_ratio", 0.5)
+    val cap = ctx.argInt("max_sources_per_shingle", 0)
 
     val docs = ctx.spark.read.parquet(in)
     val spansPath = s"$outDir/dup_spans.parquet"
@@ -275,16 +271,15 @@ object TextResamplePlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val budget = ctx.argStr("budget").toLong
+    val budget = ctx.argLong("budget")
     val weights = ctx.argOpt("weights") match {
       case Some(m: Map[_, _]) => m.map { case (k, v) =>
         k.toString -> v.toString.toDouble }
       case _ => sys.error("text_resample: 'weights' map is required")
     }
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val stCol = ctx.argOpt("stratum_col").map(_.toString).getOrElse("source")
-    val defW = ctx.argOpt("default_weight").map(_.toString.toDouble)
-      .getOrElse(0.0)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val stCol = ctx.argStr("stratum_col", "source")
+    val defW = ctx.argDouble("default_weight", 0.0)
 
     val docs = ctx.spark.read.parquet(in)
     val c = Counted.write(Resample.toMixture(docs, col(idCol), col(stCol),
@@ -311,8 +306,8 @@ object TextScrubPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
 
     val docs = ctx.spark.read.parquet(in)
     val scrubbed = Scrub.scrub(docs, col(idCol), col(textCol))
@@ -340,12 +335,11 @@ object TextTermIndexPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val outDir = ctx.argStr("output_dir")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val k = ctx.argOpt("top_k").map(_.toString.toInt).getOrElse(5)
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val maxPost = ctx.argOpt("max_postings").map(_.toString.toInt)
-      .getOrElse(10)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val k = ctx.argInt("top_k", 5)
+    val n = ctx.argInt("ngram", 3)
+    val maxPost = ctx.argInt("max_postings", 10)
 
     val docs = ctx.spark.read.parquet(in)
     val topkPath = s"$outDir/term_topk.parquet"
@@ -382,9 +376,9 @@ object TextDecontaminatePlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(8)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 8)
     val docs = ctx.spark.read.parquet(in)
     val bench = ctx.spark.read.parquet(ctx.argStr("benchmark_input"))
     val flags = Decontaminate.flag(docs, bench, idCol, col(textCol), n)
@@ -392,8 +386,8 @@ object TextDecontaminatePlugin extends StepPlugin {
     // computing them costs the full corpus shingle pass: persist
     flags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      ctx.argOpt("flags_path").foreach(p =>
-        flags.write.mode("overwrite").parquet(p.toString))
+      ctx.argStrOpt("flags_path").foreach(p =>
+        flags.write.mode("overwrite").parquet(p))
       val kept = Counted.write(
         docs.join(flags.filter(col("keep")).select(col(idCol)),
           Seq(idCol)),
@@ -420,17 +414,16 @@ object TextContaminationScorePlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(8)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 8)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val bench = ctx.spark.read.parquet(ctx.argStr("benchmark_input"))
     val c = Counted.write(
       SpanDedup.contaminationScore(docs, bench, idCol, col(textCol), n),
       out, "n_scored" -> Counted.rows,
       "n_flagged" -> sum(when(col("contamination") > 0, 1)))
-    val extra = ctx.argOpt("max_contamination").map { t =>
-      val thr = t.toString.toDouble
+    val extra = ctx.argDoubleOpt("max_contamination").map { thr =>
       val cleanPath = ctx.argStr("clean_path")
       val scores = ctx.spark.read.parquet(out)
       Map[String, Any]("clean_path" -> cleanPath) ++ Counted.write(
@@ -463,13 +456,12 @@ object TextPackPlugin extends StepPlugin {
   def run(ctx: StepContext): StepResult = {
     val in = ctx.argStr("input")
     val out = ctx.argStr("output_path")
-    val id = ctx.argOpt("id_expr").map(e => expr(e.toString))
-      .getOrElse(col(ctx.argOpt("id_col").map(_.toString)
-        .getOrElse("doc_id")))
-    val srcCol = ctx.argOpt("source_col").map(_.toString).getOrElse("source")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val seqLen = ctx.argOpt("seq_len").map(_.toString.toInt).getOrElse(2048)
-    val buckets = ctx.argOpt("buckets").map(_.toString.toInt).getOrElse(64)
+    val id = ctx.argStrOpt("id_expr").map(expr)
+      .getOrElse(col(ctx.argStr("id_col", "doc_id")))
+    val srcCol = ctx.argStr("source_col", "source")
+    val textCol = ctx.argStr("text_col", "text")
+    val seqLen = ctx.argInt("seq_len", 2048)
+    val buckets = ctx.argInt("buckets", 64)
     val docs = ctx.spark.read.parquet(in)
     val c = Counted.write(SequencePack.pack(docs, id, col(srcCol),
         size(TextStats.tokens(col(textCol))), seqLen, buckets),
@@ -498,12 +490,11 @@ object TextCosinePairsPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val minCos = ctx.argOpt("min_cosine").map(_.toString.toDouble)
-      .getOrElse(0.3)
-    val maxDf = ctx.argOpt("max_df").map(_.toString.toLong).getOrElse(100L)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 3)
+    val minCos = ctx.argDouble("min_cosine", 0.3)
+    val maxDf = ctx.argLong("max_df", 100L)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val occurrences = Fingerprint
       .explodedShingles(docs, idCol, col(textCol), n = n)
@@ -535,19 +526,18 @@ object TextLeakageSplitPlugin extends StepPlugin {
 
   private[plugins] def parseWeights(s: String): Seq[(String, Double)] =
     s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
-      val Array(k, v) = kv.split("=", 2)
+      val (k, v) = StepContext.splitPair(kv)
       k.trim -> v.trim.toDouble
     }
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val minJ = ctx.argOpt("min_jaccard").map(_.toString.toDouble)
-      .getOrElse(0.5)
-    val weights = parseWeights(ctx.argOpt("weights").map(_.toString)
-      .getOrElse("train=0.8,val=0.1,test=0.1"))
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 3)
+    val minJ = ctx.argDouble("min_jaccard", 0.5)
+    val weights =
+      parseWeights(ctx.argStr("weights", "train=0.8,val=0.1,test=0.1"))
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val pairs = Dedup.ngramJaccardPairs(docs, idCol, col(textCol),
       n = n, minJaccard = minJ)
@@ -581,11 +571,10 @@ object TextClusterWeightsPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val n = ctx.argOpt("ngram").map(_.toString.toInt).getOrElse(3)
-    val minJ = ctx.argOpt("min_jaccard").map(_.toString.toDouble)
-      .getOrElse(0.5)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val n = ctx.argInt("ngram", 3)
+    val minJ = ctx.argDouble("min_jaccard", 0.5)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val pairs = Dedup.ngramJaccardPairs(docs, idCol, col(textCol),
       n = n, minJaccard = minJ)
@@ -612,11 +601,10 @@ object TextTopicPairsPlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val textCol = ctx.argOpt("text_col").map(_.toString).getOrElse("text")
-    val k = ctx.argOpt("top_k").map(_.toString.toInt).getOrElse(3)
-    val minSupport = ctx.argOpt("min_support").map(_.toString.toLong)
-      .getOrElse(5L)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val textCol = ctx.argStr("text_col", "text")
+    val k = ctx.argInt("top_k", 3)
+    val minSupport = ctx.argLong("min_support", 5L)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val c = Counted.write(
       TermIndex.topicCooccurrence(docs, idCol, col(textCol), k, minSupport),
@@ -639,9 +627,9 @@ object TextGroupSamplePlugin extends StepPlugin {
 
   def run(ctx: StepContext): StepResult = {
     val out = ctx.argStr("output_path")
-    val idCol = ctx.argOpt("id_col").map(_.toString).getOrElse("doc_id")
-    val grpCol = ctx.argOpt("group_col").map(_.toString).getOrElse("source")
-    val k = ctx.argOpt("k").map(_.toString.toInt).getOrElse(20)
+    val idCol = ctx.argStr("id_col", "doc_id")
+    val grpCol = ctx.argStr("group_col", "source")
+    val k = ctx.argInt("k", 20)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val c = Counted.write(Sample.fixedPerGroup(docs, col(idCol), col(grpCol), k),
       out, "n_sampled" -> Counted.rows)

@@ -181,6 +181,61 @@ class RunnerSpec extends SparkSpecBase {
     assert(!Files.exists(root.resolve("child/2025.txt"))) // override won
   }
 
+  test("a typed arg that does not parse fails naming its key and value") {
+    val root = tmpDir()
+    import spark.implicits._
+    val docs = root.resolve("docs").toString
+    Seq((1L, "a b c d")).toDF("doc_id", "text").write.parquet(docs)
+    val p = write(root, "dedup.yml",
+      s"""steps:
+         |  - plugin: text_dedup
+         |    args:
+         |      input: "$docs"
+         |      ngram: abc
+         |      output_path: "$root/out"
+         |""".stripMargin)
+    val e = intercept[IllegalArgumentException](runner(root).runFile(p))
+    assert(e.getMessage.contains("'ngram'") && e.getMessage.contains("Int") &&
+      e.getMessage.contains("'abc'"), e.getMessage)
+  }
+
+  test("a vars_kv pair without '=' fails naming the pair") {
+    val root = tmpDir()
+    write(root, "child.yml", "steps:\n  - plugin: echo\n")
+    val parent = write(root, "parent.yml",
+      """steps:
+        |  - plugin: pipeline_execute
+        |    args:
+        |      pipeline_path: child.yml
+        |      vars_kv: "year"
+        |""".stripMargin)
+    val e = intercept[IllegalArgumentException](runner(root).runFile(parent))
+    assert(e.getMessage.contains("'year'"), e.getMessage)
+    assert(intercept[IllegalArgumentException](StepContext.splitPair("foo"))
+      .getMessage.contains("'foo'"))
+  }
+
+  test("pipeline_execute rejects an unknown mode, naming it") {
+    val root = tmpDir()
+    write(root, "child.yml",
+      s"""steps:
+         |  - plugin: write_file
+         |    args:
+         |      path: "$root/child.txt"
+         |      content: ran
+         |""".stripMargin)
+    val parent = write(root, "parent.yml",
+      """steps:
+        |  - plugin: pipeline_execute
+        |    args:
+        |      pipeline_path: child.yml
+        |      mode: asnyc
+        |""".stripMargin)
+    val e = intercept[IllegalArgumentException](runner(root).runFile(parent))
+    assert(e.getMessage.contains("'asnyc'"), e.getMessage)
+    assert(!Files.exists(root.resolve("child.txt"))) // nothing ran
+  }
+
   test("requires_pipelines run first and are memoized per session (§3.3)") {
     val root = tmpDir()
     counter.set(0)

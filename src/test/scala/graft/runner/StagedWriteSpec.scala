@@ -248,4 +248,18 @@ class StagedWriteSpec extends SparkSpecBase {
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("no plugin parses an arg by hand: typed args go through StepContext") {
+    val handRolled = Seq(
+      """argOpt\([^)]*\)\s*\.map\(_\.toString""".r,
+      """argStr\([^)]*\)\.to(Int|Long|Double)\b""".r)
+    val dir = Paths.get("src/main/scala/graft/runner/plugins")
+    val hits = names(dir).toSeq.sorted.flatMap { f =>
+      val src = Files.readString(dir.resolve(f))
+      handRolled.flatMap(_.findAllMatchIn(src)).map { m =>
+        s"$f:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
