@@ -76,11 +76,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // builder-side iteration aid (mirrors Verify's SPARK_GRAFT_ONLY):
-    // restrict the battery to named queries; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    only.foreach(graft.queries.StreamingQueries.scopeDrains(spark, _))
+    val only = SparkEntry.onlyFromEnv(spark)
 
     // Warmup outcomes are RECORDED, never silently swallowed (judge r12
     // ask #1: the driver's r12 window put +20 s on the two

@@ -38,6 +38,15 @@ object SparkEntry {
     * oracles, every `sbt test`) and tools/preflight.py. */
   def oracleSql: Map[String, String] =
     groups.flatMap(_.oracles).toMap
+
+  /** `SPARK_GRAFT_ONLY=q1,q2`: the queries a Bench or Verify run keeps,
+    * with `spark`'s stream drains scoped to them (unset: all). */
+  private[graft] def onlyFromEnv(spark: SparkSession): Option[Set[String]] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    only.foreach(StreamingQueries.scopeDrains(spark, _))
+    only
+  }
 }
 
 /** A named bundle of queries plus their DuckDB oracles. */

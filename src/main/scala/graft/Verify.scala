@@ -11,12 +11,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // builder-side iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the
-    // dump, and the stream drains, to named queries (the driver never
-    // sets it — full battery)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    only.foreach(graft.queries.StreamingQueries.scopeDrains(spark, _))
+    val only = SparkEntry.onlyFromEnv(spark)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

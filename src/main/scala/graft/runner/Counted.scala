@@ -10,13 +10,11 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
-/** Step counters without a job of their own.
-  *
-  * A `StepResult` counter computed after the write costs a Spark job
-  * and a Catalyst pass of its own: a re-read of the file just written
-  * plus a `count()`, or a second pass over the input. Here a counter
-  * comes from the write that produces the step's output, or from the
-  * parquet footers of a written file.
+/** The one parquet writer of a plugin's output. [[write]] overwrites
+  * `path`: with no metrics it is a plain write with no `Observation`;
+  * with metrics it observes them on the written rows, so a `StepResult`
+  * counter costs no Spark job of its own, as a re-read plus `count()`
+  * or a second pass over the input would.
   *
   * [[write]] attaches aggregate columns to the written frame with
   * `Dataset.observe`. The observed node is the top of the written
@@ -44,23 +42,33 @@ object Counted {
   private val Wait = 5.minutes
 
   /** Writes `df` as parquet at `path` (overwrite) with `metrics`
-    * observed on the written rows, and returns their values. */
+    * observed on the written rows, and returns their values; with no
+    * metrics, a plain write that returns an empty map. */
   def write(df: DataFrame, path: String,
             metrics: (String, Column)*): Map[String, Long] = {
-    require(metrics.nonEmpty, "Counted.write needs at least one metric")
-    val obs = Observation()
-    val cols = metrics.map { case (n, c) => c.as(n) }
-    df.observe(obs, cols.head, cols.tail: _*)
-      .write.mode("overwrite").parquet(path)
-    val row = Await.result(obs.future, Wait)
-    // the observed node tops the written plan, so no rewrite prunes it
-    if (row.schema == null)
-      throw new IllegalStateException(s"no metrics observed writing $path")
-    metrics.map { case (n, _) =>
-      val v = row.getAs[Any](n)
-      n -> (if (v == null) 0L else v.asInstanceOf[Number].longValue)
-    }.toMap
+    if (metrics.isEmpty) {
+      df.write.mode("overwrite").parquet(path)
+      Map.empty
+    } else {
+      val obs = Observation()
+      val cols = metrics.map { case (n, c) => c.as(n) }
+      df.observe(obs, cols.head, cols.tail: _*)
+        .write.mode("overwrite").parquet(path)
+      val row = Await.result(obs.future, Wait)
+      // the observed node tops the written plan, so no rewrite prunes it
+      if (row.schema == null)
+        throw new IllegalStateException(s"no metrics observed writing $path")
+      metrics.map { case (n, _) =>
+        val v = row.getAs[Any](n)
+        n -> (if (v == null) 0L else v.asInstanceOf[Number].longValue)
+      }.toMap
+    }
   }
+
+  /** [[write]] as a step's result: `output_path` and the counters. */
+  def output(df: DataFrame, path: String,
+             metrics: (String, Column)*): StepResult =
+    StepResult(Map("output_path" -> path) ++ write(df, path, metrics: _*))
 
   /** The rows `spark.read.parquet(path)` scans, summed from the parquet
     * footers of its data files: exact, and no Spark job. `path` may be

@@ -93,10 +93,21 @@ final case class StepContext(
   private def missing(key: String): Nothing =
     throw new IllegalArgumentException(s"missing arg '$key' in $args")
 
-  /** The one parse of an arg value; `kind` names the type in the error. */
+  /** The one parse of an arg value; `kind` names the type in the error.
+    * SnakeYAML reads a bare `2024-06-01` or `2024-06-01T12:00:00Z` as a
+    * `java.util.Date`, which reads back as ISO-8601 text: a date when it
+    * falls on a UTC midnight, else the instant. */
   private def parse[A](key: String, kind: String)(read: String => A)
       : Option[A] = args.get(key).map { v =>
-    try read(v.toString)
+    val text = v match {
+      case d: java.util.Date =>
+        val t = d.toInstant.atOffset(java.time.ZoneOffset.UTC)
+        if (t.toLocalTime == java.time.LocalTime.MIDNIGHT)
+          t.toLocalDate.toString
+        else d.toInstant.toString
+      case _ => v.toString
+    }
+    try read(text)
     catch { case e: IllegalArgumentException =>
       throw new IllegalArgumentException(
         s"arg '$key' must be $kind, got '$v'", e) }
@@ -105,7 +116,7 @@ final case class StepContext(
 
   def arg(key: String): Any = args.getOrElse(key, missing(key))
   def argOpt(key: String): Option[Any] = args.get(key)
-  def argStr(key: String): String = arg(key).toString
+  def argStr(key: String): String = argStrOpt(key).getOrElse(missing(key))
   def argStr(key: String, default: String): String =
     argStrOpt(key).getOrElse(default)
   def argStrOpt(key: String): Option[String] = parse(key, "a string")(identity)
@@ -165,7 +176,9 @@ object StepContext {
 /** Structured step result; fields are visible to later steps via
   * `{output_var.field}` (/root/reference/pipelines/tiger/county.yml:41,47). */
 final case class StepResult(fields: Map[String, Any] = Map.empty,
-                            skipped: Boolean = false)
+                            skipped: Boolean = false) {
+  def ++(more: Map[String, Any]): StepResult = copy(fields = fields ++ more)
+}
 
 /** Plugin registry. Lookup normalizes the reference's naming variants:
   * with/without `.py`, with/without the `geo/` namespace

@@ -44,14 +44,16 @@ object JsonUtil {
 /** A5 — `vector_facts`: profile a feature dataset into a facts JSON
   * (feature count, per-column stats, schema)
   * (/root/reference/pipelines/tiger/county.yml:36-41); downstream steps
-  * read `{vector_facts.vector_facts_json}` (county.yml:47). */
+  * read `{vector_facts.vector_facts_json}` (county.yml:47).
+  * `feature_count` is the input's row count from its parquet footers. */
 object VectorFactsPlugin extends StepPlugin {
   val name = "vector_facts"
   def run(ctx: StepContext): StepResult = {
     // reference names: input_dir / output_dir
     // (/root/reference/pipelines/tiger/county.yml:38-40); output_dir
     // receives the canonical vector_facts.json inside it
-    val df = ctx.spark.read.parquet(ctx.argAnyStr("path", "input_dir"))
+    val in = ctx.argAnyStr("path", "input_dir")
+    val df = ctx.spark.read.parquet(in)
     val profile = Profile(df).collect().map { r =>
       Map(
         "column" -> r.getString(0), "dtype" -> r.getString(1),
@@ -59,7 +61,7 @@ object VectorFactsPlugin extends StepPlugin {
         "n_distinct" -> r.getLong(4))
     }.toList
     val facts = Map(
-      "feature_count" -> df.count(),
+      "feature_count" -> Counted.parquetRows(ctx.spark, in),
       "schema" -> df.schema.json,
       "columns" -> profile)
     val out = ctx.argStrOpt("output_path").map(Paths.get(_)).getOrElse(

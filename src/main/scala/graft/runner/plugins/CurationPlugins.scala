@@ -9,12 +9,8 @@ import graft.runner._
 
 /** The round-6 curation/analytics operators as runner plugins (SURVEY
   * §7 step 6) — same library the oracle battery verifies, addressable
-  * from YAML pipelines.
-  *
-  * A counter that counts (or filter-counts, or sums) a frame the step
-  * writes rides that write through [[graft.runner.Counted]]; a row
-  * count of a parquet input or output comes from its footers. Distinct
-  * counts and counts of other datasets keep their own job.
+  * from YAML pipelines. Outputs and counters follow the rule in the
+  * `TextPlugins` header: one writer, [[graft.runner.Counted.write]].
   */
 
 /** `text_lm_score` — bigram-LM corpus-fit scoring ([[NgramLm.score]]).
@@ -40,10 +36,9 @@ object TextLmScorePlugin extends StepPlugin {
         (docs.filter(col(idCol) % m === 0),
           docs.filter(col(idCol) % m =!= 0))
     }
-    val c = Counted.write(NgramLm.score(scored, lm, idCol, col(textCol)),
+    Counted.output(NgramLm.score(scored, lm, idCol, col(textCol)),
       out, "n_scored" -> Counted.rows,
       "n_oov_docs" -> sum(when(col("n_oov") > 0, 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -71,9 +66,8 @@ object TextDsirPlugin extends StepPlugin {
       case _ => sys.error(
         "text_dsir: one of 'target_input' / 'target_where' is required")
     }
-    val c = Counted.write(Dsir.weights(docs, target, idCol, col(textCol), b),
+    Counted.output(Dsir.weights(docs, target, idCol, col(textCol), b),
       out, "n_docs" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -96,9 +90,8 @@ object TextCurriculumPlugin extends StepPlugin {
     val diff = ctx.argStrOpt("difficulty_expr").map(expr)
       .getOrElse(size(TextStats.tokens(col(textCol))).cast("long"))
     val docs = ctx.spark.read.parquet(in)
-    val c = Counted.write(Curriculum.order(docs, col(idCol), diff, buckets)
+    Counted.output(Curriculum.order(docs, col(idCol), diff, buckets)
       .withColumnRenamed("id", idCol), out, "n_docs" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -129,8 +122,8 @@ object EmbeddingSemdedupPlugin extends StepPlugin {
       "n_kept" -> sum(when(col("keep"), 1)))
     ctx.argStrOpt("keep_path").foreach { kp =>
       val v = ctx.spark.read.parquet(out)
-      raw.join(v.filter(col("keep")).select(col("id").as(idCol)), Seq(idCol))
-        .write.mode("overwrite").parquet(kp)
+      Counted.write(raw.join(v.filter(col("keep")).select(col("id").as(idCol)),
+        Seq(idCol)), kp)
     }
     StepResult(Map("output_path" -> out) ++ c)
   }
@@ -152,13 +145,12 @@ object EmbeddingOutliersPlugin extends StepPlugin {
     val grpCol = ctx.argStr("group_col", "label")
     val vecCol = ctx.argStr("vec_col", "embedding")
     val k = ctx.argInt("top_k", 5)
-    val c = Counted.write(Outliers.byGroup(
+    Counted.output(Outliers.byGroup(
         ctx.spark.read.parquet(in).select(col(idCol).as("id"),
           col(grpCol).as("grp"),
           Similarity.asDouble(col(vecCol)).as("vec")), k),
       out, "n_vectors" -> Counted.rows,
       "n_outliers" -> sum(when(col("is_outlier"), 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -170,6 +162,8 @@ object EmbeddingOutliersPlugin extends StepPlugin {
   * doomed keys as either `keys_input` (parquet of key rows) or
   * `where` (SQL predicate over the dataset selecting rows to delete).
   * Optional `partition_cols` (list).
+  *
+  * `n_before` and `n_after` come from the dataset's parquet footers.
   */
 object TargetedDeletePlugin extends StepPlugin {
   val name = "targeted_delete"
@@ -179,7 +173,7 @@ object TargetedDeletePlugin extends StepPlugin {
     val keys = ctx.argList("keys")
       .getOrElse(sys.error("targeted_delete: 'keys' list is required"))
     val pcols = ctx.argList("partition_cols").getOrElse(Nil)
-    val before = ctx.spark.read.parquet(path).count()
+    val before = Counted.parquetRows(ctx.spark, path)
     val doomed = (ctx.argStrOpt("keys_input"), ctx.argStrOpt("where")) match {
       case (Some(p), _) => ctx.spark.read.parquet(p)
       case (None, Some(w)) => ctx.spark.read.parquet(path).filter(expr(w))
@@ -187,7 +181,7 @@ object TargetedDeletePlugin extends StepPlugin {
         "targeted_delete: one of 'keys_input' / 'where' is required")
     }
     graft.operators.Sink.deleteKeys(ctx.spark, path, doomed, keys, pcols)
-    val after = ctx.spark.read.parquet(path).count()
+    val after = Counted.parquetRows(ctx.spark, path)
     StepResult(Map("dataset_path" -> path, "n_before" -> before,
       "n_after" -> after, "n_deleted" -> (before - after)))
   }
@@ -217,9 +211,8 @@ object GraphPagerankPlugin extends StepPlugin {
       case None => edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id"))).distinct()
     }
-    val c = Counted.write(PageRank.run(nodes, edges, iters, damping), out,
+    Counted.output(PageRank.run(nodes, edges, iters, damping), out,
       "n_nodes" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -248,9 +241,8 @@ object TextBudgetCapPlugin extends StepPlugin {
       if (ctx.argBool("keep_only", default = false))
         audited.filter(col("kept"))
       else audited
-    val c = Counted.write(result, out, "n_out" -> Counted.rows,
+    Counted.output(result, out, "n_out" -> Counted.rows,
       "n_kept" -> sum(when(col("kept"), 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -282,9 +274,8 @@ object TextQualityFloorPlugin extends StepPlugin {
       if (ctx.argBool("keep_only", default = false))
         audited.filter(col("kept"))
       else audited
-    val c = Counted.write(result, out, "n_out" -> Counted.rows,
+    Counted.output(result, out, "n_out" -> Counted.rows,
       "n_kept" -> sum(when(col("kept"), 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -308,9 +299,8 @@ object GraphTrianglesPlugin extends StepPlugin {
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
       greatest(col("__x"), col("__y")).as("b")).distinct()
-    val c = Counted.write(Triangles.perNode(canon), out,
+    Counted.output(Triangles.perNode(canon), out,
       "n_nodes" -> Counted.rows, "n_closed" -> sum(when(col("n_tri") > 0, 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -328,10 +318,9 @@ object TextBpeLearnPlugin extends StepPlugin {
     val out = ctx.argStr("output_path")
     val rounds = ctx.argInt("rounds", 16)
     val textCol = ctx.argStr("text_col", "text")
-    val c = Counted.write(
+    Counted.output(
       Bpe.learnMerges(ctx.spark.read.parquet(in), col(textCol), rounds),
       out, "n_merges" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -357,11 +346,10 @@ object GraphKcorePlugin extends StepPlugin {
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
       greatest(col("__x"), col("__y")).as("b")).distinct()
-    val c = Counted.write(KCore.peel(canon, k, rounds,
+    Counted.output(KCore.peel(canon, k, rounds,
         ctx.argStrOpt("checkpoint_dir")),
       out, "n_nodes" -> Counted.rows,
       "n_converged" -> sum(when(col("in_core"), 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -380,6 +368,9 @@ object GraphKcorePlugin extends StepPlugin {
   * with `k` (default 5) neighbors probing `nprobe` (default 2)
   * clusters — searched AGAINST THE PERSISTED INDEX, proving the
   * pruned-scan round trip, not the in-memory frame.
+  *
+  * `n_indexed` comes from the index's parquet footers; `n_clusters` is
+  * a distinct count with its own job.
   */
 object EmbeddingAnnPlugin extends StepPlugin {
   val name = "embedding_ann"
@@ -395,8 +386,7 @@ object EmbeddingAnnPlugin extends StepPlugin {
     val centroids = Ivf.train(corpus, clusters, iters)
     val assigned = Ivf.assign(corpus, centroids)
     Ivf.writeIndex(assigned, indexPath)
-    ctx.argStrOpt("centroids_path").foreach(p =>
-      centroids.write.mode("overwrite").parquet(p))
+    ctx.argStrOpt("centroids_path").foreach(Counted.write(centroids, _))
     val index = ctx.spark.read.parquet(indexPath)
     val extra = ctx.argStrOpt("queries_input").map { qp =>
       val tp = ctx.argStr("topk_path")
@@ -412,7 +402,7 @@ object EmbeddingAnnPlugin extends StepPlugin {
       Map("topk_path" -> tp) ++ c
     }.getOrElse(Map.empty[String, Any])
     StepResult(Map("index_path" -> indexPath,
-      "n_indexed" -> index.count(),
+      "n_indexed" -> Counted.parquetRows(ctx.spark, indexPath),
       "n_clusters" -> index.select("cluster_id").distinct().count()) ++ extra)
   }
 }
@@ -449,8 +439,7 @@ object CorpusShardPlugin extends StepPlugin {
     val source = ctx.spark.read.parquet(in)
     val nShards =
       if (ctx.argBool("assign_only", default = false)) {
-        Shard.assign(source, id, numShards, epoch)
-          .write.mode("overwrite").parquet(out)
+        Counted.write(Shard.assign(source, id, numShards, epoch), out)
         ctx.spark.read.parquet(out).select("shard").distinct().count()
       } else {
         Shard.writeSharded(source, id, numShards, out, epoch)
@@ -484,10 +473,9 @@ object ShardManifestPlugin extends StepPlugin {
     val cut = ctx.spark.read.parquet(ctx.argStr("input"))
     val toks = expr(ctx.argStr("tokens_expr", "0"))
     val chars = expr(ctx.argStr("chars_expr", "0"))
-    val c = Counted.write(
+    Counted.output(
       graft.operators.Shard.manifest(cut, toks, chars).coalesce(1), out,
       "n_docs" -> sum("n_docs"), "n_shards" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -512,9 +500,8 @@ object CorpusDiffPlugin extends StepPlugin {
         col(idCol), col(textCol))
       .withColumnRenamed("id", idCol)
     def n(s: String) = s"n_$s" -> sum(when(col("status") === s, 1))
-    val c = Counted.write(diff, out, "n_total" -> Counted.rows, n("added"),
+    Counted.output(diff, out, "n_total" -> Counted.rows, n("added"),
       n("removed"), n("changed"), n("unchanged"))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -534,11 +521,9 @@ object BloomBuildPlugin extends StepPlugin {
     val valueCol = ctx.argStr("value_col", "text")
     val k = ctx.argInt("k", 4)
     val m = ctx.argInt("m", 4096)
-    val c = Counted.write(graft.operators.Bloom.build(
+    Counted.output(graft.operators.Bloom.build(
         ctx.spark.read.parquet(ctx.argStr("input")), col(valueCol), k, m),
-      out, "n_bits" -> Counted.rows)
-    StepResult(Map("output_path" -> out, "k" -> k.toLong,
-      "m" -> m.toLong) ++ c)
+      out, "n_bits" -> Counted.rows) ++ Map("k" -> k.toLong, "m" -> m.toLong)
   }
 }
 
@@ -551,6 +536,9 @@ object BloomBuildPlugin extends StepPlugin {
   * Args: `input`, `filter_path`, `output_path`; optional `id_col`
   * (doc_id), `value_col` (text), `k` (4), `m` (4096),
   * `drop_members` (false).
+  *
+  * `n_rows` rides the write, and so does `n_flagged` for the verdict
+  * table; the cleaned corpus has no verdicts, so there it has a job.
   */
 object BloomProbePlugin extends StepPlugin {
   val name = "bloom_probe"
@@ -566,13 +554,12 @@ object BloomProbePlugin extends StepPlugin {
     val verdict = graft.operators.Bloom.probe(
       corpus, col(idCol), col(valueCol), filter, k, m)
     val flagged = verdict.filter(col("maybe_member"))
-    val written =
-      if (ctx.argBool("drop_members", default = false))
-        corpus.join(flagged.select(col("id").as(idCol)),
-          Seq(idCol), "left_anti")
-      else verdict.withColumnRenamed("id", idCol)
-    val c = Counted.write(written, out, "n_rows" -> Counted.rows)
-    StepResult(Map("output_path" -> out, "n_rows" -> c("n_rows"),
-      "n_flagged" -> flagged.count()))
+    if (ctx.argBool("drop_members", default = false))
+      Counted.output(corpus.join(flagged.select(col("id").as(idCol)),
+          Seq(idCol), "left_anti"), out, "n_rows" -> Counted.rows) ++
+        Map("n_flagged" -> flagged.count())
+    else Counted.output(verdict.withColumnRenamed("id", idCol), out,
+      "n_rows" -> Counted.rows,
+      "n_flagged" -> sum(when(col("maybe_member"), 1)))
   }
 }

@@ -11,8 +11,8 @@ import graft.runner._
 /** Event-log analytics as runner steps — the downstream query layer
   * over the event-shaped staging tables the reference's pipelines land
   * (see [[graft.operators.Funnel]] for the operator contracts).
-  * Counters over a written frame ride its write
-  * ([[graft.runner.Counted]]); distinct counts keep their own job.
+  * Outputs and counters follow the rule in the `TextPlugins` header:
+  * one writer, [[graft.runner.Counted.write]].
   */
 
 /** Default `ts` expressions for event steps, chosen from the PHYSICAL
@@ -58,11 +58,10 @@ object EventFunnelPlugin extends StepPlugin {
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
     val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.microsExpr(input))
-    val c = Counted.write(Funnel.steps(input,
+    Counted.output(Funnel.steps(input,
         col(userCol), col(kindCol), expr(tsExpr), stages),
       out, "n_entered" -> Counted.rows,
       "n_converted" -> sum(when(col("steps") === stages.size, 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -81,11 +80,9 @@ object EventRetentionPlugin extends StepPlugin {
     val input = ctx.spark.read.parquet(ctx.argStr("input"))
     val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.timestampExpr(input))
-    val c = Counted.write(Retention.cohorts(input,
-        col(userCol), expr(tsExpr)), out, "n_cells" -> Counted.rows)
-    StepResult(Map("output_path" -> out, "n_cells" -> c("n_cells"),
-      "n_cohorts" -> ctx.spark.read.parquet(out)
-        .select("cohort_day").distinct().count()))
+    Counted.output(Retention.cohorts(input, col(userCol), expr(tsExpr)),
+      out, "n_cells" -> Counted.rows) ++ Map("n_cohorts" ->
+      ctx.spark.read.parquet(out).select("cohort_day").distinct().count())
   }
 }
 
@@ -107,11 +104,10 @@ object EventScd2Plugin extends StepPlugin {
     val tsExpr = ctx.argStrOpt("ts_expr")
       .getOrElse(EventTs.microsExpr(input))
     val tb = ctx.argStr("tiebreak_col", "event_id")
-    val c = Counted.write(Scd2.build(input,
+    Counted.output(Scd2.build(input,
         col(userCol), col(attrCol), expr(tsExpr), col(tb)),
       out, "n_intervals" -> Counted.rows,
       "n_current" -> sum(when(col("is_current") === 1, 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -149,15 +145,13 @@ object SketchCountMinPlugin extends StepPlugin {
     val partials = CountMin.partials(toks, col("grp"), col("w"), d, w)
     // with partials_path the merged grid is built from the PERSISTED
     // per-group partials — the actual incremental-rollup round trip
-    val mergeSrc = ctx.argStrOpt("partials_path") match {
-      case Some(p) =>
-        partials.write.mode("overwrite").parquet(p)
-        ctx.spark.read.parquet(p)
-      case None => partials
+    val mergeSrc = ctx.argStrOpt("partials_path").fold(partials) { p =>
+      Counted.write(partials, p)
+      ctx.spark.read.parquet(p)
     }
-    val c = Counted.write(CountMin.merge(mergeSrc), out,
+    val merged = Counted.output(CountMin.merge(mergeSrc), out,
       "n_counters" -> Counted.rows)
-    val extra = ctx.argStrOpt("queries_input").map { qp =>
+    ctx.argStrOpt("queries_input").fold(merged) { qp =>
       val ep = ctx.argStr("estimates_path")
       val qraw = ctx.spark.read.parquet(qp)
       val qtoks = (ctx.argStrOpt("query_token_col"),
@@ -169,11 +163,10 @@ object SketchCountMinPlugin extends StepPlugin {
           "of 'query_token_col' / 'query_text_col'")
       }
       val persisted = ctx.spark.read.parquet(out)
-      Map("estimates_path" -> ep) ++ Counted.write(
+      merged ++ Map("estimates_path" -> ep) ++ Counted.write(
         CountMin.estimate(persisted, qtoks.distinct(), col("token"), d, w),
         ep, "n_estimated" -> Counted.rows)
-    }.getOrElse(Map.empty[String, Any])
-    StepResult(Map("output_path" -> out) ++ c ++ extra)
+    }
   }
 }
 
@@ -212,15 +205,12 @@ object SketchQuantilesPlugin extends StepPlugin {
       .select((grpKeys.map(col) :+ col("bin") :+ col("n")): _*)
     // with partials_path the estimate is built from the PERSISTED
     // per-group grids — the actual incremental-rollup round trip
-    val mergeSrc = ctx.argStrOpt("partials_path") match {
-      case Some(p) =>
-        partials.write.mode("overwrite").parquet(p)
-        ctx.spark.read.parquet(p)
-      case None => partials
+    val mergeSrc = ctx.argStrOpt("partials_path").fold(partials) { p =>
+      Counted.write(partials, p)
+      ctx.spark.read.parquet(p)
     }
-    val c = Counted.write(
+    Counted.output(
       Histogram.quantilesFromPartials(mergeSrc, width, origin, qs), out,
       "n_quantiles" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }

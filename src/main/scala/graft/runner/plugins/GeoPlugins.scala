@@ -34,16 +34,16 @@ object GeoPluginUtil {
   def outPath(ctx: StepContext): String =
     ctx.argAnyStr("output_path", "output_dir")
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   /** A parquet dataset, or at a `.csv` path the reference's output
     * shape: one CSV file (county_ppt_{day}.csv —
-    * pipelines/prism/county_daily_aggregate.yml:29). */
-  def writeTable(df: DataFrame, path: String): Unit =
+    * pipelines/prism/county_daily_aggregate.yml:29); the step's result
+    * names the path under `key`. */
+  def writeTable(df: DataFrame, key: String, path: String): StepResult = {
     if (path.endsWith(".csv")) Ledger.commitSingleFile(Paths.get(path))(
       df.coalesce(1).write.option("header", "true").csv(_))
-    else writeParquet(df, path)
+    else Counted.write(df, path)
+    StepResult(Map(key -> path))
+  }
 
   /** Polygon dimension: `selector_path` (stage-ts-ppt-day-state.yml:30)
     * or the county aggregates' `county_path`
@@ -76,9 +76,7 @@ object GeoClipPlugin extends StepPlugin {
       .select("xmin", "ymin", "xmax", "ymax")
     val clipped = Clip.semi(raster, polys,
       lit(true), bboxContains(raster("x"), raster("y")))
-    val out = outPath(ctx)
-    writeParquet(clipped, out)
-    StepResult(Map("output_path" -> out))
+    Counted.output(clipped, outPath(ctx))
   }
 }
 
@@ -94,9 +92,7 @@ object GeoValueMaskPlugin extends StepPlugin {
     }
     val masked = ValueMask(readRaster(ctx), col("value"), include)
       .drop("value").withColumnRenamed("mask", "value")
-    val out = outPath(ctx)
-    writeParquet(masked, out)
-    StepResult(Map("output_path" -> out))
+    Counted.output(masked, outPath(ctx))
   }
 }
 
@@ -118,9 +114,7 @@ object GeoReprojectPlugin extends StepPlugin {
       .agg(graft.functions.Exact.davg(col("value")).as("value"))
       .withColumn("cell_id",
         col("x").cast("long") * 1000000L + col("y").cast("long"))
-    val out = outPath(ctx)
-    writeParquet(coarse, out)
-    StepResult(Map("output_path" -> out))
+    Counted.output(coarse, outPath(ctx))
   }
 }
 
@@ -133,12 +127,10 @@ object GeoMultiplyPlugin extends StepPlugin {
     val stack = readRaster(ctx)
     val weights = ctx.spark.read.parquet(ctx.argStr("weight_raster"))
       .select(col("x"), col("y"), col("value").as("__w"))
-    val out = outPath(ctx)
     val product = MultiplyJoin(stack, weights, Seq("x", "y"),
       col("value"), col("__w"))
       .drop("value", "__w").withColumnRenamed("weighted", "value")
-    writeParquet(product, out)
-    StepResult(Map("output_path" -> out))
+    Counted.output(product, outPath(ctx))
   }
 }
 
@@ -161,9 +153,7 @@ object GeoRunningWindowPlugin extends StepPlugin {
       .withColumnRenamed(s"rollsum_${window}d", "value")
     val trimmed = ctx.argIntOpt("target_year")
       .map(Rolling.trimYear(rolled, col("day"), _)).getOrElse(rolled)
-    val out = outPath(ctx)
-    writeParquet(trimmed, out)
-    StepResult(Map("output_path" -> out, "window" -> window))
+    Counted.output(trimmed, outPath(ctx)) ++ Map("window" -> window)
   }
 }
 
@@ -177,11 +167,9 @@ object GeoSpiPlugin extends StepPlugin {
     val method = ctx.argStr("method", "zscore")
     require(method == "zscore", s"unsupported SPI method: $method")
     val df = readRaster(ctx).withColumn("doy", dayofyear(col("day")))
-    val out = outPath(ctx)
     val z = ZScore(df, Seq("cell_id", "doy"), col("value"))
       .drop("value", "doy").withColumnRenamed("zscore", "value")
-    writeParquet(z, out)
-    StepResult(Map("output_path" -> out))
+    Counted.output(z, outPath(ctx))
   }
 }
 
@@ -203,9 +191,7 @@ object GeoCountyAggregatePlugin extends StepPlugin {
     val keys = if (raster.columns.contains("day"))
       Seq("geoid", "name", "day") else Seq("geoid", "name")
     val stats = ZonalStats(assigned, keys, col("value"), prefix)
-    val out = outPath(ctx)
-    writeTable(stats, out)
-    StepResult(Map("output_path" -> out))
+    writeTable(stats, "output_path", outPath(ctx))
   }
 }
 
@@ -231,8 +217,7 @@ object GeoCountyWeightedAggregatePlugin extends StepPlugin {
     val out = WeightedZonal(assigned, Seq("geoid", "name", "day"),
       col("value"), col("__w"), s"${prefix}_wavg")
       .drop(s"${prefix}_wavg_num", s"${prefix}_wavg_den")
-    val path = ctx.argStrOpt("output_file").getOrElse(outPath(ctx))
-    writeTable(out, path)
-    StepResult(Map("output_file" -> path))
+    writeTable(out, "output_file",
+      ctx.argStrOpt("output_file").getOrElse(outPath(ctx)))
   }
 }

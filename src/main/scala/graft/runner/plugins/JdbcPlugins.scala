@@ -122,22 +122,13 @@ object JdbcWritePlugin extends StepPlugin {
       val con = java.sql.DriverManager.getConnection(url)
       try {
         // one statement per operation: DuckDB's JDBC statement closes
-        // together with its result set. The exists-probe must
-        // distinguish "table does not exist" from every other failure:
-        // treating a transient error as "absent" would turn an append
-        // into CREATE OR REPLACE and silently drop existing rows, so
-        // only DuckDB's does-not-exist catalog message maps to false
-        // and anything else rethrows.
+        // together with its result set
         val exists =
           try {
             val st = con.createStatement()
             st.executeQuery(s"SELECT 1 FROM $table LIMIT 0").close()
             true
-          } catch {
-            case e: java.sql.SQLException
-                if Option(e.getMessage).exists(
-                  _.contains("does not exist")) => false
-          }
+          } catch { case e: java.sql.SQLException if tableAbsent(e) => false }
         val sql =
           if (sparkMode == "overwrite" || !exists)
             s"CREATE OR REPLACE TABLE $table AS " +
@@ -238,6 +229,17 @@ object JdbcWritePlugin extends StepPlugin {
     }
   }
 
+  /** Whether `e` or a cause is a JDBC "does not exist" failure: the one
+    * failure that may read as "no table yet". Any other (a transient
+    * error, a column type the reader rejects) must rethrow: a write
+    * that took the table as absent would replace its rows. */
+  private def tableAbsent(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: java.sql.SQLException =>
+        Option(s.getMessage).exists(_.contains("does not exist"))
+      case _ => false
+    }
+
   /** The physical table write, routed per dialect: DuckDB takes the
     * bulk parquet path, Derby the bulk CSV-import path when the schema
     * allows it, everything else the JDBC batch writer. */
@@ -290,7 +292,7 @@ object JdbcWritePlugin extends StepPlugin {
           .executeQuery(s"SELECT COUNT(*) FROM $table")
         rs.next(); val n = rs.getLong(1); rs.close(); n
       } catch {
-        case _: java.sql.SQLException => 0L // table absent
+        case e: java.sql.SQLException if tableAbsent(e) => 0L
       } finally con.close()
     }
     gated { mode match {
@@ -306,12 +308,11 @@ object JdbcWritePlugin extends StepPlugin {
       case "upsert" =>
         require(keys.nonEmpty, "jdbc_write mode:upsert needs keys")
         val existing =
-          try incoming.sparkSession.read.jdbc(url, table, props)
-          catch { case _: Exception => null } // first run: table absent
-        val merged =
-          if (existing == null) incoming
-          else existing.join(incoming.select(keys.map(col): _*).distinct(),
-            keys, "left_anti").unionByName(incoming)
+          try Some(incoming.sparkSession.read.jdbc(url, table, props))
+          catch { case e: Exception if tableAbsent(e) => None }
+        val merged = existing.fold(incoming)(
+          _.join(incoming.select(keys.map(col): _*).distinct(),
+            keys, "left_anti").unionByName(incoming))
         // materialize BEFORE overwrite: the merged plan reads the very
         // table the overwrite drops first — persist+count pins the rows
         merged.persist()

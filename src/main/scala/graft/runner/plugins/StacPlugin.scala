@@ -24,7 +24,10 @@ object StacAssetDownloadPlugin extends StepPlugin {
     val out = Paths.get(ctx.argStr("out"))
     Files.createDirectories(out)
     val maxItems = ctx.argInt("max_items", 0)
-    val items = search(ctx)
+    val qbox = ctx.argOpt("bbox").map(b => bbox2d(b).getOrElse(
+      throw new IllegalArgumentException(
+        s"arg 'bbox' must be a list of 4 or 6 numbers, got '$b'")))
+    val items = search(ctx, qbox)
     val selected = if (maxItems > 0) items.take(maxItems) else items
     val assetKeys = ctx.argList("asset_keys").getOrElse(Nil)
     val timeoutMs = ctx.argInt("timeout_seconds", 180) * 1000
@@ -91,7 +94,8 @@ object StacAssetDownloadPlugin extends StepPlugin {
     * item filters stay source-side per page, so an unbounded catalog
     * never materializes in memory. A visited-URL set guards circular
     * next links. file:// pages chain identically (network-free tests). */
-  private def search(ctx: StepContext): List[Map[String, Any]] = {
+  private def search(ctx: StepContext,
+                     qbox: Option[Seq[Double]]): List[Map[String, Any]] = {
     val api = ctx.argStr("api_url")
     val pageSize = ctx.argInt("page_size", 0)
     val maxItems = ctx.argInt("max_items", 0)
@@ -128,7 +132,7 @@ object StacAssetDownloadPlugin extends StepPlugin {
         case _ => (Nil, None)
       }
       val matched = features.map(_.asInstanceOf[Map[String, Any]])
-        .filter(matches(_, ctx))
+        .filter(matches(_, ctx, qbox))
       acc ++= matched
       n += matched.size
       url = next
@@ -168,9 +172,21 @@ object StacAssetDownloadPlugin extends StepPlugin {
     } catch { case _: Exception => None }
   }
 
+  /** A bbox as 2D `[minx, miny, maxx, maxy]`: 4 numbers, or 6 for a 3D
+    * box `[minx, miny, minz, maxx, maxy, maxz]` (STAC/GeoJSON), whose z
+    * range is dropped. Anything else is None. */
+  private def bbox2d(v: Any): Option[Seq[Double]] = v match {
+    case l: Seq[_] if l.size == 4 || l.size == 6 =>
+      val d = l.flatMap(x => String.valueOf(x).toDoubleOption)
+      Option.when(d.size == l.size)(
+        if (d.size == 6) Seq(d(0), d(1), d(3), d(4)) else d)
+    case _ => None
+  }
+
   /** collection + bbox intersection + datetime range + query_json
     * property filters. */
-  private def matches(item: Map[String, Any], ctx: StepContext): Boolean = {
+  private def matches(item: Map[String, Any], ctx: StepContext,
+                      qbox: Option[Seq[Double]]): Boolean = {
     val props = item.getOrElse("properties", Map.empty)
       .asInstanceOf[Map[String, Any]]
     // `collection` selects the searched collection
@@ -179,20 +195,20 @@ object StacAssetDownloadPlugin extends StepPlugin {
     val collOk = ctx.argStrOpt("collection").forall { c =>
       item.get("collection").forall(_.toString == c)
     }
-    val bboxOk = ctx.argOpt("bbox") match {
-      case Some(q: Seq[_]) =>
-        val qb = q.map(_.toString.toDouble)
-        item.get("bbox") match {
-          case Some(b: Seq[_]) =>
-            val ib = b.map(_.toString.toDouble)
-            ib(0) <= qb(2) && ib(2) >= qb(0) && ib(1) <= qb(3) && ib(3) >= qb(1)
-          case _ => true
-        }
-      case _ => true
+    // an item without a well-formed bbox passes, like the other filters
+    val bboxOk = qbox.forall { qb =>
+      item.get("bbox").flatMap(bbox2d).forall { ib =>
+        ib(0) <= qb(2) && ib(2) >= qb(0) && ib(1) <= qb(3) && ib(3) >= qb(1)
+      }
     }
     val dtOk = ctx.argStrOpt("datetime") match {
       case Some(range) =>
-        val Array(start, end) = range.split("/", 2)
+        // a single instant `v` is the interval [v, v]: a date-only value
+        // covers its whole day
+        val (start, end) = range.split("/", 2) match {
+          case Array(s, e) => (s, e)
+          case Array(v) => (v, v)
+        }
         props.get("datetime").forall { d =>
           // Compare as Instants, not raw strings: a date-only end bound
           // must cover the whole day (STAC interval semantics — the

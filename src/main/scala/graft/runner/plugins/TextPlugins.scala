@@ -2,8 +2,8 @@ package graft.runner.plugins
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, Decontaminate, Dedup, Fingerprint,
-  Resample, Sample, Scrub, SequencePack, SpanDedup, Split,
+import graft.operators.{Components, Decontaminate, Dedup, Drift,
+  Fingerprint, Resample, Sample, Scrub, SequencePack, SpanDedup, Split,
   TermIndex, TextStats}
 import graft.runner._
 
@@ -11,10 +11,12 @@ import graft.runner._
   * §7 step 6: "all as ordinary plugins") — the same operator library
   * the query harness verifies, addressable from YAML pipelines.
   *
+  * The rule for every plugin under `runner/plugins`: each parquet
+  * dataset a step writes goes through [[graft.runner.Counted.write]].
   * A counter that counts (or filter-counts, or sums) a frame the step
-  * writes rides that write through [[graft.runner.Counted]]; a row
-  * count of a parquet input or output comes from its footers. Distinct
-  * counts and counts of other datasets keep their own job.
+  * writes rides that write; a row count of a parquet input or output
+  * comes from its footers ([[graft.runner.Counted.parquetRows]]).
+  * Distinct counts and counts of other datasets keep their own job.
   */
 
 /** `text_dedup` — corpus dedup step: exact dedup by md5(text), plus
@@ -86,6 +88,9 @@ object TextDedupPlugin extends StepPlugin {
   * Args: `input` (new corpus), `reference_input`, `output_path`;
   * optional `matches_path`, `id_col` (doc_id), `text_col` (text),
   * `ngram` (3), `min_jaccard` (0.5), `max_doc_freq` (unset).
+  *
+  * `n_in` comes from the input's parquet footers; `n_matched` counts
+  * the match table with its own job; `n_kept` is their difference.
   */
 object TextCrossDedupPlugin extends StepPlugin {
   val name = "text_cross_dedup"
@@ -97,18 +102,18 @@ object TextCrossDedupPlugin extends StepPlugin {
     val n = ctx.argInt("ngram", 3)
     val minJ = ctx.argDouble("min_jaccard", 0.5)
     val cap = ctx.argIntOpt("max_doc_freq")
-    val docs = ctx.spark.read.parquet(ctx.argStr("input"))
+    val in = ctx.argStr("input")
+    val docs = ctx.spark.read.parquet(in)
     val ref = ctx.spark.read.parquet(ctx.argStr("reference_input"))
     val matches = Dedup.crossCorpusBest(docs, ref, idCol, col(textCol),
       n = n, minJaccard = minJ, maxDocFreq = cap)
       .withColumnRenamed("doc_id", idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      ctx.argStrOpt("matches_path").foreach(p =>
-        matches.write.mode("overwrite").parquet(p))
-      docs.join(matches.select(idCol), Seq(idCol), "left_anti")
-        .write.mode("overwrite").parquet(out)
-      val nIn = docs.count()
+      ctx.argStrOpt("matches_path").foreach(Counted.write(matches, _))
+      Counted.write(docs.join(matches.select(idCol), Seq(idCol), "left_anti"),
+        out)
+      val nIn = Counted.parquetRows(ctx.spark, in)
       val nMatched = matches.count()
       StepResult(Map("output_path" -> out, "n_in" -> nIn,
         "n_matched" -> nMatched, "n_kept" -> (nIn - nMatched)))
@@ -126,6 +131,9 @@ object TextCrossDedupPlugin extends StepPlugin {
   * Args: `input` (new corpus), `reference_input`, `output_path`;
   * optional `oov_path`, `text_col` (text), `source_col` (source),
   * `top_k` (50).
+  *
+  * `n_terms` rides the write; the doubles `max_ratio` and
+  * `worst_oov_rate` re-read their outputs.
   */
 object TextDriftPlugin extends StepPlugin {
   val name = "text_drift"
@@ -137,24 +145,16 @@ object TextDriftPlugin extends StepPlugin {
     val topK = ctx.argInt("top_k", 50)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val ref = ctx.spark.read.parquet(ctx.argStr("reference_input"))
-    graft.operators.Drift.termDrift(docs, ref, col(textCol), topK)
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    val drifted = ctx.spark.read.parquet(out)
-    val maxRatio = drifted.agg(coalesce(max(col("ratio")), lit(0.0)))
-      .head().getDouble(0)
-    val fields = scala.collection.mutable.Map[String, Any](
-      "output_path" -> out, "n_terms" -> drifted.count(),
-      "max_ratio" -> maxRatio)
-    ctx.argStrOpt("oov_path").foreach { p =>
-      graft.operators.Drift.oovRate(docs, ref, col(textCol), col(srcCol))
-        .coalesce(1).write.mode("overwrite").parquet(p)
-      val oov = ctx.spark.read.parquet(p)
-      fields += ("oov_path" -> p)
-      fields += ("worst_oov_rate" ->
-        oov.agg(coalesce(max(col("oov_rate")), lit(0.0))).head()
-          .getDouble(0))
+    def maxOf(path: String, c: String) = ctx.spark.read.parquet(path)
+      .agg(coalesce(max(col(c)), lit(0.0))).head().getDouble(0)
+    val drift = Counted.output(
+      Drift.termDrift(docs, ref, col(textCol), topK).coalesce(1), out,
+      "n_terms" -> Counted.rows) ++ Map("max_ratio" -> maxOf(out, "ratio"))
+    ctx.argStrOpt("oov_path").fold(drift) { p =>
+      Counted.write(
+        Drift.oovRate(docs, ref, col(textCol), col(srcCol)).coalesce(1), p)
+      drift ++ Map("oov_path" -> p, "worst_oov_rate" -> maxOf(p, "oov_rate"))
     }
-    StepResult(fields.toMap)
   }
 }
 
@@ -177,10 +177,9 @@ object TextQualityPlugin extends StepPlugin {
 
     val verdicts = graft.queries.TextQueries.qualityVerdict(
       ctx.spark.read.parquet(in), idCol, textCol, minTok, maxTok)
-    val c = Counted.write(verdicts, out,
+    Counted.output(verdicts, out,
       "n_keep" -> sum(when(col("verdict") === "keep", 1)),
       "n_total" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -201,10 +200,9 @@ object TextFingerprintPlugin extends StepPlugin {
     val n = ctx.argInt("ngram", 3)
     val w = ctx.argInt("window", 4)
 
-    val c = Counted.write(Fingerprint.winnowFingerprints(
+    Counted.output(Fingerprint.winnowFingerprints(
         ctx.spark.read.parquet(in), idCol, col(textCol), n = n, w = w),
       out, "n_fingerprints" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -235,8 +233,7 @@ object TextSpanAuditPlugin extends StepPlugin {
     val spansPath = s"$outDir/dup_spans.parquet"
     val coveragePath = s"$outDir/dup_coverage.parquet"
     val overlapPath = s"$outDir/source_overlap.parquet"
-    SpanDedup.dupSpans(docs, idCol, col(textCol), n)
-      .write.mode("overwrite").parquet(spansPath)
+    Counted.write(SpanDedup.dupSpans(docs, idCol, col(textCol), n), spansPath)
     // flag on the merged-interval coverage, not raw position counts:
     // overlapping spans would overstate how much text is copied
     val coverage = Counted.write(
@@ -282,10 +279,9 @@ object TextResamplePlugin extends StepPlugin {
     val defW = ctx.argDouble("default_weight", 0.0)
 
     val docs = ctx.spark.read.parquet(in)
-    val c = Counted.write(Resample.toMixture(docs, col(idCol), col(stCol),
-      weights, budget, defW), out, "n_out" -> Counted.rows)
-    StepResult(Map("output_path" -> out,
-      "n_in" -> Counted.parquetRows(ctx.spark, in), "n_out" -> c("n_out")))
+    Counted.output(Resample.toMixture(docs, col(idCol), col(stCol),
+      weights, budget, defW), out, "n_out" -> Counted.rows) ++
+      Map("n_in" -> Counted.parquetRows(ctx.spark, in))
   }
 }
 
@@ -311,12 +307,11 @@ object TextScrubPlugin extends StepPlugin {
 
     val docs = ctx.spark.read.parquet(in)
     val scrubbed = Scrub.scrub(docs, col(idCol), col(textCol))
-    val c = Counted.write(docs.drop(textCol)
+    Counted.output(docs.drop(textCol)
       .join(scrubbed.withColumnRenamed("doc_id", idCol)
         .withColumnRenamed("clean", textCol), Seq(idCol)),
       out, "n_docs" -> Counted.rows, "n_emails" -> sum("n_emails"),
       "n_ips" -> sum("n_ips"), "n_phones" -> sum("n_phones"))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -328,6 +323,9 @@ object TextScrubPlugin extends StepPlugin {
   * Args: `input`, `output_dir`, optional `id_col` (doc_id), `text_col`
   * (text), `top_k` (default 5), `ngram` (default 3), `max_postings`
   * (default 10).
+  *
+  * `n_terms` rides the index write; `n_docs` comes from the input's
+  * parquet footers.
   */
 object TextTermIndexPlugin extends StepPlugin {
   val name = "text_term_index"
@@ -344,16 +342,13 @@ object TextTermIndexPlugin extends StepPlugin {
     val docs = ctx.spark.read.parquet(in)
     val topkPath = s"$outDir/term_topk.parquet"
     val indexPath = s"$outDir/inverted_index.parquet"
-    TermIndex.tfidfTopK(docs, idCol, col(textCol), k)
-      .write.mode("overwrite").parquet(topkPath)
+    Counted.write(TermIndex.tfidfTopK(docs, idCol, col(textCol), k), topkPath)
     val c = Counted.write(
       TermIndex.invertedIndex(docs, idCol, col(textCol), n, maxPost),
       indexPath, "n_terms" -> Counted.rows)
-    StepResult(Map(
-      "term_topk_path" -> topkPath,
+    StepResult(Map("term_topk_path" -> topkPath,
       "inverted_index_path" -> indexPath,
-      "n_terms" -> c("n_terms"),
-      "n_docs" -> docs.count()))
+      "n_docs" -> Counted.parquetRows(ctx.spark, in)) ++ c)
   }
 }
 
@@ -386,8 +381,7 @@ object TextDecontaminatePlugin extends StepPlugin {
     // computing them costs the full corpus shingle pass: persist
     flags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      ctx.argStrOpt("flags_path").foreach(p =>
-        flags.write.mode("overwrite").parquet(p))
+      ctx.argStrOpt("flags_path").foreach(Counted.write(flags, _))
       val kept = Counted.write(
         docs.join(flags.filter(col("keep")).select(col(idCol)),
           Seq(idCol)),
@@ -419,19 +413,18 @@ object TextContaminationScorePlugin extends StepPlugin {
     val n = ctx.argInt("ngram", 8)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val bench = ctx.spark.read.parquet(ctx.argStr("benchmark_input"))
-    val c = Counted.write(
+    val scored = Counted.output(
       SpanDedup.contaminationScore(docs, bench, idCol, col(textCol), n),
       out, "n_scored" -> Counted.rows,
       "n_flagged" -> sum(when(col("contamination") > 0, 1)))
-    val extra = ctx.argDoubleOpt("max_contamination").map { thr =>
+    ctx.argDoubleOpt("max_contamination").fold(scored) { thr =>
       val cleanPath = ctx.argStr("clean_path")
       val scores = ctx.spark.read.parquet(out)
-      Map[String, Any]("clean_path" -> cleanPath) ++ Counted.write(
+      scored ++ Map("clean_path" -> cleanPath) ++ Counted.write(
         docs.join(scores.filter(col("contamination") <= thr)
           .select(col(idCol)), Seq(idCol)),
         cleanPath, "n_clean" -> Counted.rows)
-    }.getOrElse(Map.empty[String, Any])
-    StepResult(Map("output_path" -> out) ++ c ++ extra)
+    }
   }
 }
 
@@ -463,13 +456,12 @@ object TextPackPlugin extends StepPlugin {
     val seqLen = ctx.argInt("seq_len", 2048)
     val buckets = ctx.argInt("buckets", 64)
     val docs = ctx.spark.read.parquet(in)
-    val c = Counted.write(SequencePack.pack(docs, id, col(srcCol),
+    Counted.output(SequencePack.pack(docs, id, col(srcCol),
         size(TextStats.tokens(col(textCol))), seqLen, buckets),
-      out, "n_docs" -> Counted.rows)
-    // a distinct count cannot be observed: it keeps its re-read
-    StepResult(Map("output_path" -> out, "n_docs" -> c("n_docs"),
-      "n_packs" -> ctx.spark.read.parquet(out)
-        .select("source", "pack_id").distinct().count()))
+      out, "n_docs" -> Counted.rows) ++
+      // a distinct count cannot be observed: it keeps its re-read
+      Map("n_packs" -> ctx.spark.read.parquet(out)
+        .select("source", "pack_id").distinct().count())
   }
 }
 
@@ -499,10 +491,9 @@ object TextCosinePairsPlugin extends StepPlugin {
     val occurrences = Fingerprint
       .explodedShingles(docs, idCol, col(textCol), n = n)
       .select(col(idCol).as("id"), col("sh").as("term"))
-    val c = Counted.write(
+    Counted.output(
       TermIndex.cosinePairs(occurrences, minCosine = minCos, maxDf = maxDf),
       out, "n_pairs" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -520,6 +511,9 @@ object TextCosinePairsPlugin extends StepPlugin {
   * `ngram` (default 3), `min_jaccard` (clustering threshold, default
   * 0.5), `weights` ("name=w,name=w,…" in priority order; default
   * "train=0.8,val=0.1,test=0.1").
+  *
+  * `n_docs` and `n_<split>` ride the write; a split with no rows gets
+  * no field, and null ids (a null split) count as `n_null`.
   */
 object TextLeakageSplitPlugin extends StepPlugin {
   val name = "text_leakage_split"
@@ -543,16 +537,16 @@ object TextLeakageSplitPlugin extends StepPlugin {
       n = n, minJaccard = minJ)
     val comp = Components.connected(pairs, "doc_a", "doc_b")
       .select(col("id").as(idCol), col("component"))
-    Split.assignByRepresentative(
+    val perSplit = (weights.map { case (k, _) =>
+        s"n_$k" -> (col("split") === k) } :+
+      ("n_null" -> col("split").isNull)).distinctBy(_._1)
+      .map { case (name, in) => name -> sum(when(in, 1)) }
+    val c = Counted.write(Split.assignByRepresentative(
         docs.join(comp, Seq(idCol), "left"),
         col(idCol), col("component"), weights)
-      .drop("component")
-      .write.mode("overwrite").parquet(out)
-    val res = ctx.spark.read.parquet(out)
-    val perSplit = res.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    StepResult(Map("output_path" -> out, "n_docs" -> res.count()) ++
-      perSplit.map { case (k, v) => s"n_$k" -> (v: Any) })
+      .drop("component"), out, ("n_docs" -> Counted.rows) +: perSplit: _*)
+    StepResult(Map("output_path" -> out) ++
+      c.filter { case (k, v) => k == "n_docs" || v > 0 })
   }
 }
 
@@ -578,12 +572,11 @@ object TextClusterWeightsPlugin extends StepPlugin {
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
     val pairs = Dedup.ngramJaccardPairs(docs, idCol, col(textCol),
       n = n, minJaccard = minJ)
-    val c = Counted.write(
+    Counted.output(
       Components.memberWeights(docs, idCol, pairs, "doc_a", "doc_b")
         .withColumnRenamed("id", idCol),
       out, "n_docs" -> Counted.rows,
       "n_clustered" -> sum(when(col("cluster_size") > 1, 1)))
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -606,10 +599,9 @@ object TextTopicPairsPlugin extends StepPlugin {
     val k = ctx.argInt("top_k", 3)
     val minSupport = ctx.argLong("min_support", 5L)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
-    val c = Counted.write(
+    Counted.output(
       TermIndex.topicCooccurrence(docs, idCol, col(textCol), k, minSupport),
       out, "n_pairs" -> Counted.rows)
-    StepResult(Map("output_path" -> out) ++ c)
   }
 }
 
@@ -631,10 +623,8 @@ object TextGroupSamplePlugin extends StepPlugin {
     val grpCol = ctx.argStr("group_col", "source")
     val k = ctx.argInt("k", 20)
     val docs = ctx.spark.read.parquet(ctx.argStr("input"))
-    val c = Counted.write(Sample.fixedPerGroup(docs, col(idCol), col(grpCol), k),
-      out, "n_sampled" -> Counted.rows)
-    StepResult(Map("output_path" -> out, "n_sampled" -> c("n_sampled"),
-      "n_groups" -> ctx.spark.read.parquet(out)
-        .select(grpCol).distinct().count()))
+    Counted.output(Sample.fixedPerGroup(docs, col(idCol), col(grpCol), k),
+      out, "n_sampled" -> Counted.rows) ++ Map("n_groups" ->
+      ctx.spark.read.parquet(out).select(grpCol).distinct().count())
   }
 }

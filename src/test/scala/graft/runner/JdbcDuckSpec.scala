@@ -64,4 +64,25 @@ class JdbcDuckSpec extends SparkSpecBase {
     assert(JdbcWritePlugin.writeDf(empty, url, "t", "overwrite") == 0L)
     assert(readBack(db, "t").isEmpty)
   }
+
+  test("upsert fails, and keeps the table's rows, when the existing " +
+      "table cannot be read") {
+    val db = tmpDb()
+    val url = s"jdbc:duckdb:$db"
+    graft.sources.DuckGate.withDuck {
+      val con = java.sql.DriverManager.getConnection(url)
+      try {
+        val st = con.createStatement()
+        // Spark's JDBC reader has no type for a DuckDB MAP column
+        st.execute("CREATE TABLE t (id BIGINT, name VARCHAR, " +
+          "score DOUBLE, tags MAP(VARCHAR, INTEGER))")
+        st.execute("INSERT INTO t VALUES (1, 'alpha', 10.0, MAP {'a': 1}), " +
+          "(2, 'beta', 20.0, MAP {'b': 2})")
+      } finally con.close()
+    }
+    val incoming = Seq((2L, "beta", 99.0)).toDF("id", "name", "score")
+    intercept[Exception](
+      JdbcWritePlugin.writeDf(incoming, url, "t", "upsert", Seq("id")))
+    assert(readBack(db, "t") == Seq((1L, "alpha", 10.0), (2L, "beta", 20.0)))
+  }
 }

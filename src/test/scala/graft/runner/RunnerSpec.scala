@@ -670,7 +670,8 @@ class RunnerSpec extends SparkSpecBase {
          |      path: "{env.basedir}/facts/pointer.txt"
          |      content: "{vector_facts.vector_facts_json}"
          |""".stripMargin)
-    runner(root).runFile(p)
+    val facts = runner(root).runFile(p).results.head.fields
+    assert(facts("feature_count") == 2L, facts)
     val pointer = Files.readString(root.resolve("facts/pointer.txt"))
     assert(pointer.endsWith("facts/facts.json"))
     assert(Files.readString(Paths.get(pointer)).contains("feature_count"))

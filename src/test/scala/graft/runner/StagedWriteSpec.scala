@@ -98,6 +98,72 @@ class StagedWriteSpec extends SparkSpecBase {
     assert(names(root.resolve("staged")) == Set("s1_B04.tif"))
   }
 
+  /** A catalog of items `(id, datetime, bbox JSON or "")`, each with one
+    * local `data` asset. */
+  private def stacItems(root: Path, items: (String, String, String)*): Path = {
+    val data = Files.writeString(root.resolve("data.bin"), "d")
+    val fs = items.map { case (id, dt, bbox) =>
+      val b = if (bbox.isEmpty) "" else s""""bbox": $bbox, """
+      s"""{"id": "$id", $b"properties": {"datetime": "$dt"},
+         |  "assets": {"data": {"href": "${data.toUri}"}}}""".stripMargin
+    }
+    val page = root.resolve("items.json")
+    Files.writeString(page, s"""{"features": [${fs.mkString(", ")}]}""")
+    page
+  }
+
+  private def stacRun(root: Path, page: Path,
+                      filter: String): Map[String, Any] =
+    run(root, s"""steps:
+      |  - plugin: stac_asset_download
+      |    args:
+      |      api_url: "${page.toUri}"
+      |      $filter
+      |      out: "{env.basedir}/staged"
+      |""".stripMargin)
+
+  test("a single-instant STAC datetime selects the items of that day") {
+    val root = tmpDir()
+    val page = stacItems(root, ("before", "2024-05-31T23:59:59Z", ""),
+      ("noon", "2024-06-01T12:00:00Z", ""),
+      ("late", "2024-06-01T23:59:59Z", ""),
+      ("after", "2024-06-02T00:00:00Z", ""))
+    assert(stacRun(root, page, "datetime: 2024-06-01")("n_items") == 2)
+    assert(names(root.resolve("staged")) ==
+      Set("noon_data.bin", "late_data.bin"))
+    val exact = stacRun(tmpDir(), stacItems(tmpDir(),
+      ("noon", "2024-06-01T12:00:00Z", ""),
+      ("later", "2024-06-01T12:00:01Z", "")),
+      "datetime: \"2024-06-01T12:00:00Z\"")
+    assert(exact("n_items") == 1, exact.toString)
+  }
+
+  test("a 3D item bbox is filtered on its x/y extent, not its z") {
+    val root = tmpDir()
+    // [minx, miny, minz, maxx, maxy, maxz]: a 2D reading takes minz = 1
+    // for maxx and misses the query box inside the item's x/y extent
+    val page = stacItems(root, ("inside", "2024-06-01", "[0, 0, 1, 10, 10, 2]"),
+      ("outside", "2024-06-01", "[20, 20, 0, 30, 30, 1]"),
+      ("flat", "2024-06-01", "[4, 4, 7, 7]"))
+    assert(stacRun(root, page, "bbox: [5, 5, 6, 6]")("n_items") == 2)
+    assert(names(root.resolve("staged")) ==
+      Set("inside_data.bin", "flat_data.bin"))
+  }
+
+  test("a query bbox that is not a list of 4 or 6 numbers fails naming " +
+    "bbox") {
+    Seq("bbox: \"0,0,10,10\"", "bbox: [0, 0, 10]", "bbox: [0, 0, x, 10]")
+      .foreach { arg =>
+        val root = tmpDir()
+        val page = stacItems(root, ("s1", "2024-06-01", "[0, 0, 10, 10]"))
+        val e = intercept[Exception](stacRun(root, page, arg))
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains("'bbox'")), s"$arg: $msgs")
+        assert(!Files.exists(root.resolve("staged/s1_data.bin")))
+      }
+  }
+
   test("a tree-walk fetch that throws after a partial write leaves no " +
     "target; the next run fetches it") {
     val lister = new RemoteTreeWalker.Lister {
@@ -259,6 +325,29 @@ class StagedWriteSpec extends SparkSpecBase {
       handRolled.flatMap(_.findAllMatchIn(src)).map { m =>
         s"$f:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
       }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no plugin writes parquet but through Counted.write, and none " +
+    "recounts a parquet re-read") {
+    val args = """(?:[^()]|\([^()]*\))*"""
+    val rawWrite = raw"""\.write\b(?:\s*\.\w+\($args\))*\s*\.parquet\(""".r
+    val reCount =
+      raw"""read\.parquet\($args\)((?:\s*\.\w+\($args\))*?)\s*\.count\(\)""".r
+    // DuckDB bulk-loads a parquet staging copy of the rows, not an output
+    val allowed = Set("JdbcPlugins.scala" ->
+      "df.write.mode(\"overwrite\").parquet(tmp.toString)")
+    val dir = Paths.get("src/main/scala/graft/runner/plugins")
+    val hits = names(dir).toSeq.sorted.flatMap { f =>
+      val src = Files.readString(dir.resolve(f))
+      val lines = src.split("\n", -1)
+      val starts = rawWrite.findAllMatchIn(src).map(_.start) ++
+        reCount.findAllMatchIn(src)
+          .filterNot(_.group(1).contains(".distinct()")).map(_.start)
+      starts.map(i => src.take(i).count(_ == '\n'))
+        .filterNot(l => allowed(f -> lines(l).trim))
+        .map(l => s"$f:${l + 1}: ${lines(l).trim}")
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }

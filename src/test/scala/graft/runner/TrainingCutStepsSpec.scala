@@ -1,19 +1,8 @@
 package graft.runner
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpecBase
-import graft.runner.plugins.DefaultRegistry
-import graft.spec.SysContext
 
-/** examples/training_cut.yml at sf0.001, run once with every plugin
-  * wrapped the way perfbench's traced run wraps them, so each Spark job
-  * is tagged with the step that submitted it.
+/** examples/training_cut.yml at sf0.001, run once through [[TaggedRun]].
   *
   * Two contracts ride on that one run:
   *  - every `StepResult` field of the ten steps, which interpolation,
@@ -24,42 +13,10 @@ import graft.spec.SysContext
 class TrainingCutStepsSpec extends SparkSpecBase {
   import TrainingCutStepsSpec._
 
-  private lazy val run: (Path, Seq[Map[String, String]], Seq[(String, Int)]) = {
-    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(StepKey)))
-          .foreach(k => jobs.computeIfAbsent(k, _ => new AtomicInteger())
-            .incrementAndGet())
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val work = Files.createTempDirectory("graft_cut_steps")
-    val seq = new AtomicInteger()
-    val defaults = DefaultRegistry()
-    val registry = new Registry(Plugins.map(n => new Tagged(defaults.resolve(n), seq)))
-    val res = try {
-      val r = new PipelineRunner(registry, Map("workdir" -> work.toString),
-        () => spark, assetRoots = Seq(Paths.get("examples").toAbsolutePath),
-        sysContext = Some(SysContext(
-          java.time.LocalDateTime.of(2026, 8, 12, 10, 0, 0), "test01")))
-        .runFile(Paths.get("examples/training_cut.yml").toAbsolutePath)
-      TestListenerBus.drain(sc)
-      r
-    } finally sc.removeSparkListener(listener)
-    val rendered = res.results.map(r =>
-      r.fields.map { case (k, v) => k -> render(v, work) } +
-        ("skipped" -> r.skipped.toString))
-    val perStep = (0 until seq.get()).map { i =>
-      val k = jobs.keySet().toArray.map(_.toString).find(_.startsWith(s"$i:"))
-      (k.map(_.drop(s"$i:".length)).getOrElse("?"),
-        k.map(jobs.get(_).get()).getOrElse(0))
-    }
-    (work, rendered, perStep)
-  }
+  private lazy val run = TaggedRun(spark, "training_cut.yml")
 
   test("every StepResult field of the ten training_cut steps is pinned") {
-    val (_, got, _) = run
+    val got = run.fields
     assert(got.size == Expected.size)
     got.zip(Expected).zipWithIndex.foreach { case ((g, e), i) =>
       assert(g == e, s"step $i: got $g, expected $e")
@@ -67,41 +24,15 @@ class TrainingCutStepsSpec extends SparkSpecBase {
   }
 
   test("each training_cut step submits its pinned number of Spark jobs") {
-    val (_, _, got) = run
+    val got = run.jobs
     assert(got == ExpectedJobs, s"jobs per step: got $got")
   }
 }
 
 object TrainingCutStepsSpec {
-  private val StepKey = "graft.test.step"
-  private val Plugins = Seq("text_scrub", "text_dedup", "sql_transform",
-    "text_decontaminate", "text_resample", "text_pack", "corpus_shard",
-    "shard_manifest")
-
-  /** Tags every job the wrapped plugin submits with its invocation index
-    * and name; SQL executions carry the local property into their
-    * broadcast and stage threads. */
-  private final class Tagged(inner: StepPlugin, seq: AtomicInteger)
-      extends StepPlugin {
-    def name: String = inner.name
-    def run(ctx: StepContext): StepResult = {
-      val sc = ctx.spark.sparkContext
-      val prev = sc.getLocalProperty(StepKey)
-      sc.setLocalProperty(StepKey, s"${seq.getAndIncrement()}:${inner.name}")
-      try inner.run(ctx) finally sc.setLocalProperty(StepKey, prev)
-    }
-  }
-
-  /** A field's value with its runtime type, the workdir shown as
-    * `{workdir}`: `Long(5000)` and `Integer(5000)` are different
-    * contracts to a reader that casts. */
-  private def render(v: Any, work: Path): String =
-    s"${v.getClass.getSimpleName}(${v.toString.replace(work.toString, "{workdir}")})"
+  import TaggedRun.step
 
   private def out(f: String) = s"String({workdir}/training_cut/260812/$f)"
-
-  private def step(fields: (String, String)*): Map[String, String] =
-    fields.toMap + ("skipped" -> "false")
 
   /** Recorded at commit 87e38b6, before any counter rode the write. */
   val Expected: Seq[Map[String, String]] = Seq(
