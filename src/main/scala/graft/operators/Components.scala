@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the step a real
@@ -34,15 +35,16 @@ object Components {
     *   kills the whole job; reliable checkpoints survive it. Local[?]
     *   and tests can leave it None (no executor to lose).
     * @param localThreshold edge-count cutoff for the driver-local
-    *   fast path: at or below it the component fixpoint is solved with
-    *   in-memory union-find instead of the iterative join loop. This is
-    *   NOT a correctness shortcut but the right hybrid at every scale —
-    *   after strong-threshold pair pruning the duplicate graph is
-    *   orders of magnitude smaller than the corpus, and when it fits
-    *   comfortably on the driver (200k edges ≈ a few MB) the loop's
-    *   per-round cluster sync is pure overhead. Above the threshold the
-    *   distributed loop runs unchanged (the 100 TB path). Set 0 to
-    *   force the distributed loop.
+    *   fast path ([[LocalGraph]], probed on the symmetric adjacency at
+    *   two rows per edge): at or below it the component fixpoint is
+    *   solved with in-memory union-find instead of the iterative join
+    *   loop. This is NOT a correctness shortcut but the right hybrid
+    *   at every scale — after strong-threshold pair pruning the
+    *   duplicate graph is orders of magnitude smaller than the corpus,
+    *   and when it fits comfortably on the driver (200k edges ≈ a few
+    *   MB) the loop's per-round cluster sync is pure overhead. Above
+    *   the threshold the distributed loop runs unchanged (the 100 TB
+    *   path). Set 0 to force the distributed loop.
     * @return (id, component) — component = min id reachable.
     * @throws IllegalStateException if the label propagation has not
     *   reached its fixpoint after `maxIters` rounds (components with
@@ -54,19 +56,16 @@ object Components {
     checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     // symmetric adjacency in ONE scan of the (possibly expensive) edge
     // plan: explode each edge into both orientations — a union of two
-    // selects would evaluate the pair-generation plan twice
-    val sym = edges.select(explode(array(
+    // selects would evaluate the pair-generation plan twice. The probe
+    // caches it (needed by every path) and sizes the graph for the
+    // local/distributed choice.
+    val both = edges.select(explode(array(
         struct(col(aCol).as("u"), col(bCol).as("v")),
         struct(col(bCol).as("u"), col(aCol).as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one cheap job: materializes the persisted adjacency (needed by
-    // every path) and sizes the graph for the local/distributed choice
-    val symCount = sym.count()
-    if (symCount <= 2 * localThreshold) {
-      val out = localUnionFind(edges.sparkSession, sym)
-      sym.unpersist()
-      return out
+    val (sym, symCount) = LocalGraph.probe(both, 2 * localThreshold) match {
+      case Left(rows) => return localUnionFind(both, rows)
+      case Right(big) => big
     }
     // Partitions track data (the repo-wide shuffle doctrine, applied
     // with the measured count): after strong-threshold pair pruning the
@@ -156,44 +155,40 @@ object Components {
     labels.select(col("id"), col("comp").as("component"))
   }
 
-  /** Driver-local union-find over a collected (bounded — see
-    * `localThreshold`) symmetric edge list: path-halving find, then a
-    * second pass assigns every vertex its component's minimum id —
-    * identical semantics to the distributed fixpoint, minus its
-    * per-round cluster syncs. */
-  private def localUnionFind(spark: org.apache.spark.sql.SparkSession,
-                             sym: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val idType = sym.schema("u").dataType
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
+  /** Driver-local union-find over the collected (bounded — see
+    * `localThreshold`) symmetric edge rows, on the dense ids of
+    * [[LocalGraph.dense]]: path-halving find, then every vertex gets
+    * its component's minimum id — identical semantics to the
+    * distributed fixpoint, minus its per-round cluster syncs. */
+  private def localUnionFind(e: DataFrame, rows: Array[Row]): DataFrame = {
+    val g = LocalGraph.dense(rows)
+    val n = g.ids.length
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.get(r) != r) {
-        val g = parent.get(parent.get(r)) // path halving
-        parent.put(r, g)
-        r = g
+      while (parent(r) != r) {
+        parent(r) = parent(parent(r)) // path halving
+        r = parent(r)
       }
       r
     }
-    sym.collect().foreach { row =>
-      val (u, v) = (row.get(0), row.get(1))
-      parent.putIfAbsent(u, u)
-      parent.putIfAbsent(v, v)
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) parent.put(ru, rv)
+    var j = 0
+    while (j < g.m) {
+      val (ru, rv) = (find(g.ea(j)), find(g.eb(j)))
+      if (ru != rv) parent(ru) = rv
+      j += 1
     }
-    def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    val minOf = new java.util.HashMap[Any, Any]()
-    parent.keySet().forEach { id =>
-      val r = find(id)
-      val m = minOf.get(r)
-      if (m == null || lt(id, m)) minOf.put(r, id)
+    def lt(a: Int, b: Int): Boolean =
+      g.ids(a).asInstanceOf[Comparable[Any]].compareTo(g.ids(b)) < 0
+    val minOf = Array.fill(n)(-1)
+    (0 until n).foreach { v =>
+      val r = find(v)
+      if (minOf(r) < 0 || lt(v, minOf(r))) minOf(r) = v
     }
-    val rows = new java.util.ArrayList[Row](parent.size())
-    parent.keySet().forEach(id => rows.add(Row(id, minOf.get(find(id)))))
-    spark.createDataFrame(rows, StructType(Seq(
+    val out = new java.util.ArrayList[Row](n)
+    (0 until n).foreach(v => out.add(Row(g.ids(v), g.ids(minOf(find(v))))))
+    val idType = e.schema("u").dataType
+    e.sparkSession.createDataFrame(out, StructType(Seq(
       StructField("id", idType), StructField("component", idType))))
   }
 

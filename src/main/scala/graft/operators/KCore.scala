@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -37,19 +37,22 @@ import org.apache.spark.storage.StorageLevel
   */
 object KCore {
 
-  /** @param edges canonical undirected edges (a, b), a < b, deduped
+  /** @param edges canonical undirected edges (a, b), a < b; a repeated
+    *         pair counts once (the driver-local ingest drops repeats,
+    *         the distributed loop's first pin is a `.distinct()`)
     * @param localThreshold edge count at or below which the whole peel
-    *         runs DRIVER-LOCAL on the collected edge list (the
-    *         [[Components.connected]] `localThreshold` contract): 2M
-    *         edges ≈ 32 MB of longs — broadcast-threshold scale, and
-    *         below it each distributed round's count action + joins
-    *         are pure job-scheduling overhead against an in-memory
-    *         peel that is O(rounds · m) array passes. Identical
-    *         simultaneous-peel semantics, bit-identical output
-    *         (KCoreSpec pins local == distributed). Above the
-    *         threshold — and always under `checkpointDir` (the cluster
-    *         contract) — the distributed loop runs unchanged: the
-    *         100 TB path. 0 forces distributed.
+    *         runs DRIVER-LOCAL on the collected edge list
+    *         ([[LocalGraph]]): 2M edges ≈ 32 MB of longs —
+    *         broadcast-threshold scale, and below it each distributed
+    *         round's count action + joins are pure job-scheduling
+    *         overhead against an in-memory peel that is O(rounds · m)
+    *         array passes. Identical simultaneous-peel semantics,
+    *         bit-identical output (KCoreSpec pins local ==
+    *         distributed). The probe counts the raw pairs, an upper
+    *         bound of the edge count. Above the threshold — and always
+    *         under `checkpointDir` (the cluster contract) — the
+    *         distributed loop runs unchanged: the 100 TB path. 0 forces
+    *         distributed.
     * @param spillDir DISK-BOUNDED mode (the sf100 box-limit answer):
     *         when set, every pinned generation is written as
     *         zstd parquet under this directory and read back — lineage
@@ -78,53 +81,20 @@ object KCore {
   def peel(edges: DataFrame, k: Int, rounds: Int,
            checkpointDir: Option[String] = None,
            localThreshold: Long = 2000000L,
-           preDeduped: Boolean = true,
-           edgeCountHint: Option[Long] = None,
            spillDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1)
     checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    // preDeduped=false accepts a raw (possibly duplicated) pair
-    // stream and dedups INTERNALLY — primitive-set membership during
-    // the driver-local ingest (skips the caller's whole distinct
-    // exchange; the [[Triangles.perNode]] contract), a `.distinct()`
-    // feeding the loop's first pin on the distributed path; the size
-    // probe / hint bounds the true edge count from above.
-    // edgeCountHint (the [[Triangles.perNode]] contract): a
-    // caller-known upper bound makes the local/distributed choice
-    // WITHOUT materializing the pair stream — the small path is one
-    // collect job, the big path never caches raw pairs.
     val edgeCols = edges.select("a", "b")
-    edgeCountHint match {
-      case Some(n) if checkpointDir.isEmpty && spillDir.isEmpty &&
-          localThreshold > 0 && n <= localThreshold =>
-        // the hint bounds the RAW row count (duplicates included — the
-        // Triangles.perNode contract) and is ENFORCED: collect capped
-        // at n+1 rows; overflow falls through to the distributed loop
-        // below instead of an unbounded driver collect
-        val cap = math.min(n, Int.MaxValue - 2L).toInt
-        val head = edgeCols.limit(cap + 1).collect()
-        if (head.length <= cap)
-          return localPeel(edgeCols, k, rounds, preDeduped,
-            collected = Some(head))
-        System.err.println(s"KCore.peel: edgeCountHint $n exceeded by " +
-          s"the raw pair stream — distributed peel")
-      case _ => ()
-    }
     // size the graph off ONE materialized cache of the (possibly
     // expensive) edge plan; above the threshold the cache is handed to
-    // the loop's first pin and released with the other generations.
-    // A big hint skips the probe cache entirely.
+    // the loop's first pin and released with the other generations
     val sized: Option[DataFrame] =
-      if (checkpointDir.isEmpty && spillDir.isEmpty && localThreshold > 0 &&
-          edgeCountHint.isEmpty) {
-        val e0 = edgeCols.persist(StorageLevel.MEMORY_AND_DISK)
-        if (e0.count() <= localThreshold) {
-          val out = localPeel(e0, k, rounds, preDeduped)
-          e0.unpersist()
-          return out
+      if (checkpointDir.isEmpty && spillDir.isEmpty && localThreshold > 0)
+        LocalGraph.probe(edgeCols, localThreshold) match {
+          case Left(rows) => return localPeel(edgeCols, rows, k, rounds)
+          case Right((e0, _)) => Some(e0)
         }
-        Some(e0)
-      } else None
+      else None
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -179,10 +149,7 @@ object KCore {
       else if (checkpointDir.isDefined) frames.foreach(_.unpersist())
       else retired = frames.toList ::: retired
 
-    val canonical =
-      if (preDeduped) sized.getOrElse(edgeCols)
-      else sized.getOrElse(edgeCols).distinct()
-    var cur = pin(canonical)
+    var cur = pin(sized.getOrElse(edgeCols).distinct())
     sized.foreach(retire(_))
     // Degrees are MAINTAINED INCREMENTALLY across rounds, not
     // re-aggregated from the full surviving edge set each round (which
@@ -292,45 +259,13 @@ object KCore {
     * a peeled node's degree reaches exactly 0 and the survivors carry
     * the surviving subgraph's degrees — the distributed loop's
     * invariant, minus its per-round job. */
-  private def localPeel(e: DataFrame, k: Int, rounds: Int,
-                        preDeduped: Boolean,
-                        collected: Option[Array[
-                          org.apache.spark.sql.Row]] = None): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def localPeel(e: DataFrame, rows: Array[Row], k: Int,
+                        rounds: Int): DataFrame = {
     import org.apache.spark.sql.types.{BooleanType, LongType, StructField,
       StructType}
-    val spark = e.sparkSession
-    val idType = e.schema("a").dataType
-    val rows = collected.getOrElse(e.collect())
-    val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Any]
-    def ix(x: Any): Int = {
-      var i = idx.get(x)
-      if (i == null) { i = ids.length; idx.put(x, i); ids += x }
-      i
-    }
-    val ea = new Array[Int](rows.length)
-    val eb = new Array[Int](rows.length)
-    // !preDeduped: dedupe during ingest via the primitive
-    // [[PackedPairSet]] (dense ids pack into one Long ≥ 1) — the
-    // peel's degree invariant needs each undirected edge once
-    val seen: PackedPairSet =
-      if (preDeduped) null else new PackedPairSet(rows.length)
-    var m = 0
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      val u = ix(r.get(0)); val v = ix(r.get(1))
-      if (seen == null ||
-          seen.add((math.min(u, v).toLong << 32) | math.max(u, v).toLong)) {
-        ea(m) = u; eb(m) = v; m += 1
-      }
-      i += 1
-    }
+    val LocalGraph.Dense(ids, ea, eb, m0, deg) = LocalGraph.dense(rows)
     val n = ids.length
-    val deg = new Array[Long](n)
-    i = 0
-    while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
+    var m = m0
     val bad = new Array[Boolean](n)
     var round = 0
     var converged = false
@@ -363,8 +298,9 @@ object KCore {
       if (deg(v) > 0) out.add(Row(ids(v), deg(v), deg(v) >= k))
       v += 1
     }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("node", idType), StructField("deg", LongType),
+    e.sparkSession.createDataFrame(out, StructType(Seq(
+      StructField("node", e.schema("a").dataType),
+      StructField("deg", LongType),
       StructField("in_core", BooleanType))))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -49,58 +49,30 @@ object Triangles {
   /** Per-node triangle counts and local clustering coefficient.
     *
     * @param edges canonical undirected edge list: columns (a, b) with
-    *              a < b; duplicate-free when `preDeduped` (the default
-    *              — a multigraph would double-count closures)
+    *              a < b; a repeated pair counts once (the driver-local
+    *              ingest drops repeats, the distributed path runs a
+    *              `.distinct()` over the probe's cache)
     * @param localThreshold edge count at or below which the census runs
-    *              DRIVER-LOCAL on the collected edge list (the
-    *              [[Components.connected]] `localThreshold` contract):
-    *              2M edges ≈ 32 MB of longs — broadcast-threshold
-    *              scale, and below it the six shuffles of the
-    *              distributed census (degree agg, orientation joins,
-    *              adjacency build + two O(√m)-array attach joins,
-    *              closure aggregate) are pure overhead against an
-    *              in-memory intersect that the driver finishes in
-    *              tenths of a second on all cores. Identical
-    *              orientation/intersection algorithm, bit-identical
-    *              output (TrianglesSpec pins local == distributed).
-    *              Above the threshold the distributed census runs
-    *              unchanged — the 100 TB path. 0 forces distributed.
-    * @param preDeduped set false when `edges` may carry duplicate
-    *              (a, b) rows (e.g. a relational pair-generation whose
-    *              global `.distinct()` would cost a full extra
-    *              shuffle): the census dedups INTERNALLY — an O(1)
-    *              hash-set membership test during the driver-local
-    *              ingest (the pair stream is already in hand; at the
-    *              gate SF the skipped exchange is ~40% of the whole
-    *              query), a `.distinct()` over the already-persisted
-    *              edge cache on the distributed path (same exchange
-    *              the caller would have paid, just moved after the
-    *              size probe). The local/distributed threshold then
-    *              compares the RAW pair count — a conservative upper
-    *              bound of the true edge count.
-    * @param edgeCountHint caller-known upper bound on the RAW pair
-    *              stream's row count, duplicates included (e.g. from a
-    *              join-free aggregate over the pair generator —
-    *              Σ C(n_group, 2) costs one tiny shuffle, never touches
-    *              the pair stream, and counts every generated pair).
-    *              Enforced, not trusted: the small path's collect is
-    *              capped at hint+1 rows and overflow falls back to the
-    *              distributed census. When given, the
-    *              local/distributed choice is made WITHOUT
-    *              materializing the edges: the small path collapses
-    *              to a single collect job (no persist, no count), and
-    *              the big path never caches the raw pre-distinct pair
-    *              stream — deciding the plan from a statistic instead
-    *              of from materialized data, which is the only version
-    *              of this choice that survives 100 TB.
+    *              DRIVER-LOCAL on the collected edge list
+    *              ([[LocalGraph]]): 2M edges ≈ 32 MB of longs —
+    *              broadcast-threshold scale, and below it the six
+    *              shuffles of the distributed census (degree agg,
+    *              orientation joins, adjacency build + two
+    *              O(√m)-array attach joins, closure aggregate) are pure
+    *              overhead against an in-memory intersect that the
+    *              driver finishes in tenths of a second on all cores.
+    *              Identical orientation/intersection algorithm,
+    *              bit-identical output (TrianglesSpec pins local ==
+    *              distributed). The probe counts the raw pairs, an
+    *              upper bound of the edge count. Above the threshold
+    *              the distributed census runs unchanged — the 100 TB
+    *              path. 0 forces distributed.
     * @return (node, deg, n_tri, clustering_coeff) for every node that
     *         appears in `edges`; coefficient = 2·tri / (deg·(deg−1)),
     *         0.0 for degree-1 nodes — both engines divide the same
     *         exact integers, so the double is identical. */
   def perNode(edges: DataFrame,
               localThreshold: Long = 2000000L,
-              preDeduped: Boolean = true,
-              edgeCountHint: Option[Long] = None,
               spillDir: Option[String] = None,
               chunks: Int = 8): DataFrame = {
     val raw = edges.select(col("a"), col("b"))
@@ -113,59 +85,19 @@ object Triangles {
     // returned DataFrame and must outlive the caller's action.
     spillDir match {
       case Some(dir) =>
-        return censusChunked(if (preDeduped) raw else raw.distinct(),
-          dir, math.max(1, chunks))
+        return censusChunked(raw.distinct(), dir, math.max(1, chunks))
       case None => ()
     }
-    edgeCountHint match {
-      case Some(n) if localThreshold > 0 && n <= localThreshold =>
-        // small-by-hint: ONE job (the collect) — no persist, no count.
-        // The hint's contract is an upper bound on the RAW pair-stream
-        // row count (the callers' join-free Σ C(n_group, 2) statistic
-        // counts generated pairs, duplicates included), and it is
-        // ENFORCED rather than trusted: the collect is capped at n+1
-        // rows, so a wrong hint costs one bounded job — the overflow
-        // falls through to the distributed census instead of an
-        // unbounded driver collect (driver memory stays ≤ n+1 rows
-        // either way).
-        val cap = math.min(n, Int.MaxValue - 2L).toInt
-        val head = raw.limit(cap + 1).collect()
-        if (head.length <= cap) return localPerNode(raw, preDeduped,
-          collected = Some(head))
-        System.err.println(s"Triangles.perNode: edgeCountHint $n " +
-          s"exceeded by the raw pair stream — distributed census")
-        return census(
-          (if (preDeduped) raw else raw.distinct())
-            .persist(StorageLevel.MEMORY_AND_DISK))
-      case Some(_) =>
-        // trusted-big: dedupe (if owed) straight off the stream into
-        // the census's one edge cache; the raw pair stream is never
-        // cached
-        return census(
-          (if (preDeduped) raw else raw.distinct())
-            .persist(StorageLevel.MEMORY_AND_DISK))
-      case None => ()
-    }
-    // no hint: the edge set feeds the size probe and then either path;
-    // persist (the multi-consumer rule; lineage stays flat, no
-    // iteration, so no checkpoint needed)
-    val e0 = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    // one cheap job: materializes the cache every downstream consumer
-    // needs anyway, and sizes the graph for the local/distributed choice
-    if (e0.count() <= localThreshold) {
-      val out = localPerNode(e0, preDeduped)
-      e0.unpersist()
-      return out
-    }
-    if (preDeduped) census(e0)
-    else {
-      // materialize the deduped cache off the raw one, then release
-      // the raw — the big path must not hold two edge-sized caches
-      // for the whole census
-      val d = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      e0.unpersist()
-      census(d)
+    LocalGraph.probe(raw, localThreshold) match {
+      case Left(rows) => localPerNode(raw, rows)
+      case Right((e0, _)) =>
+        // materialize the deduped cache off the raw one, then release
+        // the raw — the big path must not hold two edge-sized caches
+        // for the whole census
+        val d = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+        d.count()
+        e0.unpersist()
+        census(d)
     }
   }
 
@@ -345,54 +277,20 @@ object Triangles {
       .withColumn("clustering_coeff", coeff)
   }
 
-  /** Driver-local census over a collected (bounded — see
-    * `localThreshold`) edge list: the SAME degree-ordered orientation +
-    * sorted-adjacency intersection, on dense-remapped ids in flat
-    * arrays, closure counting chunked across all cores. Semantics
+  /** Driver-local census over the collected (bounded — see
+    * `localThreshold`) edge rows, deduped by [[LocalGraph.dense]]: the
+    * SAME degree-ordered orientation + sorted-adjacency intersection,
+    * on dense-remapped ids in flat arrays, closure counting chunked
+    * across all cores. Semantics
     * identical to the distributed census (orientation by (deg, id)
     * with the id's natural order — the census is order-insensitive
     * beyond needing SOME strict total order, and the per-node counts
     * are exact integers either way). */
-  private def localPerNode(e: DataFrame, preDeduped: Boolean,
-                           collected: Option[Array[
-                             org.apache.spark.sql.Row]] = None): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def localPerNode(e: DataFrame, rows: Array[Row]): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
       StructType}
-    val spark = e.sparkSession
-    val idType = e.schema("a").dataType
-    val rows = collected.getOrElse(e.collect())
-    // dense remap: original id -> [0, n)
-    val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Any]
-    def ix(x: Any): Int = {
-      var i = idx.get(x)
-      if (i == null) { i = ids.length; idx.put(x, i); ids += x }
-      i
-    }
-    val ea = new Array[Int](rows.length)
-    val eb = new Array[Int](rows.length)
-    // !preDeduped: dedupe during ingest — O(1) primitive-set
-    // membership on the dense-packed pair ([[PackedPairSet]]), in
-    // place of the caller's global distinct exchange (the dense ids
-    // fit an Int each, so one Long ≥ 1 keys a pair)
-    val seen: PackedPairSet =
-      if (preDeduped) null else new PackedPairSet(rows.length)
-    var m = 0
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      val u = ix(r.get(0)); val v = ix(r.get(1))
-      if (seen == null ||
-          seen.add((math.min(u, v).toLong << 32) | math.max(u, v).toLong)) {
-        ea(m) = u; eb(m) = v; m += 1
-      }
-      i += 1
-    }
+    val LocalGraph.Dense(ids, ea, eb, m, deg) = LocalGraph.dense(rows)
     val n = ids.length
-    val deg = new Array[Long](n)
-    i = 0
-    while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
     // strict total order for orientation: (deg, id natural order)
     def less(u: Int, v: Int): Boolean =
       deg(u) < deg(v) || (deg(u) == deg(v) &&
@@ -402,7 +300,7 @@ object Triangles {
     val outDeg = new Array[Int](n)
     val esrc = new Array[Int](m)
     val edst = new Array[Int](m)
-    i = 0
+    var i = 0
     while (i < m) {
       val s = if (less(ea(i), eb(i))) ea(i) else eb(i)
       val d = if (s == ea(i)) eb(i) else ea(i)
@@ -462,9 +360,9 @@ object Triangles {
       out.add(Row(ids(v), deg(v), tri(v), cc))
       v += 1
     }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("node", idType), StructField("deg", LongType),
-      StructField("n_tri", LongType),
+    e.sparkSession.createDataFrame(out, StructType(Seq(
+      StructField("node", e.schema("a").dataType),
+      StructField("deg", LongType), StructField("n_tri", LongType),
       StructField("clustering_coeff", DoubleType))))
   }
 }

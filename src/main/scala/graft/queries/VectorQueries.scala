@@ -169,23 +169,16 @@ object VectorQueries extends QueryGroup {
     graft.operators.PageRank.run(c.select("id"), edges, iters = 2)
   }
 
-  /** Triangle census of the co-purchase graph — parts that share an
-    * order are linked; per-part triangle count + local clustering
-    * coefficient via the degree-ordered orientation
-    * ([[graft.operators.Triangles]]). The graph derives relationally
-    * (a per-order self-join, pair count bounded by items-per-order²),
-    * the census is the skew-capped wedge join — all-integer until the
-    * final coefficient division, so bit-exact cross-engine. */
   /** Canonical co-purchase edges: parts sharing an order, (a < b) —
     * the relational graph the triangle census and the k-core peel both
     * analyze. The pair stream carries the RAW join output (a pair
     * repeats when two parts co-occur in several orders — measured 0.3%
-    * of rows at sf0.1): both graph operators take `preDeduped = false`
-    * and dedupe internally, which on their driver-local gate-SF paths
-    * replaces a whole extra exchange (the global `.distinct()`) with
-    * an O(1) hash-set test per collected row, and on the distributed
-    * 100 TB path is the identical distinct exchange merely moved
-    * inside the operator. */
+    * of rows at sf0.1): both graph operators keep each pair once, so
+    * on their driver-local gate-SF paths an O(1) hash-set test per
+    * collected row ([[graft.operators.LocalGraph]]) replaces a whole
+    * extra exchange (the global `.distinct()`), and on the distributed
+    * 100 TB path the identical distinct exchange merely runs inside
+    * the operator. */
   private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -202,15 +195,15 @@ object VectorQueries extends QueryGroup {
       .select("a", "b")
   }
 
-  /* A join-free Σ C(n_order, 2) aggregate could hand the operators an
-   * `edgeCountHint` (never materialize the pair stream to size it —
-   * the true-100 TB contract, spec-pinned on both operators); at the
-   * measured SFs the probe JOB costs more than the probe-free
-   * persist+count flow saves (0.35-0.5 s fixed job overhead vs a
-   * count off the already-needed cache), so these queries take the
-   * probe flow and leave the hint to genuinely huge callers. */
+  /** Triangle census of the co-purchase graph — parts that share an
+    * order are linked; per-part triangle count + local clustering
+    * coefficient via the degree-ordered orientation
+    * ([[graft.operators.Triangles]]). The graph derives relationally
+    * (a per-order self-join, pair count bounded by items-per-order²),
+    * the census is the skew-capped wedge join — all-integer until the
+    * final coefficient division, so bit-exact cross-engine. */
   def triangleCount(spark: SparkSession, dir: String): DataFrame =
-    Triangles.perNode(coPurchaseEdges(spark, dir), preDeduped = false)
+    Triangles.perNode(coPurchaseEdges(spark, dir))
 
   /** k-core of the co-purchase graph ([[graft.operators.KCore]]):
     * six peels at k=65 — sized so the cascade actually iterates at
@@ -218,8 +211,7 @@ object VectorQueries extends QueryGroup {
     * denser larger SFs stay mostly intact. Exact integer degrees
     * throughout → bit-exact cross-engine. */
   def kCore(spark: SparkSession, dir: String): DataFrame =
-    KCore.peel(coPurchaseEdges(spark, dir), k = 65, rounds = 6,
-      preDeduped = false)
+    KCore.peel(coPurchaseEdges(spark, dir), k = 65, rounds = 6)
 
   /** Per-label centroid outlier audit under the oracle
     * ([[graft.operators.Outliers]]): top-5 farthest vectors per label

@@ -1,6 +1,7 @@
 package graft.runner.plugins
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Bpe, Budget, Curriculum, Dsir, Ivf, KCore,
   NgramLm, Outliers, PageRank, SemanticDedup, Shard, Similarity,
@@ -284,7 +285,8 @@ object TextQualityFloorPlugin extends StepPlugin {
   *
   * Args: `edges_input` (parquet with the edge endpoints), `output_path`;
   * optional `a_col`/`b_col` (default a/b). Edges are canonicalized
-  * (min, max) and deduped here, so any undirected edge list works.
+  * (min, max) here, self-loops dropped, and the census keeps each pair
+  * once, so any undirected edge list works.
   */
 object GraphTrianglesPlugin extends StepPlugin {
   val name = "graph_triangles"
@@ -298,7 +300,7 @@ object GraphTrianglesPlugin extends StepPlugin {
       .select(col(aCol).as("__x"), col(bCol).as("__y"))
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
-      greatest(col("__x"), col("__y")).as("b")).distinct()
+      greatest(col("__x"), col("__y")).as("b"))
     Counted.output(Triangles.perNode(canon), out,
       "n_nodes" -> Counted.rows, "n_closed" -> sum(when(col("n_tri") > 0, 1)))
   }
@@ -345,7 +347,7 @@ object GraphKcorePlugin extends StepPlugin {
       .select(col(aCol).as("__x"), col(bCol).as("__y"))
       .filter(col("__x") =!= col("__y"))
     val canon = raw.select(least(col("__x"), col("__y")).as("a"),
-      greatest(col("__x"), col("__y")).as("b")).distinct()
+      greatest(col("__x"), col("__y")).as("b"))
     Counted.output(KCore.peel(canon, k, rounds,
         ctx.argStrOpt("checkpoint_dir")),
       out, "n_nodes" -> Counted.rows,
@@ -538,7 +540,8 @@ object BloomBuildPlugin extends StepPlugin {
   * `drop_members` (false).
   *
   * `n_rows` rides the write, and so does `n_flagged` for the verdict
-  * table; the cleaned corpus has no verdicts, so there it has a job.
+  * table; the cleaned corpus has no verdicts, so there `n_flagged`
+  * counts the flagged ids the write cached, without a second probe.
   */
 object BloomProbePlugin extends StepPlugin {
   val name = "bloom_probe"
@@ -553,12 +556,15 @@ object BloomProbePlugin extends StepPlugin {
     val filter = ctx.spark.read.parquet(ctx.argStr("filter_path"))
     val verdict = graft.operators.Bloom.probe(
       corpus, col(idCol), col(valueCol), filter, k, m)
-    val flagged = verdict.filter(col("maybe_member"))
-    if (ctx.argBool("drop_members", default = false))
-      Counted.output(corpus.join(flagged.select(col("id").as(idCol)),
-          Seq(idCol), "left_anti"), out, "n_rows" -> Counted.rows) ++
+    if (ctx.argBool("drop_members", default = false)) {
+      // the write fills this cache, and n_flagged counts it: one probe
+      val flagged = verdict.filter(col("maybe_member"))
+        .select(col("id").as(idCol)).persist(StorageLevel.MEMORY_AND_DISK)
+      try Counted.output(corpus.join(flagged, Seq(idCol), "left_anti"),
+          out, "n_rows" -> Counted.rows) ++
         Map("n_flagged" -> flagged.count())
-    else Counted.output(verdict.withColumnRenamed("id", idCol), out,
+      finally flagged.unpersist()
+    } else Counted.output(verdict.withColumnRenamed("id", idCol), out,
       "n_rows" -> Counted.rows,
       "n_flagged" -> sum(when(col("maybe_member"), 1)))
   }

@@ -53,11 +53,10 @@ class KCoreSpec extends SparkSpecBase {
     }
   }
 
-  test("preDeduped=false: duplicated pair stream == deduped input, " +
-      "local and distributed") {
+  test("a repeated pair peels once, local and distributed") {
     // raw relational pair-stream shape (repeated co-occurrences): the
-    // operator's internal dedup must reproduce the clean peel exactly
-    // — a duplicate-counted degree would survive a peel it shouldn't
+    // operator's own dedup must reproduce the clean peel exactly — a
+    // duplicate-counted degree would survive a peel it shouldn't
     val edges = (0 until 400).map { i =>
       val u = (i * 2654435761L) % 97 % 40
       val v = (i * 40503L + 7) % 89 % 40
@@ -70,18 +69,10 @@ class KCoreSpec extends SparkSpecBase {
       df.collect().map(r => r.getAs[Long]("node") ->
         ((r.getAs[Long]("deg"), r.getAs[Boolean]("in_core")))).toMap
     val clean = toMap(KCore.peel(edges.toDF("a", "b"), k = 4, rounds = 6))
+    assert(toMap(KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6)) ==
+      clean)
     assert(toMap(KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6,
-      preDeduped = false)) == clean)
-    assert(toMap(KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6,
-      localThreshold = 0, preDeduped = false)) == clean)
-    // edgeCountHint: trusted-small (single collect) and trusted-big
-    // (straight to the distributed loop) both match the probe flow
-    assert(toMap(KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6,
-      preDeduped = false,
-      edgeCountHint = Some(dups.size.toLong))) == clean)
-    assert(toMap(KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6,
-      localThreshold = 1, preDeduped = false,
-      edgeCountHint = Some(dups.size.toLong))) == clean)
+      localThreshold = 0)) == clean)
   }
 
   test("disk-bounded peel (spillDir): identical output, retired " +
@@ -101,7 +92,7 @@ class KCoreSpec extends SparkSpecBase {
     val spill = java.nio.file.Files.createTempDirectory("kcore_spec_spill_")
     try {
       val out = KCore.peel(dups.toDF("a", "b"), k = 4, rounds = 6,
-        preDeduped = false, spillDir = Some(spill.toString))
+        spillDir = Some(spill.toString))
       assert(toMap(out) == clean) // the caller's action, post-retires
       // bounded-scratch contract: retired generations are gone from
       // disk; only the generation(s) the returned frame reads remain

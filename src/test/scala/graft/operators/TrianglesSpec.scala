@@ -37,11 +37,10 @@ class TrianglesSpec extends SparkSpecBase {
     assert(c.values.forall(_._2 == 0L))
   }
 
-  test("preDeduped=false: duplicated pair stream == deduped input, " +
-      "local and distributed") {
+  test("a repeated pair closes once, local and distributed") {
     // K4 with every edge repeated 1-3 times — the raw relational pair
-    // stream shape (coPurchaseEdges): internal dedup must reproduce
-    // the clean census bit-for-bit on BOTH paths
+    // stream shape (coPurchaseEdges): the census's own dedup must
+    // reproduce the clean census bit-for-bit on BOTH paths
     val k4 = for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)
     val dups = k4.zipWithIndex.flatMap { case (e, i) =>
       Seq.fill(1 + (i % 3))(e)
@@ -51,19 +50,9 @@ class TrianglesSpec extends SparkSpecBase {
         ((r.getAs[Long]("deg"), r.getAs[Long]("n_tri"),
           r.getAs[Double]("clustering_coeff")))).toMap
     val clean = toMap(Triangles.perNode(k4.toDF("a", "b")))
+    assert(toMap(Triangles.perNode(dups.toDF("a", "b"))) == clean)
     assert(toMap(Triangles.perNode(dups.toDF("a", "b"),
-      preDeduped = false)) == clean)
-    assert(toMap(Triangles.perNode(dups.toDF("a", "b"),
-      localThreshold = 0, preDeduped = false)) == clean)
-    // edgeCountHint: both the trusted-small single-collect path and
-    // the trusted-big no-raw-cache path reproduce the probe-flow
-    // census exactly
-    assert(toMap(Triangles.perNode(dups.toDF("a", "b"),
-      preDeduped = false, edgeCountHint = Some(dups.size.toLong)))
-      == clean)
-    assert(toMap(Triangles.perNode(dups.toDF("a", "b"),
-      localThreshold = 1, preDeduped = false,
-      edgeCountHint = Some(dups.size.toLong))) == clean)
+      localThreshold = 0)) == clean)
   }
 
   test("orientation census equals the naive 3-way join on a random graph") {
@@ -106,16 +95,15 @@ class TrianglesSpec extends SparkSpecBase {
       df.collect().map(r => r.getAs[Long]("node") ->
         ((r.getAs[Long]("deg"), r.getAs[Long]("n_tri"),
           r.getAs[Double]("clustering_coeff")))).toMap
-    val default = toMap(Triangles.perNode(edges.toDF("a", "b"),
-      preDeduped = false))
+    val default = toMap(Triangles.perNode(edges.toDF("a", "b")))
     val dir = java.nio.file.Files.createTempDirectory("tri_spill_")
     try {
       val chunked = toMap(Triangles.perNode(edges.toDF("a", "b"),
-        preDeduped = false, spillDir = Some(dir.toString), chunks = 3))
+        spillDir = Some(dir.toString), chunks = 3))
       assert(chunked == default)
       // ...and a single-band run (the degenerate chunking) agrees too
       val one = toMap(Triangles.perNode(edges.toDF("a", "b"),
-        preDeduped = false, spillDir = Some(dir.toString), chunks = 1))
+        spillDir = Some(dir.toString), chunks = 1))
       assert(one == default)
     } finally {
       def rm(f: java.io.File): Unit = {

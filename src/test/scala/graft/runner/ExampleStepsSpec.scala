@@ -12,7 +12,10 @@ import graft.SparkSpecBase
   * changed no value and no type. At 18ddc36 the changed steps ran
   * text_drift 25, text_cross_dedup 21, text_term_index 10,
   * embedding_ann 23, text_leakage_split 22 and the verdicts bloom_probe
-  * 11 jobs.
+  * 11 jobs. At bbae2de, before the graph plugins left their dedup to
+  * the operators and the cleaned-corpus bloom_probe stopped probing
+  * twice, graph_triangles and graph_kcore ran 7 jobs each and the
+  * cleaned-corpus bloom_probe 12.
   */
 class ExampleStepsSpec extends SparkSpecBase {
   import ExampleStepsSpec._
@@ -132,7 +135,7 @@ object ExampleStepsSpec {
         "embedding_semdedup" -> 15, "embedding_outliers" -> 6,
         "sql_transform" -> 3, "graph_pagerank" -> 36, "text_budget_cap" -> 8,
         "text_bpe_learn" -> 20, "text_quality_floor" -> 8,
-        "sql_transform" -> 3, "graph_triangles" -> 7, "graph_kcore" -> 7,
+        "sql_transform" -> 3, "graph_triangles" -> 6, "graph_kcore" -> 6,
         "embedding_ann" -> 21, "text_leakage_split" -> 17,
         "text_cluster_weights" -> 14, "text_topic_pairs" -> 17,
         "text_group_sample" -> 7)),
@@ -148,7 +151,7 @@ object ExampleStepsSpec {
       step("output_path" -> decon("shards"), "n_rows" -> long(473),
         "n_shards" -> long(4))),
       Seq("sql_transform" -> 2, "bloom_build" -> 3, "bloom_probe" -> 6,
-        "bloom_probe" -> 12, "corpus_shard" -> 3)),
+        "bloom_probe" -> 10, "corpus_shard" -> 3)),
     Pinned("event_analytics.yml", Seq(
       step("output_path" -> events("funnel.parquet"),
         "n_entered" -> long(15), "n_converted" -> long(15)),

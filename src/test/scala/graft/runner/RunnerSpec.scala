@@ -906,6 +906,49 @@ class RunnerSpec extends SparkSpecBase {
     assert(clean.subsetOf(Set(2L, 4L)))
   }
 
+  test("graph_triangles and graph_kcore read an edge list with repeats, " +
+    "reversed pairs and self-loops as its canonical deduped set") {
+    val root = tmpDir()
+    import spark.implicits._
+    val clean = (0 until 200).map { i =>
+      val u = (i * 2654435761L) % 97 % 30
+      val v = (i * 40503L + 7) % 89 % 30
+      (math.min(u, v), math.max(u, v))
+    }.filter(p => p._1 != p._2).distinct
+    val dirty = clean.zipWithIndex.flatMap { case ((a, b), i) =>
+      Seq.fill(1 + i % 2)((a, b)) ++ (if (i % 3 == 0) Seq((b, a)) else Nil)
+    } ++ Seq((1L, 1L), (7L, 7L))
+    Seq("clean" -> clean, "dirty" -> dirty).foreach { case (name, e) =>
+      e.toDF("a", "b").write.parquet(s"$root/$name")
+    }
+    // the checkpointed k-core takes the distributed loop
+    val steps = Seq("tri" -> "graph_triangles", "core" -> "graph_kcore",
+      "core_dist" -> "graph_kcore")
+    val yaml = for (in <- Seq("clean", "dirty"); (out, plugin) <- steps)
+      yield {
+        val extra = out match {
+          case "tri" => ""
+          case "core" => "\n      k: 3"
+          case _ => s"\n      k: 3\n      checkpoint_dir: \"$root/ckpt\""
+        }
+        s"""  - plugin: $plugin
+           |    args:
+           |      edges_input: "$root/$in"
+           |      output_path: "$root/${out}_$in"$extra
+           |""".stripMargin
+      }
+    val p = write(root, "graphs.yml", yaml.mkString("steps:\n", "", ""))
+    val res = runner(root).runFile(p).results.map(_.fields - "output_path")
+    def rows(out: String) = spark.read.parquet(s"$root/$out").collect()
+      .map(_.toSeq.mkString(",")).sorted.toSeq
+    steps.zipWithIndex.foreach { case ((out, _), i) =>
+      assert(res(i + steps.size) == res(i), out)
+      assert(rows(s"${out}_dirty") == rows(s"${out}_clean"), out)
+    }
+    assert(res(0)("n_closed").asInstanceOf[Long] > 0L)
+    assert(res(1) == res(2) && res(1)("n_converged").asInstanceOf[Long] > 0L)
+  }
+
   test("text_contamination_score grades overlap and cuts at the threshold") {
     val root = tmpDir()
     import spark.implicits._

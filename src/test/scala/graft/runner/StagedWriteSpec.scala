@@ -351,4 +351,23 @@ class StagedWriteSpec extends SparkSpecBase {
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("one driver-local graph path: the dense remap and the pair set " +
+    "live in LocalGraph, the dropped graph options nowhere") {
+    // split so this file does not match its own needles
+    val gone = Seq("edgeCount" + "Hint", "pre" + "Deduped")
+    val localOnly = Seq("HashMap[Any, " + "Integer]", "new Packed" + "PairSet")
+    val home = Paths.get("src/main/scala/graft/operators/LocalGraph.scala")
+    val walk = Files.walk(Paths.get("src"))
+    val files = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      finally walk.close()
+    val hits = files.flatMap { f =>
+      val needles = if (f == home) gone else gone ++ localOnly
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if needles.exists(l.contains) => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -42,9 +42,6 @@ object TaggedRun {
           .foreach(k => jobs.computeIfAbsent(k, _ => new AtomicInteger())
             .incrementAndGet())
     }
-    // a frame an earlier suite left cached would serve some of a step's
-    // reads and hide their jobs
-    spark.catalog.clearCache()
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     val work = Files.createTempDirectory("graft_tagged")
